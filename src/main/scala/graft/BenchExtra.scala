@@ -77,8 +77,7 @@ object BenchExtra {
         val runs = (1 to 3).map { i =>
           val ckdir = java.nio.file.Files
             .createTempDirectory(s"benchcktol$i").toString
-          val ck = graft.runtime.CheckpointConfig(ckdir, "bench",
-            every = 1000, localEvery = 2)
+          val ck = graft.runtime.CheckpointConfig(ckdir, "bench", every = 1000)
           val j0 = jobCount.get()
           val t = time {
             val r = graft.algos.PageRank.run(edges,

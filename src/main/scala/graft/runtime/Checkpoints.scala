@@ -19,10 +19,7 @@ import org.apache.spark.storage.StorageLevel
 final case class CheckpointConfig(
     dir: String,
     runId: String,
-    every: Int = 5,
-    /** Unused since rotation became uniformly localCheckpoint-based;
-      * retained so existing call sites keep compiling. */
-    localEvery: Int = 2)
+    every: Int = 5)
 
 object Checkpoints {
 
@@ -186,19 +183,15 @@ object Checkpoints {
   def logSuperstepRows(spark: SparkSession, counts: Seq[(Int, Long)],
       cfg: CheckpointConfig, algo: String, superstep: Int, l1Delta: Double,
       activeCount: Long, wallMs: Long): Unit = {
-    val buf = logBuffers.getOrElseUpdate((cfg.dir, cfg.runId, algo),
-      new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row])
-    buf.synchronized {
-      counts.foreach { case (p, n) =>
-        buf += org.apache.spark.sql.Row(cfg.runId, superstep, p, n,
-          l1Delta, activeCount, wallMs)
-      }
+    val rows = counts.map { case (p, n) =>
+      org.apache.spark.sql.Row(cfg.runId, superstep, p, n, l1Delta, activeCount, wallMs)
     }
+    val buffered = logBuffers.updateWith((cfg.dir, cfg.runId, algo))(
+      old => Some(old.getOrElse(Vector.empty) ++ rows)).get
     // flush on the snapshot cadence, plus a size backstop so a sparse
     // cadence × many partitions × many supersteps cannot grow the driver
     // buffer unboundedly (100k rows ≈ a few MB)
-    if ((cfg.every > 0 && superstep % cfg.every == 0) ||
-        buf.synchronized(buf.size) > 100000)
+    if ((cfg.every > 0 && superstep % cfg.every == 0) || buffered.size > 100000)
       flushLog(spark, cfg, algo)
   }
 
@@ -217,9 +210,14 @@ object Checkpoints {
       else Some(r.getAs[scala.collection.Map[Int, Long]](i).toSeq.sortBy(_._1))
     }
 
+  /** Unflushed superstep-log rows per (dir, runId, algo). An entry exists
+    * only while it holds rows: [[flushLog]] removes it, so a finished run
+    * leaves no key behind (every pipeline run writes under a new dir). */
   private val logBuffers = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String),
-      scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]]
+    .empty[(String, String, String), Vector[org.apache.spark.sql.Row]]
+
+  private[graft] def bufferedLogKeys: Set[(String, String, String)] =
+    logBuffers.keySet.toSet
 
   private val logSchema = new org.apache.spark.sql.types.StructType()
     .add("run_id", "string").add("superstep", "int").add("partition_id", "int")
@@ -228,17 +226,13 @@ object Checkpoints {
 
   /** Flush buffered superstep-log rows as one append. Every algorithm
     * loop calls this after its last superstep (and [[logSuperstep]]
-    * self-flushes on the snapshot cadence). Idempotent when empty. */
+    * self-flushes on the snapshot cadence). Idempotent when nothing is
+    * buffered. */
   def flushLog(spark: SparkSession, cfg: CheckpointConfig, algo: String): Unit =
-    logBuffers.get((cfg.dir, cfg.runId, algo)).foreach { buf =>
-      val rows = buf.synchronized {
-        val r = buf.toList; buf.clear(); r
-      }
-      if (rows.nonEmpty) {
-        import scala.jdk.CollectionConverters._
-        TableIO.forSession(spark).append(
-          spark.createDataFrame(rows.asJava, logSchema), logPath(cfg, algo))
-      }
+    logBuffers.remove((cfg.dir, cfg.runId, algo)).filter(_.nonEmpty).foreach { rows =>
+      import scala.jdk.CollectionConverters._
+      TableIO.forSession(spark).append(
+        spark.createDataFrame(rows.asJava, logSchema), logPath(cfg, algo))
     }
 
   def readLog(spark: SparkSession, cfg: CheckpointConfig, algo: String): DataFrame =

@@ -3,16 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local SparkSession across all suites (getOrCreate). */
+/** One shared local SparkSession across all suites (getOrCreate), built
+  * by the engine's own session factory so specs run under the same join,
+  * AQE and codegen-cache policy as the driver mains. */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val s = graft.runtime.Sessions.local(4, 8, "graft-test")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
