@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Optimization-round side benchmarks (guide §1.4): NOT part of the
   * frozen driver contract (`Bench` is the official harness and is
   * untouched). Two modes:
@@ -68,12 +66,12 @@ object BenchExtra {
           mu = 1.5, sigma = 1.0, numPartitions = cpus).cache()
         edges.count()
         val jobCount = new java.util.concurrent.atomic.AtomicLong
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onJobStart(
-                j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-              jobCount.incrementAndGet()
-          })
+        val jobs = new org.apache.spark.scheduler.SparkListener {
+          override def onJobStart(
+              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+            jobCount.incrementAndGet()
+        }
+        spark.sparkContext.addSparkListener(jobs)
         val runs = (1 to 3).map { i =>
           val ckdir = java.nio.file.Files
             .createTempDirectory(s"benchcktol$i").toString
@@ -84,8 +82,13 @@ object BenchExtra {
               graft.algos.PageRank.Config(tol = Some(1e-6), checkpoint = Some(ck)))
             r.unpersist(false)
           }
-          (t, jobCount.get() - j0)
+          val n = jobCount.get() - j0
+          // deleted after the job count is read: untimed and uncounted
+          org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckdir))
+          (t, n)
         }
+        spark.sparkContext.removeSparkListener(jobs)
+        edges.unpersist(false)
         println(f"""{"tol_runs":[${runs.map(r => f"${r._1}%.3f").mkString(",")}],"tol_jobs":[${runs.map(_._2).mkString(",")}]}""")
       case "noop" :: names =>
         val results = names.map { name =>

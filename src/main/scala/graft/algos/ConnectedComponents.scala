@@ -1,6 +1,6 @@
 package graft.algos
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -65,63 +65,49 @@ object ConnectedComponents {
     allVerts.count()
 
     val rotator = new StateRotator(cfg.checkpoint, "cc")
+    // fixed point iff the (set-valued) edge set is unchanged between
+    // rounds; both sides are distinct sets → compare this (count,
+    // xor-checksum) signature, observed during each round's rotation
+    val sigMetrics = Seq(count(lit(1)).as("c"),
+      coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L)).as("h"))
+    def sig(r: Row) = (r.getLong(0), r.getLong(1))
     // input-identity drift guard: CC has no numeric config, but a resume
     // against the same dir/runId with DIFFERENT edges would join stale
     // contracted state into the new graph — bind the input signature
     // (one cheap aggregate over the already-cached raw frame)
-    cfg.checkpoint.foreach(ck => Checkpoints.guard(spark, ck, "cc",
-      Checkpoints.inputSignature(raw), cfg.resume))
-    val resumed =
-      if (cfg.resume) cfg.checkpoint.flatMap(Checkpoints.latest(spark, _, "cc"))
-      else None
-    var round = resumed.map(_._1).getOrElse(0)
-    var (e, sigPrev) = resumed match {
-      case Some((_, snapshot)) =>
-        // adopt the snapshot (never re-save over the dir being read) and
-        // recover the convergence signature with one pass over it
-        val adopted = rotator.adopt(snapshot)
-        (adopted, edgeSetSignature(adopted))
-      case None =>
-        // start from the canonical simple undirected form, big→small;
-        // rawRows bounds the canonical row count → partition sizing
-        val p0 = AdaptivePartitions.forRows(spark, rawRows, cfg.numPartitions)
-        val (df, sig, _) = rotateObserved(rotator,
-          raw.filter(col("src") =!= col("dst"))
-            .select(greatest(col("src"), col("dst")).as("src"),
-              least(col("src"), col("dst")).as("dst"))
-            .distinct().coalesce(p0), 0)
-        (df, sig)
-    }
-    if (!pre) raw.unpersist(false)
-
-    // fixed point iff the (set-valued) edge set is unchanged between
-    // rounds; both sides are distinct sets → compare (count, xor-checksum)
-    var converged = sigPrev._1 == 0L
-    while (!converged && round < cfg.maxRounds) {
-      round += 1
-      val t0 = System.nanoTime()
-      val prevRows = sigPrev._1
-      val p = AdaptivePartitions.forRows(spark, prevRows, cfg.numPartitions)
-      val (next, sig, cnts) = rotateObserved(rotator,
-        smallStar(largeStar(e)).coalesce(p), round, cfg.checkpoint.isDefined)
-      e = next
-      converged = sig == sigPrev
-      sigPrev = sig
-      graft.runtime.Trace.record(f"cc_round_$round%02d",
-        (System.nanoTime() - t0) / 1e9)
-      graft.runtime.Trace.log(f"cc round=$round edges=${sig._1} p=$p")
-      cfg.checkpoint.foreach { c =>
-        val wall = (System.nanoTime() - t0) / 1000000
-        cnts match {
-          case Some(cs) => Checkpoints.logSuperstepRows(spark, cs, c, "cc",
-            round, Double.NaN, sig._1, wall)
-          case None => Checkpoints.logSuperstep(e, c, "cc", round,
-            Double.NaN, sig._1, wall)
-        }
+    val (e, converged, edgesLeft) = rotator.loop(spark,
+        Checkpoints.inputSignature(raw), cfg.resume) { resumed =>
+      var (round, e, sigPrev) = resumed match {
+        case Some((r, snapshot)) =>
+          // recover the convergence signature with one pass over the snapshot
+          (r, snapshot, sig(StateRotator.measure(snapshot, sigMetrics)))
+        case None =>
+          // start from the canonical simple undirected form, big→small;
+          // rawRows bounds the canonical row count → partition sizing.
+          // Round 0 is rotated (and snapshotted) but not a logged superstep
+          val p0 = AdaptivePartitions.forRows(spark, rawRows, cfg.numPartitions)
+          val (df, row) = rotator.rotateObserved(
+            raw.filter(col("src") =!= col("dst"))
+              .select(greatest(col("src"), col("dst")).as("src"),
+                least(col("src"), col("dst")).as("dst"))
+              .distinct().coalesce(p0), 0, sigMetrics)
+          (0, df, sig(row))
       }
-    }
+      if (!pre) raw.unpersist(false)
 
-    cfg.checkpoint.foreach(c => Checkpoints.flushLog(spark, c, "cc"))
+      var converged = sigPrev._1 == 0L
+      while (!converged && round < cfg.maxRounds) {
+        round += 1
+        val p = AdaptivePartitions.forRows(spark, sigPrev._1, cfg.numPartitions)
+        val (next, row) = rotator.step(round, sigMetrics, _.getLong(0))(
+          smallStar(largeStar(e)).coalesce(p))
+        e = next
+        converged = sig(row) == sigPrev
+        sigPrev = sig(row)
+        graft.runtime.Trace.log(f"cc round=$round edges=${sigPrev._1} p=$p")
+      }
+      (e, converged, sigPrev._1)
+    }
 
     // Loud failure when the cap trips (house precedent: SCC's require —
     // the reference silently returns partial labels): a non-converged edge
@@ -132,7 +118,7 @@ object ConnectedComponents {
     // raise maxRounds.
     require(converged,
       s"connected components did not converge within ${cfg.maxRounds} " +
-        s"rounds (${sigPrev._1} edges remain): the edge set is not yet a " +
+        s"rounds ($edgesLeft edges remain): the edge set is not yet a " +
         "star forest and labels would be corrupt — re-run with a larger " +
         "maxRounds")
 
@@ -144,31 +130,6 @@ object ConnectedComponents {
     out.count() // materialize before releasing iteration state
     rotator.close(); allVerts.unpersist(false)
     out
-  }
-
-  /** Rotate (materialize) one round's edge set and return it together
-    * with its set signature, collected by `observe` during the rotation's
-    * own materialization pass — no separate aggregation job. Falls back
-    * to a direct aggregate over the (now cached) state if the observed
-    * metrics don't surface. */
-  private def rotateObserved(rotator: StateRotator, next: DataFrame,
-      round: Int, withCounts: Boolean = false)
-      : (DataFrame, (Long, Long), Option[Seq[(Int, Long)]]) = {
-    val obs = Observation(s"cc_sig_$round")
-    // checkpointed runs ride the superstep log's per-partition counts on
-    // the same observe (r6) — no separate count job in logSuperstep
-    val metrics = Seq(count(lit(1)).as("c"),
-      coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L)).as("h")) ++
-      (if (withCounts) Seq(Checkpoints.partitionCountsMetric.as("pcounts")) else Nil)
-    val observed = next.observe(obs, metrics.head, metrics.tail: _*)
-    val rotated = rotator.rotate(observed, round)
-    val row = graft.runtime.IterationHygiene.awaitObservedRow(obs)
-    row.map(r => (rotated, (r.getAs[Long]("c"), r.getAs[Long]("h")),
-        Checkpoints.countsFromObserved(row)))
-      .getOrElse {
-        graft.runtime.Trace.log(s"cc obs round=$round fell back to direct signature")
-        (rotated, edgeSetSignature(rotated), None)
-      }
   }
 
   /** For each u: m = min(Γ(u) ∪ {u}); emit (v, m) for v ∈ Γ(u), v > u.
@@ -203,14 +164,5 @@ object ConnectedComponents {
       .select(col("dst").as("src"), col("m").as("dst"))
     val hangSelf = m.select(col("u").as("src"), col("m").as("dst"))
     hangNbrs.union(hangSelf).filter(col("src") =!= col("dst")).distinct()
-  }
-
-  /** (count, xor checksum of row hashes) — order-free, overflow-free set
-    * signature; collision-safe enough at 64 bit for a convergence test
-    * that only ever compares successive iterates. */
-  private def edgeSetSignature(df: DataFrame): (Long, Long) = {
-    val r = df.agg(count(lit(1)).as("c"),
-      coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L)).as("h")).first()
-    (r.getLong(0), r.getLong(1))
   }
 }

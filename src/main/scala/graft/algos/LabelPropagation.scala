@@ -97,58 +97,43 @@ object LabelPropagation {
     val P = prep.p
 
     val rotator = new StateRotator(cfg.checkpoint, "lpa")
-    val init = verts.select(col("id"), col("id").as("label"))
-    // resume mid-iteration: the checkpointed (id, label) frame IS the full
-    // superstep state — continuing from it is bit-identical
-    val resumed =
-      if (cfg.resume) cfg.checkpoint.flatMap(Checkpoints.latest(spark, _, "lpa"))
-      else None
-    val startStep = resumed.map(_._1).getOrElse(0)
-    var labels = resumed.map { case (_, df) => rotator.adopt(df) }.getOrElse(init)
-
-    for (step <- (startStep + 1) to cfg.maxSteps) {
-      val t0 = System.nanoTime()
-      // messages along both directions of every directed edge (one join
-      // against the symmetrized adjacency); the label state (≤ |V| rows)
-      // shuffled-hash joins the cached adjacency (no per-superstep
-      // broadcast — a blocking driver job per step, measured slower; same
-      // rationale as PageRank.msgSums)
-      val argmax = adj.join(labels.hint("SHUFFLE_HASH"), adj("src") === labels("id"))
-        .select(explode(col("dsts")).as("vid"), col("label"))
-        .groupBy(col("vid"), col("label")).agg(count(lit(1)).as("cnt"))
-        // min_by over (-cnt, label): highest count, ties → smallest label.
-        // Negating CNT (≥ 1, can't wrap) instead of LABEL: labels are
-        // arbitrary longs (xxhash64 ids), and -Long.MinValue wraps to
-        // itself under non-ANSI arithmetic, which would make the smallest
-        // possible label LOSE ties instead of winning as specified
-        .groupBy(col("vid"))
-        .agg(min_by(col("label"), struct((-col("cnt")).as("nc"), col("label"))).as("new_label"))
-      // vertices with no incident messages keep their label (none here —
-      // every vertex of an edge table has ≥1 incident edge — but keep the
-      // coalesce for subgraph-restricted universes)
-      val next = labels.join(argmax.hint("SHUFFLE_HASH"), labels("id") === argmax("vid"), "left")
-        .select(labels("id"), coalesce(col("new_label"), col("label")).as("label"))
-      // checkpointed runs ride the superstep log's per-partition counts on
-      // a root-level observe of the rotation (r6): zero extra jobs
-      val obsLog = cfg.checkpoint.map(_ =>
-        org.apache.spark.sql.Observation(s"lpa_log_$step"))
-      val base = next.coalesce(P)
-      labels = rotator.rotate(obsLog.fold(base)(o =>
-        base.observe(o, Checkpoints.partitionCountsMetric.as("pcounts"))), step)
-      graft.runtime.Trace.log(
-        f"lpa step=$step sec=${(System.nanoTime() - t0) / 1e9}%.2f")
-      cfg.checkpoint.foreach { c =>
-        val wall = (System.nanoTime() - t0) / 1000000
-        Checkpoints.countsFromObserved(
-            obsLog.flatMap(graft.runtime.IterationHygiene.awaitObservedRow)) match {
-          case Some(cs) => Checkpoints.logSuperstepRows(spark, cs, c, "lpa",
-            step, Double.NaN, 0L, wall)
-          case None => Checkpoints.logSuperstep(labels, c, "lpa", step,
-            Double.NaN, 0L, wall)
-        }
+    // input-identity drift guard: a resume against the same dir/runId with
+    // different edges must fail loudly, not adopt stale labels. LPA ignores
+    // edge direction, so its input identity is the symmetrized adjacency it
+    // iterates (one cheap aggregate over the cached blocks)
+    val labels = rotator.loop(spark, Checkpoints.inputSignature(
+        adj.select(col("src"), explode(col("dsts")).as("dst"))), cfg.resume) { resumed =>
+      // resume mid-iteration: the checkpointed (id, label) frame IS the full
+      // superstep state — continuing from it is bit-identical
+      var (startStep, labels) =
+        resumed.getOrElse((0, verts.select(col("id"), col("id").as("label"))))
+      for (step <- (startStep + 1) to cfg.maxSteps) {
+        labels = rotator.step(step, Nil, _ => 0L) {
+          // messages along both directions of every directed edge (one join
+          // against the symmetrized adjacency); the label state (≤ |V| rows)
+          // shuffled-hash joins the cached adjacency (no per-superstep
+          // broadcast — a blocking driver job per step, measured slower; same
+          // rationale as PageRank.msgSums)
+          val argmax = adj.join(labels.hint("SHUFFLE_HASH"), adj("src") === labels("id"))
+            .select(explode(col("dsts")).as("vid"), col("label"))
+            .groupBy(col("vid"), col("label")).agg(count(lit(1)).as("cnt"))
+            // min_by over (-cnt, label): highest count, ties → smallest label.
+            // Negating CNT (≥ 1, can't wrap) instead of LABEL: labels are
+            // arbitrary longs (xxhash64 ids), and -Long.MinValue wraps to
+            // itself under non-ANSI arithmetic, which would make the smallest
+            // possible label LOSE ties instead of winning as specified
+            .groupBy(col("vid"))
+            .agg(min_by(col("label"), struct((-col("cnt")).as("nc"), col("label"))).as("new_label"))
+          // vertices with no incident messages keep their label (none here —
+          // every vertex of an edge table has ≥1 incident edge — but keep the
+          // coalesce for subgraph-restricted universes)
+          labels.join(argmax.hint("SHUFFLE_HASH"), labels("id") === argmax("vid"), "left")
+            .select(labels("id"), coalesce(col("new_label"), col("label")).as("label"))
+            .coalesce(P)
+        }._1
       }
+      labels
     }
-    cfg.checkpoint.foreach(c => Checkpoints.flushLog(spark, c, "lpa"))
     val out = labels.select(col("id"), col("label")).persist(StorageLevel.MEMORY_AND_DISK)
     out.count() // materialize before releasing iteration state
     rotator.close()

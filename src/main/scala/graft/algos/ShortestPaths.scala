@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.runtime.IterationHygiene
+import graft.runtime.StateRotator
 
 /** Landmark BFS hop counts (reference: spark-graphx 4.1.2
   * `lib.ShortestPaths` — vertex attr `Map[landmark -> dist]`, edges
@@ -43,13 +43,14 @@ object ShortestPaths {
 
     // dist 0: each landmark to itself (restricted to existing vertices);
     // truncated (localCheckpoint) like every later state so the rotation
-    // and release paths below are uniform
-    var (dists, releaseDists) = IterationHygiene.truncate(
-      verts.filter(col("id").isInCollection(landmarks))
-        .select(col("id"), col("id").as("landmark"), lit(0).as("distance")))
+    // and release paths below are uniform. Two rotators: the dists union
+    // and the frontier each own one state
+    val rotD = new StateRotator(None, "sssp_dists")
+    val rotF = new StateRotator(None, "sssp_frontier")
+    var dists = rotD.rotate(verts.filter(col("id").isInCollection(landmarks))
+      .select(col("id"), col("id").as("landmark"), lit(0).as("distance")), 0)
     var frontier = dists
     var frontierRows = dists.count()
-    var releaseFrontier: () => Unit = () => ()
     var round = 0
     while (round < maxIter && frontierRows > 0) {
       round += 1
@@ -58,24 +59,17 @@ object ShortestPaths {
         .select(e("src").as("id"), col("landmark"), (col("distance") + 1).as("distance"))
         .groupBy("id", "landmark").agg(min("distance").as("distance"))
       // keep only first-time (id, landmark) discoveries — BFS minimality.
-      // Truncate plan+lineage every round (the union chain would otherwise
+      // Rotate plan+lineage every round (the union chain would otherwise
       // grow both; see runtime.StateRotator docs). The frontier size is
-      // observed at the ROOT of the truncated plan during its own
+      // observed at the ROOT of the rotated plan during its own
       // materialization — no separate isEmpty action per round
       // (VERDICT r2 what's-wrong #4 / next #10).
-      val obs = org.apache.spark.sql.Observation(s"sssp_frontier_$round")
-      val (improved, relF) = IterationHygiene.truncate(
+      val (improved, row) = rotF.rotateObserved(
         candidates.join(dists.select(col("id"), col("landmark")),
-          Seq("id", "landmark"), "left_anti")
-          .observe(obs, count(lit(1)).as("c")))
-      releaseFrontier()
-      frontier = improved; releaseFrontier = relF
-      frontierRows = IterationHygiene.awaitObservedLong(obs, frontier.count())
-      if (frontierRows > 0) {
-        val (merged, relD) = IterationHygiene.truncate(dists.union(frontier))
-        releaseDists()
-        dists = merged; releaseDists = relD
-      }
+          Seq("id", "landmark"), "left_anti"), round, Seq(count(lit(1)).as("c")))
+      frontier = improved
+      frontierRows = row.getLong(0)
+      if (frontierRows > 0) dists = rotD.rotate(dists.union(frontier), round)
     }
     if (frontierRows > 0)
       graft.runtime.Trace.log(s"sssp: maxIter=$maxIter tripped with a " +
@@ -91,7 +85,7 @@ object ShortestPaths {
       .persist(StorageLevel.MEMORY_AND_DISK)
     out.count()
     if (!pre) e.unpersist(false)
-    releaseFrontier()
+    rotD.close(); rotF.releaseFinal()
     out
   }
 

@@ -1,6 +1,6 @@
 package graft.algos
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -90,7 +90,7 @@ object StronglyConnectedComponents {
     val cleaned =
       if (cfg.inputIsSimple) raw
       else raw.filter(col("src") =!= col("dst")).distinct()
-    var (e, eRows) = rotateCounted(rotE, cleaned.coalesce(pAll), nextStep())
+    var (e, eRows) = rotateCount(rotE, cleaned.coalesce(pAll), nextStep())
     if (!pre) raw.unpersist(false)
 
     // finalized (id, component) — grows by union, rotated so the plan
@@ -125,7 +125,7 @@ object StronglyConnectedComponents {
             col("src") === col("ks"), "left_semi")
           .join(side(keep.select(col("id").as("kd"))),
             col("dst") === col("kd"), "left_semi")
-        val (e2, n2) = rotateCounted(rotE, kept.coalesce(p), nextStep())
+        val (e2, n2) = rotateCount(rotE, kept.coalesce(p), nextStep())
         trimmed = n2 < eRows
         e = e2; eRows = n2
         graft.runtime.Trace.log(s"scc trim edges=$eRows")
@@ -210,7 +210,7 @@ object StronglyConnectedComponents {
             // multiply once per rotation — bounded permanently by the
             // PlanStats clamp every rotation applies (the unclamped
             // BigInteger stall that originally forced the split is gone).
-            val (c2, nChanged) = rotateObservedCount(rot,
+            val (c2, nChanged) = rotateCount(rot,
               shortcut(relax(colors)).coalesce(p), nextStep(), col("changed"))
             colors = c2; changed = nChanged
           }
@@ -273,7 +273,7 @@ object StronglyConnectedComponents {
             col("src") === col("rs"), "left_anti")
           .join(cf.select(col("id").as("rd")).hint("SHUFFLE_HASH"),
             col("dst") === col("rd"), "left_anti")
-        val (e3, n3) = rotateCounted(rotE, remaining.coalesce(p), nextStep())
+        val (e3, n3) = rotateCount(rotE, remaining.coalesce(p), nextStep())
         e = e3; eRows = n3
         graft.runtime.Trace.record(f"scc_round_$round%02d",
           (System.nanoTime() - t0) / 1e9)
@@ -310,28 +310,13 @@ object StronglyConnectedComponents {
     out
   }
 
-  /** Rotate and return (frame, row count), the count collected by
-    * `observe` during the rotation's own materialization. */
-  private def rotateCounted(rot: StateRotator, next: DataFrame,
-      step: Int): (DataFrame, Long) = {
-    val (df, n) = rotateObservedCount(rot, next, step, lit(true))
-    (df, n)
-  }
-
-  /** Rotate and return (frame, count of rows where `pred`), via observe —
-    * zero extra passes; falls back to a direct count if the metric does
-    * not surface. */
-  private def rotateObservedCount(rot: StateRotator, next: DataFrame,
-      step: Int, pred: org.apache.spark.sql.Column): (DataFrame, Long) = {
-    val obs = Observation(s"scc_obs_$step")
-    val observed = next.observe(obs,
-      coalesce(sum(when(pred, 1L).otherwise(0L)), lit(0L)).as("c"))
-    val rotated = rot.rotate(observed, step)
-    graft.runtime.IterationHygiene.awaitObservedRow(obs)
-      .map(r => (rotated, r.getAs[Long]("c")))
-      .getOrElse {
-        graft.runtime.Trace.log(s"scc obs step=$step fell back to direct count")
-        (rotated, rotated.filter(pred).count())
-      }
+  /** Rotate and return (frame, count of rows where `pred`), the count
+    * observed during the rotation's own materialization — zero extra
+    * passes (StateRotator.rotateObserved). */
+  private def rotateCount(rot: StateRotator, next: DataFrame, step: Int,
+      pred: org.apache.spark.sql.Column = lit(true)): (DataFrame, Long) = {
+    val (df, row) = rot.rotateObserved(next, step,
+      Seq(coalesce(sum(when(pred, 1L).otherwise(0L)), lit(0L)).as("c")))
+    (df, row.getLong(0))
   }
 }

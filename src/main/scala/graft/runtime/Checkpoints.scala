@@ -1,8 +1,7 @@
 package graft.runtime
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Superstep checkpointing + lineage/metrics log — the engine's replacement
   * for the reference's `util.PeriodicGraphCheckpointer` (called from
@@ -155,36 +154,23 @@ object Checkpoints {
     * The log is an append-only journal of EXECUTED supersteps: a resume
     * that re-runs supersteps past its snapshot re-logs them (they ran
     * again) — consumers aggregating wall time must group by superstep or
-    * take the last attempt, not sum blindly.
+    * take the last attempt, not sum blindly. The per-partition counts ride
+    * the rotation's root-level observe ([[partitionCountsMetric]]), so
+    * logging costs no job of its own ([[StateRotator.step]]).
     *
-    * BUFFERED writes (r6): the per-partition counts are collected (≤
-    * numPartitions tiny rows) into a driver-side buffer and flushed as
-    * ONE append per durable-snapshot cadence plus a final [[flushLog]]
-    * each algorithm loop issues — a per-superstep parquet-append JOB was
+    * BUFFERED writes (r6): rows go to a driver-side buffer flushed as ONE
+    * append per durable-snapshot cadence plus a final [[flushLog]] when
+    * the loop exits normally — a per-superstep parquet-append JOB was
     * ~60% of a 72-superstep tol run's wall time. Durability is aligned
     * with the resume contract: rows past the last flush belong to
     * supersteps a resume re-executes (and re-logs) anyway, because
-    * snapshots — not the log — are the resume points. */
-  def logSuperstep(state: DataFrame, cfg: CheckpointConfig, algo: String,
-      superstep: Int, l1Delta: Double, activeCount: Long, wallMs: Long): Unit = {
-    val counts = state.select(spark_partition_id().as("p"))
-      .groupBy("p").agg(count(lit(1)).as("n")).collect()
-      .map(r => (r.getInt(0), r.getLong(1))).toSeq
-    logSuperstepRows(state.sparkSession, counts, cfg, algo, superstep,
-      l1Delta, activeCount, wallMs)
-  }
-
-  /** [[logSuperstep]] with the per-partition counts already in hand —
-    * the observe-fused path (r6): iterative loops ride
-    * [[partitionCountsMetric]] on the rotation's root-level observe, so
-    * logging costs zero extra jobs (the job-based [[logSuperstep]] stays
-    * as the fallback when an observation doesn't surface). Rows are
-    * byte-identical to the job form's. */
+    * snapshots — not the log — are the resume points. The same contract
+    * lets a loop that exits by exception drop them ([[dropLog]]). */
   def logSuperstepRows(spark: SparkSession, counts: Seq[(Int, Long)],
       cfg: CheckpointConfig, algo: String, superstep: Int, l1Delta: Double,
       activeCount: Long, wallMs: Long): Unit = {
     val rows = counts.map { case (p, n) =>
-      org.apache.spark.sql.Row(cfg.runId, superstep, p, n, l1Delta, activeCount, wallMs)
+      Row(cfg.runId, superstep, p, n, l1Delta, activeCount, wallMs)
     }
     val buffered = logBuffers.updateWith((cfg.dir, cfg.runId, algo))(
       old => Some(old.getOrElse(Vector.empty) ++ rows)).get
@@ -197,24 +183,14 @@ object Checkpoints {
 
   /** The map(partition_id → rows) aggregate column loops append to their
     * rotation observe when checkpointing is on (alias it "pcounts"). */
-  def partitionCountsMetric: org.apache.spark.sql.Column =
+  def partitionCountsMetric: Column =
     org.apache.spark.sql.graftvec.VectorExpressions.partitionRowCounts()
-
-  /** Extract the observed "pcounts" map from an awaited observe row.
-    * None (→ job fallback) when the row is absent or the field missing. */
-  def countsFromObserved(row: Option[org.apache.spark.sql.Row],
-      field: String = "pcounts"): Option[Seq[(Int, Long)]] =
-    row.flatMap { r =>
-      val i = try r.fieldIndex(field) catch { case _: IllegalArgumentException => -1 }
-      if (i < 0 || r.isNullAt(i)) None
-      else Some(r.getAs[scala.collection.Map[Int, Long]](i).toSeq.sortBy(_._1))
-    }
 
   /** Unflushed superstep-log rows per (dir, runId, algo). An entry exists
     * only while it holds rows: [[flushLog]] removes it, so a finished run
     * leaves no key behind (every pipeline run writes under a new dir). */
   private val logBuffers = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String), Vector[org.apache.spark.sql.Row]]
+    .empty[(String, String, String), Vector[Row]]
 
   private[graft] def bufferedLogKeys: Set[(String, String, String)] =
     logBuffers.keySet.toSet
@@ -224,10 +200,9 @@ object Checkpoints {
     .add("rows", "long").add("l1_delta", "double").add("active_count", "long")
     .add("wall_ms", "long")
 
-  /** Flush buffered superstep-log rows as one append. Every algorithm
-    * loop calls this after its last superstep (and [[logSuperstep]]
-    * self-flushes on the snapshot cadence). Idempotent when nothing is
-    * buffered. */
+  /** Flush buffered superstep-log rows as one append: on the snapshot
+    * cadence ([[logSuperstepRows]]) and when a loop exits normally
+    * ([[StateRotator.loop]]). Idempotent when nothing is buffered. */
   def flushLog(spark: SparkSession, cfg: CheckpointConfig, algo: String): Unit =
     logBuffers.remove((cfg.dir, cfg.runId, algo)).filter(_.nonEmpty).foreach { rows =>
       import scala.jdk.CollectionConverters._
@@ -235,12 +210,27 @@ object Checkpoints {
         spark.createDataFrame(rows.asJava, logSchema), logPath(cfg, algo))
     }
 
+  /** Discard buffered superstep-log rows unwritten — a loop that exits by
+    * exception ([[StateRotator.loop]]): they belong to supersteps after
+    * the last snapshot, which a resume re-executes and re-logs. */
+  def dropLog(cfg: CheckpointConfig, algo: String): Unit =
+    logBuffers.remove((cfg.dir, cfg.runId, algo))
+
   def readLog(spark: SparkSession, cfg: CheckpointConfig, algo: String): DataFrame =
     TableIO.forSession(spark).read(spark, logPath(cfg, algo))
 }
 
-/** Per-superstep state rotation for iterative operators. Three concerns,
-  * all measured failure modes, handled together (SURVEY.md §4.1):
+/** The one superstep mechanism every iterative loop runs through — the
+  * engine's replacement for the reference's `Pregel` loop plumbing plus
+  * `PeriodicGraphCheckpointer`. A loop states what is specific to it (the
+  * superstep plan, the metrics it halts on, its step-0 state) and the
+  * rotator owns the rest: the resume prelude and exit handling
+  * ([[loop]]), observe → rotate → await → trace → log ([[step]]), the
+  * fallback when an observation does not surface ([[rotateObserved]]),
+  * and the state's storage ([[rotate]]).
+  *
+  * Rotation handles three concerns, all measured failure modes, together
+  * (SURVEY.md §4.1):
   *  1. logical-plan growth — a superstep whose state feeds the next plan
   *     twice (convergence PageRank) DOUBLES the plan per superstep →
   *     plan-string OOM; `localCheckpoint` truncates to a LogicalRDD leaf;
@@ -250,29 +240,101 @@ object Checkpoints {
   *     `createDataFrame(df.rdd, schema)` does NOT);
   *  3. storage leak — `Dataset.unpersist` does not release a
   *     localCheckpoint's internal RDD blocks (they're outside the
-  *     CacheManager) → run-over-run degradation; we capture the internal
-  *     RDD from the checkpointed plan and unpersist it explicitly when
-  *     rotating past it.
+  *     CacheManager) → run-over-run degradation; we release the internal
+  *     RDD explicitly ([[IterationHygiene.releaseLocal]]) when rotating
+  *     past it.
   * Durable parquet snapshots (CheckpointConfig cadence) are side-writes
   * of the same materialized state AND give resume points.
   */
 final class StateRotator(cfg: Option[CheckpointConfig], algo: String) {
 
-  // Release of the PREVIOUS superstep's storage. Never via
-  // Dataset.unpersist for localCheckpoint states: that uncaches by PLAN
-  // EQUIVALENCE in the CacheManager and takes down any caller cache built
-  // over a sameResult plan (measured: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
-  // on algorithm results that are trivial projections of the final
-  // state) — the checkpoint's blocks are released via its internal RDD
-  // handle instead, which no CacheManager entry ever points at.
-  private var release: () => Unit = () => ()
+  // The state whose storage this rotator owns. Never released via
+  // Dataset.unpersist: that uncaches by PLAN EQUIVALENCE in the
+  // CacheManager and takes down any caller cache built over a sameResult
+  // plan (measured: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on algorithm results
+  // that are trivial projections of the final state) — the checkpoint's
+  // blocks are released via its internal RDD handle instead, which no
+  // CacheManager entry ever points at.
+  private var owned: Option[DataFrame] = None
 
-  private def internalRddRelease(df: DataFrame): () => Unit = {
-    val h = df.queryExecution.logical.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
-    () => h.foreach(_.unpersist(false))
+  private def own(df: DataFrame): DataFrame = {
+    // eager localCheckpoint truncates plan + lineage; the stats clamp
+    // stops the truncated plan's COMPUTED sizeInBytes (a product over
+    // every state reference in the superstep) from compounding
+    // exponentially across rotations — see graftplan.PlanStats
+    val cp = org.apache.spark.sql.graftplan.PlanStats
+      .clampCheckpointStats(df.localCheckpoint(true))
+    owned.foreach(IterationHygiene.releaseLocal)
+    owned = Some(cp)
+    cp
   }
+
+  /** Run one iterative loop. The resume prelude comes first: when
+    * checkpointing, verify-or-record `fingerprint` (Checkpoints.guard —
+    * the numeric config and input identity a resume must share with the
+    * run that wrote the snapshots), then, when resuming, adopt the latest
+    * committed snapshot. `body` receives `Some((superstep, state))` for a
+    * resumed run and `None` for a fresh one; what a fresh run starts from
+    * stays with the caller. On normal exit the superstep log is flushed.
+    * On an exception this run's buffered log rows are dropped and the
+    * current state's blocks released before rethrowing — nothing the
+    * failed run held outlives it, and the dropped rows belong to
+    * supersteps after the last snapshot, which a resume re-executes and
+    * re-logs. */
+  def loop[T](spark: SparkSession, fingerprint: => String, resume: Boolean)(
+      body: Option[(Int, DataFrame)] => T): T = {
+    val out =
+      try body(cfg.flatMap { c =>
+        Checkpoints.guard(spark, c, algo, fingerprint, resume)
+        if (resume) Checkpoints.latest(spark, c, algo).map { case (s, df) => (s, adopt(df)) }
+        else None
+      })
+      catch {
+        case t: Throwable =>
+          cfg.foreach(Checkpoints.dropLog(_, algo))
+          releaseFinal()
+          throw t
+      }
+    cfg.foreach(Checkpoints.flushLog(spark, _, algo))
+    out
+  }
+
+  /** One superstep: time it from before `build` constructs the plan,
+    * rotate it observing `metrics` (plus the per-partition row counts
+    * when checkpointing), record the `<algo>_step_NN` trace stage and
+    * buffer its superstep-log rows, with `active` read from the metrics
+    * row. Returns the rotated state and that row. */
+  def step(n: Int, metrics: Seq[Column], active: Row => Long)(
+      build: => DataFrame): (DataFrame, Row) = {
+    val t0 = System.nanoTime()
+    val (state, row) = rotateObserved(build, n,
+      metrics ++ cfg.map(_ => Checkpoints.partitionCountsMetric.as("pcounts")))
+    Trace.record(f"${algo}_step_$n%02d", (System.nanoTime() - t0) / 1e9)
+    cfg.foreach { c =>
+      val counts = row.getMap[Int, Long](row.fieldIndex("pcounts")).toSeq.sortBy(_._1)
+      Checkpoints.logSuperstepRows(state.sparkSession, counts, c, algo, n,
+        Double.NaN, active(row), (System.nanoTime() - t0) / 1000000)
+    }
+    (state, row)
+  }
+
+  /** Rotate `next` and evaluate `metrics` (aggregate columns) over it,
+    * collected by a ROOT-LEVEL observe during the rotation's own
+    * materialization — no extra job. When the observation does not
+    * surface, the same columns are evaluated as one aggregate over the
+    * already-rotated state (an in-memory scan, never a re-execution of
+    * the superstep). No metrics: a plain rotation and an empty row. */
+  def rotateObserved(next: DataFrame, n: Int, metrics: Seq[Column]): (DataFrame, Row) =
+    if (metrics.isEmpty) (rotate(next, n), Row.empty)
+    else {
+      val obs = Observation(s"${algo}_obs_$n")
+      val state = rotate(next.observe(obs, metrics.head, metrics.tail: _*), n)
+      val row = StateRotator.awaitObservedRow(obs).getOrElse {
+        Trace.log(s"$algo step=$n: observation did not surface, aggregating the state")
+        StateRotator.measure(state, metrics)
+      }
+      (state, row)
+    }
 
   /** Materialize `next`, release the previous superstep's state.
     *
@@ -288,60 +350,74 @@ final class StateRotator(cfg: Option[CheckpointConfig], algo: String) {
     * drift between a checkpointed and a plain run of the SAME iteration,
     * breaking the resume-is-bit-identical contract. */
   def rotate(next: DataFrame, superstep: Int): DataFrame = {
-    // eager localCheckpoint truncates plan + lineage; the stats clamp
-    // stops the truncated plan's COMPUTED sizeInBytes (a product over
-    // every state reference in the superstep) from compounding
-    // exponentially across rotations — see graftplan.PlanStats
-    val cp = org.apache.spark.sql.graftplan.PlanStats
-      .clampCheckpointStats(next.localCheckpoint(true))
+    val cp = own(next)
     cfg.foreach { c =>
       if (c.every > 0 && superstep % c.every == 0)
         graft.sources.TableIO.forSession(cp.sparkSession)
           .write(cp, Checkpoints.stateDir(c, algo, superstep))
     }
-    release()
-    release = internalRddRelease(cp)
     cp
   }
 
   /** Take ownership of an externally-produced state frame (e.g. a resumed
     * checkpoint snapshot): materialize it EXACTLY like a rotation
-    * (localCheckpoint — see rotate's uniformity note) and register its
-    * release, WITHOUT re-saving it over the directory it may have just
-    * been read from. Layout caveat: the adopted frame's partitioning
+    * (localCheckpoint — see rotate's uniformity note) and release the
+    * previous state, WITHOUT re-saving it over the directory it may have
+    * just been read from. Layout caveat: the adopted frame's partitioning
     * follows the snapshot's file splits, not the in-run coalesce the
     * original rotation had, so downstream float-accumulation order is
     * only as stable as the scan layout — ResumeSpec pins bit-identity at
     * the tested scales; a deployment wanting the same guarantee at
     * cluster scale must keep split sizing (maxPartitionBytes) stable
     * across the original and resumed runs. */
-  def adopt(df: DataFrame): DataFrame = {
-    val cp = org.apache.spark.sql.graftplan.PlanStats
-      .clampCheckpointStats(df.localCheckpoint(true))
-    release()
-    release = internalRddRelease(cp)
-    cp
-  }
+  def adopt(df: DataFrame): DataFrame = own(df)
 
   /** Hand ownership of the FINAL state to the caller: its blocks stay
     * alive for any result frame derived from it (one bounded |V|-sized
     * block set per algorithm run; durable-checkpoint runs release fully
     * on the next cadence). */
-  def close(): Unit = { release = () => () }
+  def close(): Unit = { owned = None }
 
   /** Drop the FINAL state's blocks too — for auxiliary rotators whose
     * last state nothing derived-but-unmaterialized depends on (e.g. the
     * four side rotators of an SCC run once the result frame is
-    * materialized). Without this, each auxiliary rotator strands one
-    * |V|-sized localCheckpoint block set per run that no caller can ever
-    * release (`Dataset.unpersist` cannot reach it — see class doc #3). */
-  def releaseFinal(): Unit = { release(); release = () => () }
+    * materialized), and for a loop that exits by exception. Without this,
+    * each such state strands one |V|-sized localCheckpoint block set that
+    * no caller can ever release (`Dataset.unpersist` cannot reach it —
+    * see class doc #3). */
+  def releaseFinal(): Unit = { owned.foreach(IterationHygiene.releaseLocal); owned = None }
 }
 
-/** One-off plan+lineage truncation for loops whose state isn't a single
-  * rotating frame (e.g. ShortestPaths' dists ∪ frontier). Returns the
-  * truncated frame and a release thunk for ITS storage — call it only
-  * once nothing derived-but-unmaterialized depends on the frame. */
+object StateRotator {
+
+  /** `metrics` (aggregate columns) evaluated as one aggregate over `df` —
+    * the fallback for an observation that did not surface, and how a
+    * resumed loop recovers a metric of its adopted snapshot. Yields the
+    * same row an observe of the same columns collects. */
+  def measure(df: DataFrame, metrics: Seq[Column]): Row =
+    df.agg(metrics.head, metrics.tail: _*).first()
+
+  /** Await a ROOT-LEVEL observation that the rotation's own
+    * materialization fires — reliable only when the observed node is the
+    * root of the executed plan (mid-plan observations can resolve to an
+    * empty row, see graph.Pregel). Returns `Some(row)` only for a
+    * successfully-resolved NON-EMPTY row; `None` on timeout, failure, or
+    * an empty row — the three failure modes [[StateRotator.rotateObserved]]
+    * falls back on. The wait is generous (10 s): the metric is GUARANTEED
+    * to arrive once the job finished — only async-listener-bus latency
+    * varies — and a premature fallback re-introduces the very
+    * per-superstep aggregate job the observe fusion exists to eliminate.
+    * There is no degradation latch for environments where observations
+    * never surface: none failed to surface on Spark 4.1.2 across the test
+    * suite and the benchmark workloads (ROADMAP direction 2). */
+  private[graft] def awaitObservedRow(obs: Observation): Option[Row] =
+    scala.util.Try(scala.concurrent.Await.ready(obs.future,
+        scala.concurrent.duration.Duration(10, "s"))).toOption
+      .flatMap(_.value).collect { case scala.util.Success(r) if r.length > 0 => r }
+}
+
+/** Release helper for localCheckpoint-backed frames outside a rotator
+  * (memoized checkpoint frames, one-off truncations). */
 object IterationHygiene {
 
   /** Unpersist a localCheckpoint's internal RDD blocks. `Dataset.unpersist`
@@ -352,72 +428,4 @@ object IterationHygiene {
     df.queryExecution.logical.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }.foreach(_.unpersist(false))
-
-  def truncate(df: DataFrame): (DataFrame, () => Unit) = {
-    val cp = org.apache.spark.sql.graftplan.PlanStats
-      .clampCheckpointStats(df.localCheckpoint(true))
-    val h = cp.queryExecution.logical.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
-    df.unpersist(false)
-    (cp, () => h.foreach(_.unpersist(false)))
-  }
-
-  /** Await a ROOT-LEVEL observation that the truncation's own
-    * materialization fires (the CC rotateObserved pattern — reliable only
-    * when the observed node is the root of the executed plan; mid-plan
-    * observations can resolve to an empty row, see graph.Pregel). Returns
-    * `Some(row)` only for a successfully-resolved NON-EMPTY row; `None`
-    * on timeout, failure, or an empty row — the three observation failure
-    * modes every caller must fall back on identically (this helper is the
-    * single copy of that poll loop; CC/SCC/Pregel are one-line callers).
-    * The wait is generous (10 s): the metric is GUARANTEED to arrive once
-    * the job finished — only async-listener-bus latency varies — and a
-    * premature fallback re-introduces the very per-superstep count job
-    * the observe fusion exists to eliminate (every poll is 25 ms, so a
-    * prompt metric still returns in one tick). Degradation guard: an
-    * environment whose materializations never surface metrics at all
-    * would otherwise pay the full 10 s EVERY superstep (~33 min over a
-    * 200-superstep run), so after 3 consecutive timeouts the wait drops
-    * to 1 s — and every 10th degraded await PROBES with the full window
-    * again, since a metric that typically lands in 1–10 s would otherwise
-    * keep timing out inside the short window forever and the documented
-    * "until an observation resolves again" recovery could never fire.
-    * The latch is deliberately process-global (listener-bus latency is an
-    * environment property, not a per-run one) and is a performance
-    * heuristic only — every timeout falls back to the caller's count. */
-  def awaitObservedRow(
-      obs: org.apache.spark.sql.Observation): Option[org.apache.spark.sql.Row] = {
-    val degraded = consecutiveTimeouts.get() >= 3
-    val probe = degraded && awaitCount.incrementAndGet() % 10 == 0
-    val maxTries = if (degraded && !probe) 40 else 400
-    var tries = 0
-    while (tries < maxTries) {
-      obs.future.value match {
-        case Some(scala.util.Success(row)) =>
-          consecutiveTimeouts.set(0)
-          return if (row.length > 0) Some(row) else None
-        case Some(scala.util.Failure(_)) => return None // resolved, not a timeout
-        case _ =>
-          // listener-bus latency is usually single-digit ms once the job
-          // finished: poll tightly first (a 25 ms first tick taxed EVERY
-          // rotation of a many-superstep run ~2 s/100 rotations), then
-          // back off to the 25 ms cadence
-          Thread.sleep(if (tries < 10) 2 else 25); tries += 1
-      }
-    }
-    consecutiveTimeouts.incrementAndGet()
-    None
-  }
-
-  // AtomicInteger, not a @volatile var (ADVICE r5): concurrent algorithm
-  // runs raced the read-modify-write and could over/under-count the
-  // degradation latch
-  private val consecutiveTimeouts = new java.util.concurrent.atomic.AtomicInteger
-  private val awaitCount = new java.util.concurrent.atomic.AtomicLong
-
-  /** [[awaitObservedRow]] specialized to a single-long observation. */
-  def awaitObservedLong(obs: org.apache.spark.sql.Observation,
-      fallback: => Long): Long =
-    awaitObservedRow(obs).map(_.getLong(0)).getOrElse(fallback)
 }

@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import graft.algos.{ConnectedComponents, LabelPropagation, PageRank}
-import graft.runtime.{CheckpointConfig, Checkpoints}
+import graft.graph.{PreparedGraph, Pregel}
+import graft.runtime.{CheckpointConfig, Checkpoints, StateRotator}
 
 /** North-rule resumability: jobs resume mid-iteration from the superstep
   * checkpoint store and produce bit-identical results; per-partition
@@ -97,6 +99,25 @@ class ResumeSpec extends SparkTestBase {
     ConnectedComponents.run(edgesA.orderBy(rand(7)),
       ConnectedComponents.Config(checkpoint = Some(ckCC), resume = true))
       .unpersist(false)
+  }
+
+  test("LPA resume against the same dir/runId with DIFFERENT edge data " +
+      "fails loudly instead of adopting stale labels") {
+    val pairsA = randomEdges(19, n = 60, m = 200)
+    val edgesB = edgesDF(randomEdges(23, n = 60, m = 200)) // different graph
+    val dir = java.nio.file.Files.createTempDirectory("resume_lpa_input").toString
+    val ck = CheckpointConfig(dir, "inlpa", every = 2)
+    LabelPropagation.run(edgesDF(pairsA), LabelPropagation.Config(maxSteps = 2,
+      checkpoint = Some(ck))).unpersist(false)
+    val e = intercept[IllegalArgumentException] {
+      LabelPropagation.run(edgesB, LabelPropagation.Config(maxSteps = 4,
+        checkpoint = Some(ck), resume = true))
+    }
+    assert(e.getMessage.contains("refusing to resume"), e.getMessage)
+    // LPA ignores edge direction: the signature is over the symmetrized
+    // adjacency, so the same graph with every edge reversed resumes fine
+    LabelPropagation.run(edgesDF(pairsA.map(_.swap)), LabelPropagation.Config(
+      maxSteps = 4, checkpoint = Some(ck), resume = true)).unpersist(false)
   }
 
   test("a torn _config write (killed first run) is repaired, not treated " +
@@ -206,39 +227,137 @@ class ResumeSpec extends SparkTestBase {
     assert(resumed == full, "resumed combinator run diverged from uninterrupted")
   }
 
+  /** Min-label CC on the combinator; the shape the Pregel resume specs use. */
+  private def minLabel(g: PreparedGraph,
+      vprog: (DataFrame, DataFrame) => DataFrame, cfg: Pregel.Config): DataFrame =
+    Pregel.iterate(g,
+      g.vertices.select(col("id"), col("id").as("label"), lit(true).as("changed")),
+      Some(col("src_label")), Some(col("dst_label")), Seq(min("msg").as("m")), vprog,
+      cfg.copy(sendersPred = Some(col("changed"))))
+
+  private def minLabelStep(st: DataFrame, ms: DataFrame): DataFrame =
+    st.join(ms, Seq("id"), "left").select(col("id"),
+      least(col("label"), coalesce(col("m"), col("label"))).as("label"),
+      coalesce(col("m") < col("label"), lit(false)).as("changed"))
+
+  test("a checkpointed Pregel.iterate that throws mid-run strands no log " +
+      "buffer or checkpoint blocks, and resumes bit-identically") {
+    // a 12-vertex path: the min label moves one hop per superstep, so the
+    // loop is still running when the vprog throws building superstep 5
+    val g = PreparedGraph(edgesDF((0L until 11L).map(i => (i + 1, i))))
+    g.numVertices
+    val dir = java.nio.file.Files.createTempDirectory("resume_throw").toString
+    val ck = CheckpointConfig(dir, "throw1", every = 3)
+    val cfg = Pregel.Config(checkpoint = Some(ck), algo = "minlabel_throw")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    var calls = 0
+    val ex = intercept[IllegalStateException] {
+      minLabel(g, (st, ms) => {
+        calls += 1
+        if (calls == 5) throw new IllegalStateException("vprog failed in superstep 5")
+        minLabelStep(st, ms)
+      }, cfg)
+    }
+    assert(ex.getMessage.contains("superstep 5"))
+    // superstep 4's rows were still buffered: dropped, not stranded
+    assert(Checkpoints.bufferedLogKeys.isEmpty, Checkpoints.bufferedLogKeys)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"RDDs stranded by the failed loop: $leaked")
+    assert(Checkpoints.readLog(spark, ck, "minlabel_throw")
+      .agg(max("superstep")).first().getInt(0) == 3)
+    // resume continues from the superstep-3 snapshot
+    def labels(df: DataFrame) =
+      df.select("id", "label").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val resumed = labels(minLabel(g, minLabelStep, cfg.copy(resume = true)))
+    val full = labels(minLabel(g, minLabelStep,
+      Pregel.Config(algo = "minlabel_throw_full")))
+    g.unpersist()
+    assert(resumed == full)
+    assert(full.values.toSet == Set(0L))
+  }
+
   test("observe-fused partition counts equal the job-based counts " +
       "(r6 superstep-log fusion)") {
     // the fused path's contract: the map observed DURING a rotation-style
     // materialization must equal what a later spark_partition_id groupBy
     // over the SAME materialized frame reports — i.e. task partition ids
-    // at observe time are the localCheckpoint scan's partition ids
-    val df = spark.range(0, 1000).select(col("id"), (col("id") % 7).as("v"))
+    // at observe time are the localCheckpoint scan's partition ids. The
+    // rotator's one fallback — the same metric columns aggregated over the
+    // rotated frame — must equal the observed row, for the partition
+    // counts and for CC's (count, xor) edge-set signature
+    val df = spark.range(0, 1000).select(col("id").as("src"), (col("id") % 7).as("dst"))
       .repartition(8)
+    val metrics = Seq(count(lit(1)).as("c"),
+      coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L)).as("h"),
+      Checkpoints.partitionCountsMetric.as("pcounts"))
     val obs = org.apache.spark.sql.Observation("pcounts_parity")
-    val mat = df.observe(obs, Checkpoints.partitionCountsMetric.as("pcounts"))
-      .localCheckpoint(true)
-    val fused = Checkpoints.countsFromObserved(
-      graft.runtime.IterationHygiene.awaitObservedRow(obs))
-    assert(fused.isDefined, "observation did not surface")
+    val rot = new StateRotator(None, "parity")
+    val mat = rot.rotate(df.observe(obs, metrics.head, metrics.tail: _*), 1)
+    val observed = StateRotator.awaitObservedRow(obs)
+    assert(observed.isDefined, "observation did not surface")
+    val fused = observed.get.getMap[Int, Long](2).toMap
     val job = mat.select(spark_partition_id().as("p"))
       .groupBy("p").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(fused.get.toMap == job)
-    assert(fused.get.map(_._2).sum == 1000L)
-    graft.runtime.IterationHygiene.releaseLocal(mat)
+    assert(fused == job)
+    assert(fused.values.sum == 1000L)
+    assert(StateRotator.measure(mat, metrics) == observed.get)
+    rot.releaseFinal()
+  }
+
+  /** (superstep, Σrows, active_count) per logged superstep, after checking
+    * supersteps are exactly 1..n, each (superstep, partition) row logged
+    * once, and one active_count per superstep. */
+  private def loggedSupersteps(ck: CheckpointConfig, algo: String): Seq[(Int, Long, Long)] = {
+    val log = Checkpoints.readLog(spark, ck, algo)
+    assert(log.groupBy("superstep", "partition_id").count()
+      .filter(col("count") > 1).count() == 0, s"$algo: a superstep logged twice")
+    val per = log.groupBy("superstep")
+      .agg(sum("rows"), min("active_count"), max("active_count"))
+      .orderBy("superstep").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(per.map(_._1) == (1 to per.size), s"$algo: supersteps ${per.map(_._1)}")
+    assert(per.forall(r => r._3 == r._4), s"$algo: active_count varies within a superstep")
+    per.map(r => (r._1, r._2, r._3))
   }
 
   test("superstep log has per-partition rows and wall times") {
-    val edges = edgesDF(randomEdges(8, n = 50, m = 150))
+    val pairs = randomEdges(8, n = 50, m = 150)
+    val edges = edgesDF(pairs)
+    val nV = pairs.flatMap(p => Seq(p._1, p._2)).distinct.size.toLong
     val dir = java.nio.file.Files.createTempDirectory("sslog").toString
     val ck = CheckpointConfig(dir, "run2", every = 2)
     PageRank.run(edges, PageRank.Config(numIter = 4, checkpoint = Some(ck)))
+      .unpersist(false)
     val log = Checkpoints.readLog(spark, ck, "pagerank")
-    assert(log.select("superstep").distinct().count() == 4)
     assert(log.columns.toSet == Set("run_id", "superstep", "partition_id",
       "rows", "l1_delta", "active_count", "wall_ms"))
-    val totalRows = log.groupBy("superstep").agg(sum("rows").as("r"))
-      .select("r").collect().map(_.getLong(0)).toSet
-    assert(totalRows == Set(50L)) // every superstep logged all vertices
+    // static PageRank: every superstep logs all vertices, active = |V|
+    assert(loggedSupersteps(ck, "pagerank") == (1 to 4).map(i => (i, nV, nV)))
+
+    // tol PageRank and Pregel: Σrows = |V|, active_count = the superstep's
+    // active count, which reaches 0 exactly at the last superstep
+    PageRank.run(edges, PageRank.Config(tol = Some(1e-3), checkpoint = Some(ck)))
+      .unpersist(false)
+    val g = PreparedGraph(edges)
+    minLabel(g, minLabelStep, Pregel.Config(checkpoint = Some(ck), algo = "minlabel_log"))
+    g.unpersist()
+    for (algo <- Seq("pagerank_tol", "minlabel_log")) {
+      val steps = loggedSupersteps(ck, algo)
+      assert(steps.size > 1 && steps.forall(_._2 == nV), s"$algo: $steps")
+      assert(steps.init.forall(_._3 > 0) && steps.last._3 == 0L, s"$algo: $steps")
+    }
+
+    // CC: each round logs its edge set, active_count = that round's edge
+    // count; round 0 (the canonical form) is rotated but not logged
+    ConnectedComponents.run(edges, ConnectedComponents.Config(checkpoint = Some(ck)))
+      .unpersist(false)
+    val cc = loggedSupersteps(ck, "cc")
+    assert(cc.nonEmpty && cc.forall(r => r._2 == r._3), s"cc: $cc")
+
+    // LPA: all vertices every step, active_count 0
+    LabelPropagation.run(edges, LabelPropagation.Config(maxSteps = 3,
+      checkpoint = Some(ck))).unpersist(false)
+    assert(loggedSupersteps(ck, "lpa") == (1 to 3).map(i => (i, nV, 0L)))
   }
 }
