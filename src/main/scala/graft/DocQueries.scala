@@ -33,7 +33,7 @@ object DocQueries {
   private def ngramPairs(spark: SparkSession, dir: String): DataFrame = {
     // collision-free session key + stopped-session eviction (see
     // runtime.SessionKeys — identityHashCode keys could collide after GC)
-    graft.runtime.SessionKeys.purgeStopped(pairsMemo)
+    graft.runtime.SessionKeys.purgeStopped(pairsMemo)(_.sparkSession)
     pairsMemo.getOrElseUpdate((graft.runtime.SessionKeys.of(spark), dir),
       // the build cost lands in the TRIGGERING query's first-run timing;
       // the labeled stage makes it attributable in the bench JSON (both
@@ -50,7 +50,7 @@ object DocQueries {
   def clearMemo(spark: SparkSession): Unit = {
     val h = graft.runtime.SessionKeys.of(spark)
     pairsMemo.keys.filter(_._1 == h).foreach { k =>
-      pairsMemo.remove(k).foreach(graft.runtime.IterationHygiene.releaseLocal)
+      pairsMemo.remove(k).foreach(graft.runtime.Storage.release)
     }
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.algos.{ConnectedComponents, LabelPropagation, PageRank, TriangleCount}
 import graft.graph.{Adjacency, EdgeOps}
+import graft.runtime.Storage
 
 /** The driver's correctness-gate queries (SparkEntry.queries) and their
   * DuckDB oracle SQL (SparkEntry.oracleSql), over the driver's TPC-H-ish
@@ -46,18 +47,15 @@ object DriverQueries {
       build: => DataFrame): DataFrame = {
     // collision-free session key (identityHashCode is not unique across a
     // session's lifetime+GC) + eviction of stopped-session entries
-    graft.runtime.SessionKeys.purgeStopped(graphMemo)
+    graft.runtime.SessionKeys.purgeStopped(graphMemo)(_.sparkSession)
     graphMemo.getOrElseUpdate((kind, graft.runtime.SessionKeys.of(spark), dir),
       // labeled stage: the build cost is attributed in the bench JSON
       // (per-query "stages" + aggregated "memo_builds") instead of hiding
       // inside whichever query happened to run first
       graft.runtime.Trace.stage(s"memo_build:$kind") {
-        val df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // release on failed materialization: getOrElseUpdate aborts without
-        // recording the entry, so clearMemo could never reach the pinned cache
-        try df.count()
-        catch { case t: Throwable => df.unpersist(false); throw t }
-        df
+        // a failed materialization is released by its scope: getOrElseUpdate
+        // aborts without recording the entry, so clearMemo could never reach it
+        Storage.scope(_.result(build))
       })
   }
 
@@ -75,7 +73,7 @@ object DriverQueries {
 
   private def preparedGraph(kind: String, spark: SparkSession, dir: String)(
       edges: => DataFrame): graft.graph.PreparedGraph = {
-    pgMemo.foreach { case (k, g) => if (g.spark.sparkContext.isStopped) pgMemo.remove(k) }
+    graft.runtime.SessionKeys.purgeStopped(pgMemo)(_.spark)
     pgMemo.getOrElseUpdate((kind, graft.runtime.SessionKeys.of(spark), dir),
       graft.runtime.Trace.stage(s"memo_build:${kind}_prepared")(
         graft.graph.PreparedGraph(edges)))
@@ -83,9 +81,7 @@ object DriverQueries {
 
   private def preparedLpa(spark: SparkSession, dir: String)(
       edges: => DataFrame): graft.algos.LabelPropagation.Prepared = {
-    lpaMemo.foreach { case (k, p) =>
-      if (p.session.sparkContext.isStopped) lpaMemo.remove(k)
-    }
+    graft.runtime.SessionKeys.purgeStopped(lpaMemo)(_.session)
     lpaMemo.getOrElseUpdate((graft.runtime.SessionKeys.of(spark), dir),
       graft.runtime.Trace.stage("memo_build:lpa_prepared")(
         graft.algos.LabelPropagation.prepare(edges)))
@@ -380,22 +376,16 @@ object DriverQueries {
     * maxIters=0 path: init + clamped-prediction error pass — the SGD
     * iteration algebra is pinned by the jar-differential and sequential-
     * replica ScalaTests, which no SQL engine can independently express). */
-  def qSvdpp(spark: SparkSession, dir: String): DataFrame = {
-    val (state, _) = graft.algos.SVDPlusPlus.run(ratingEdges(spark, dir),
+  def qSvdpp(spark: SparkSession, dir: String): DataFrame = Storage.scope { s =>
+    val state = s.own(graft.algos.SVDPlusPlus.run(ratingEdges(spark, dir),
       graft.algos.SVDPlusPlus.Conf(rank = 2, maxIters = 0),
-      initFactors = Some((SvdV1, SvdV2)))
-    // materialize the projection BEFORE releasing the state cache: a lazy
-    // projection over an unpersisted state would re-run the final error
-    // pass (the query's most expensive stage) on every caller evaluation
-    val out = state.select(col("id"), round(col("bias"), 6).as("bias"),
-        round(col("norm"), 6).as("norm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // state is released whether materialization succeeds or fails — a
-    // failure must not strand the SVD state cache for the session's life
-    try out.count()
-    catch { case t: Throwable => out.unpersist(false); state.unpersist(false); throw t }
-    state.unpersist(false)
-    out
+      initFactors = Some((SvdV1, SvdV2)))._1)
+    // materialize the projection BEFORE the scope releases the state cache:
+    // a lazy projection over an unpersisted state would re-run the final
+    // error pass (the query's most expensive stage) on every caller
+    // evaluation
+    s.result(state.select(col("id"), round(col("bias"), 6).as("bias"),
+      round(col("norm"), 6).as("norm")))
   }
 
   val qSvdppSql: String = {
@@ -427,24 +417,18 @@ object DriverQueries {
     * deterministic init as a DuckDB CTE chain, so the iteration math gains
     * an independent engine check beyond the maxIters=0 path. Output: both
     * factor slots component-wise + bias + norm (= Σ err² on items). */
-  def qSvdppIter1(spark: SparkSession, dir: String): DataFrame = {
-    val (state, _) = graft.algos.SVDPlusPlus.run(ratingEdges(spark, dir),
+  def qSvdppIter1(spark: SparkSession, dir: String): DataFrame = Storage.scope { s =>
+    val state = s.own(graft.algos.SVDPlusPlus.run(ratingEdges(spark, dir),
       graft.algos.SVDPlusPlus.Conf(rank = 2, maxIters = 1),
-      initFactors = Some((SvdV1, SvdV2)))
+      initFactors = Some((SvdV1, SvdV2)))._1)
     // materialized before the state release — see qSvdpp
-    val out = state.select(col("id"),
+    s.result(state.select(col("id"),
         round(element_at(col("factor"), 1), 6).as("f1"),
         round(element_at(col("factor"), 2), 6).as("f2"),
         round(element_at(col("factor2"), 1), 6).as("t1"),
         round(element_at(col("factor2"), 2), 6).as("t2"),
         round(col("bias"), 6).as("bias"),
-        round(col("norm"), 6).as("norm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // release-on-failure — see qSvdpp
-    try out.count()
-    catch { case t: Throwable => out.unpersist(false); state.unpersist(false); throw t }
-    state.unpersist(false)
-    out
+        round(col("norm"), 6).as("norm")))
   }
 
   /** Independent rank-2 unroll of one SVD++ iteration. Conf defaults:

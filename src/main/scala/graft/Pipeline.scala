@@ -7,7 +7,7 @@ import graft.algos.{ConnectedComponents, PageRank}
 import graft.graph.{EdgeOps, PreparedGraph}
 import graft.ids.UrlDict
 import graft.pages.{Extract, PageGen}
-import graft.runtime.CheckpointConfig
+import graft.runtime.{CheckpointConfig, Storage}
 import graft.sources.TableIO
 
 /** The north-star flow as ONE spark-submit entry point: page table →
@@ -63,7 +63,7 @@ object Pipeline {
     * per-stage output scans (pages count, ONE fused ranks sum+count
     * aggregate, components distinct-count, edges count). */
   def run(spark: SparkSession, workDir: String, numPages: Long,
-      resume: Boolean = false, prIters: Int = 20): Result = {
+      resume: Boolean = false, prIters: Int = 20): Result = Storage.scope { s =>
     val io = TableIO.forSession(spark)
     val pagesRef = s"$workDir/pages"
     val edgesRef = s"$workDir/edges"
@@ -124,7 +124,7 @@ object Pipeline {
     // stage 3: iterative operators, checkpointed + resumable. Graph prep
     // (edge cache + degree aggregate + adjacency build) is the expensive
     // shared step — build lazily so a run whose iterative outputs all
-    // committed never pays it again
+    // committed never pays it again; released when the run exits
     val ck = CheckpointConfig(s"$workDir/checkpoints", "pipeline", every = 5)
     val resumedFrom =
       if (resume)
@@ -132,7 +132,7 @@ object Pipeline {
       else 0
     var gBuilt: Option[PreparedGraph] = None
     def g: PreparedGraph = gBuilt.getOrElse {
-      val built = PreparedGraph(edges); gBuilt = Some(built); built
+      val built = s.own(PreparedGraph(edges)); gBuilt = Some(built); built
     }
     // one fused scan serves both the rank sum and (when no graph is ever
     // built on the fully-resumed path) the vertex count
@@ -145,29 +145,28 @@ object Pipeline {
         ranksCount = r.getLong(1)
         r.getDouble(0)
       } else {
-        val ranks = PageRank.runPrepared(g,
-          PageRank.Config(numIter = prIters, checkpoint = Some(ck), resume = resume))
+        val ranks = s.own(PageRank.runPrepared(g,
+          PageRank.Config(numIter = prIters, checkpoint = Some(ck), resume = resume)))
         io.write(ranks, ranksRef)
-        val s = ranks.agg(coalesce(sum("rank"), lit(0.0))).first().getDouble(0)
-        ranks.unpersist(false)
-        s
+        val total = ranks.agg(coalesce(sum("rank"), lit(0.0))).first().getDouble(0)
+        s.release(ranks)
+        total
       }
     val components =
       if (done(compsRef))
         io.read(spark, compsRef).agg(countDistinct("component")).first().getLong(0)
       else {
-        val cc = ConnectedComponents.run(g.edges,
-          ConnectedComponents.Config(checkpoint = Some(ck), resume = resume))
+        val cc = s.own(ConnectedComponents.run(g.edges,
+          ConnectedComponents.Config(checkpoint = Some(ck), resume = resume)))
         io.write(cc, compsRef)
         val n = cc.select("component").distinct().count()
-        cc.unpersist(false)
+        s.release(cc)
         n
       }
     val nEdges = gBuilt.map(_.numEdges).getOrElse(edges.count())
     // ranksCount ≥ 0 whenever no graph was built: the only path that skips
     // graph prep is both iterative stages committed, which read ranks above
     val nVertices = gBuilt.map(_.numVertices).getOrElse(ranksCount)
-    gBuilt.foreach(_.unpersist())
     Result(nPages, nEdges, nVertices, components, rankSum, resumedFrom)
   }
 }

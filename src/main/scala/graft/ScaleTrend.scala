@@ -183,7 +183,7 @@ object ScaleTrend {
       val pairs = Dedup.minhashLshPairs(corpus, k = 3, numHashes = 128,
         bands = 16, threshold = 0.5)
       val n = drain(Dedup.dupClusters(pairs))
-      graft.runtime.IterationHygiene.releaseLocal(pairs)
+      graft.runtime.Storage.release(pairs)
       corpus.unpersist(false); n
     }
 
@@ -198,7 +198,7 @@ object ScaleTrend {
         .select(col("page_id").as("doc_id"), col("text"))
       val pairs = Dedup.ngramJaccardPairs(corpus, k = 3, threshold = 0.5)
       val n = pairs.count()
-      graft.runtime.IterationHygiene.releaseLocal(pairs)
+      graft.runtime.Storage.release(pairs)
       n
     }
 

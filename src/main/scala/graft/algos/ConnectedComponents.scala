@@ -2,10 +2,9 @@ package graft.algos
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.graph.EdgeOps
-import graft.runtime.{AdaptivePartitions, CheckpointConfig, Checkpoints, StateRotator}
+import graft.runtime.{AdaptivePartitions, CheckpointConfig, Checkpoints, StateRotator, Storage}
 
 /** Connected components via alternating small-star / large-star
   * (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -46,25 +45,20 @@ object ConnectedComponents {
       resume: Boolean = false)
 
   /** (id, component) for every vertex appearing in `edges`.
-    * @note the returned frame is PERSISTED — the caller owns it
-    *       (`unpersist()` when done; see `PageRank.run`'s ownership
-    *       contract, uniform across engine algorithms). */
-  def run(edges: DataFrame, cfg: Config = Config()): DataFrame = {
+    * @note the returned frame is PERSISTED and the caller owns it: see
+    *       `runtime.Storage`'s ownership contract. */
+  def run(edges: DataFrame, cfg: Config = Config()): DataFrame = Storage.scope { s =>
     val spark = edges.sparkSession
     // one pass over the (possibly expensive) input plan: the vertex
     // universe AND round 0 both derive from this cache, instead of each
-    // re-executing the upstream join/extraction. An input that is ALREADY
-    // cached is read through its own cache — no second copy.
-    val pre = edges.storageLevel != StorageLevel.NONE
-    val raw = edges.select(col("src"), col("dst"))
-    if (!pre) raw.persist(StorageLevel.MEMORY_AND_DISK)
+    // re-executing the upstream join/extraction
+    val raw = s.input(edges, col("src"), col("dst"))
     val rawRows = raw.count()
-    val allVerts = EdgeOps.vertices(raw)
-      .coalesce(AdaptivePartitions.forRows(spark, rawRows, cfg.numPartitions))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val allVerts = s.cache(EdgeOps.vertices(raw)
+      .coalesce(AdaptivePartitions.forRows(spark, rawRows, cfg.numPartitions)))
     allVerts.count()
 
-    val rotator = new StateRotator(cfg.checkpoint, "cc")
+    val rotator = s.rotator(cfg.checkpoint, "cc")
     // fixed point iff the (set-valued) edge set is unchanged between
     // rounds; both sides are distinct sets → compare this (count,
     // xor-checksum) signature, observed during each round's rotation
@@ -93,7 +87,7 @@ object ConnectedComponents {
               .distinct().coalesce(p0), 0, sigMetrics)
           (0, df, sig(row))
       }
-      if (!pre) raw.unpersist(false)
+      s.release(raw)
 
       var converged = sigPrev._1 == 0L
       while (!converged && round < cfg.maxRounds) {
@@ -123,12 +117,10 @@ object ConnectedComponents {
         "maxRounds")
 
     // stars: src (member) → dst (root); roots + isolated vertices map to self
-    val out = allVerts
+    val out = s.result(allVerts
       .join(e.select(col("src").as("id"), col("dst").as("component")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize before releasing iteration state
-    rotator.close(); allVerts.unpersist(false)
+      .select(col("id"), coalesce(col("component"), col("id")).as("component")))
+    rotator.close() // materialized before the scope releases iteration state
     out
   }
 

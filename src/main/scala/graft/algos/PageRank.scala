@@ -2,10 +2,9 @@ package graft.algos
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.graph.PreparedGraph
-import graft.runtime.{CheckpointConfig, Checkpoints, StateRotator}
+import graft.runtime.{CheckpointConfig, Checkpoints, StateRotator, Storage}
 
 /** Pregel-free power-iteration PageRank as Dataset joins + aggregations.
   *
@@ -61,24 +60,16 @@ object PageRank {
 
   /** (id, rank) for every vertex of `edges`. Prepares the graph, runs,
     * releases. Use `runPrepared` to amortize preparation across runs.
-    *
-    * Result ownership (every engine algorithm follows this contract —
-    * VERDICT r4 what's-wrong #4): the returned frame is PERSISTED and the
-    * CALLER owns it — `unpersist()` it when done (the bench rerun loop
-    * does). The final iteration state's localCheckpoint blocks (bounded,
-    * |V|-sized) back the result if its cache is rebuilt and are released
-    * with the result/session. */
-  def run(edges: DataFrame, cfg: Config = Config()): DataFrame = {
-    val g = PreparedGraph(edges, cfg.numPartitions)
-    try runPrepared(g, cfg)
-    finally g.unpersist()
-  }
+    * @note the returned frame is PERSISTED and the caller owns it: see
+    *       `runtime.Storage`'s ownership contract. */
+  def run(edges: DataFrame, cfg: Config = Config()): DataFrame =
+    Storage.scope(s => runPrepared(s.own(PreparedGraph(edges, cfg.numPartitions)), cfg))
 
-  def runPrepared(g: PreparedGraph, cfg: Config = Config()): DataFrame = {
+  def runPrepared(g: PreparedGraph, cfg: Config = Config()): DataFrame = Storage.scope { s =>
     val numVertices = g.numVertices
     val (ranks, rotator) = cfg.tol match {
-      case None      => runStatic(g, cfg, numVertices)
-      case Some(tol) => runConvergence(g, cfg, tol)
+      case None      => runStatic(g, cfg, numVertices, s)
+      case Some(tol) => runConvergence(g, cfg, tol, s)
     }
     val out =
       if (!cfg.normalize) ranks
@@ -99,8 +90,7 @@ object PageRank {
           ranks.select(col("id"), (col("rank") * lit(scale)).as("rank"))
         }
       }
-    val result = out.persist(StorageLevel.MEMORY_AND_DISK)
-    result.count() // materialize before releasing iteration state
+    val result = s.result(out) // materialized before releasing iteration state
     rotator.close()
     result
   }
@@ -129,16 +119,15 @@ object PageRank {
         .groupBy("dst").agg(sum("msg").as("msg"))
   }
 
-  private def runStatic(g: PreparedGraph, cfg: Config,
-      numVertices: Long): (DataFrame, StateRotator) = {
-    val algo = "pagerank"
+  private def runStatic(g: PreparedGraph, cfg: Config, numVertices: Long,
+      s: Storage.Scope): (DataFrame, StateRotator) = {
     val verts = g.vertices
     val init = cfg.personalized match {
       case None => verts.select(col("id"), lit(1.0).as("rank"))
       case Some(src) => verts.select(col("id"),
         when(col("id") === src, 1.0).otherwise(0.0).as("rank"))
     }
-    val rotator = new StateRotator(cfg.checkpoint, algo)
+    val rotator = s.rotator(cfg.checkpoint, "pagerank")
     val pState = g.numPartitions // |E|-proportional (PreparedGraph)
     val ranks = rotator.loop(g.spark, fingerprint(g, cfg), cfg.resume) { resumed =>
       var (startIter, ranks) = resumed.getOrElse((0, init))
@@ -147,8 +136,7 @@ object PageRank {
         ranks = rotator.step(i, Nil, _ => numVertices) {
           val msgs0 = msgSums(g, ranks.select(col("id"), col("rank").as("value")), cfg.saltBuckets)
           // dangling mode reads msgs twice (scalar agg + state join): cache it
-          msgs = if (cfg.danglingRedistribute)
-            msgs0.persist(StorageLevel.MEMORY_AND_DISK) else msgs0
+          msgs = if (cfg.danglingRedistribute) s.cache(msgs0) else msgs0
           val sinkShare =
             if (!cfg.danglingRedistribute || numVertices == 0L) 0.0
             else {
@@ -175,7 +163,7 @@ object PageRank {
                 (coalesce(col("msg"), lit(0.0)) + lit(sinkShare))).as("rank"))
             .coalesce(pState)
         }._1
-        if (cfg.danglingRedistribute) msgs.unpersist(false)
+        s.release(msgs)
       }
       ranks
     }
@@ -195,9 +183,8 @@ object PageRank {
     * then propagate with per-hop damping (1−reset) and NO per-step reset
     * reinjection; the personalized tail normalization (Σ = 1) happens in
     * runPrepared. */
-  private def runConvergence(g: PreparedGraph, cfg: Config,
-      tol: Double): (DataFrame, StateRotator) = {
-    val algo = "pagerank_tol"
+  private def runConvergence(g: PreparedGraph, cfg: Config, tol: Double,
+      s: Storage.Scope): (DataFrame, StateRotator) = {
     val init = cfg.personalized match {
       case None => g.vertices.select(col("id"),
         lit(cfg.resetProb).as("rank"), lit(cfg.resetProb).as("delta"),
@@ -210,7 +197,7 @@ object PageRank {
     // resume mid-iteration: the checkpointed state carries the full
     // (rank, delta, received) superstep state, so continuing from the
     // latest snapshot is bit-identical to never having stopped
-    val rotator = new StateRotator(cfg.checkpoint, algo)
+    val rotator = s.rotator(cfg.checkpoint, "pagerank_tol")
     val sending = col("received") && col("delta") > tol
     val state = rotator.loop(g.spark, fingerprint(g, cfg), cfg.resume) { resumed =>
       var (i, state) = resumed.getOrElse((0, init))
@@ -269,21 +256,20 @@ object PageRank {
     * recurrence, not the replication artifact. */
   def runParallelPersonalized(edges: DataFrame, sources: Seq[Long],
       numIter: Int = 10, resetProb: Double = 0.15,
-      numPartitions: Int = 0): DataFrame = {
-    val g = PreparedGraph(edges, numPartitions)
-    try runParallelPersonalizedPrepared(g, sources, numIter, resetProb)
-    finally g.unpersist()
+      numPartitions: Int = 0): DataFrame = Storage.scope { s =>
+    runParallelPersonalizedPrepared(s.own(PreparedGraph(edges, numPartitions)),
+      sources, numIter, resetProb)
   }
 
   def runParallelPersonalizedPrepared(g: PreparedGraph, sources: Seq[Long],
-      numIter: Int = 10, resetProb: Double = 0.15): DataFrame = {
+      numIter: Int = 10, resetProb: Double = 0.15): DataFrame = Storage.scope { s =>
     require(sources.nonEmpty, "at least one personalization source required")
     val spark = g.spark
     import spark.implicits._
     val srcArr = array(sources.map(lit): _*)
     val positions = sources.indices.map(_.toLong).toDF("pos")
     val adj = g.adjacency
-    val rotator = new StateRotator(None, "ppr")
+    val rotator = s.rotator(None, "ppr")
 
     var state = g.vertices.crossJoin(broadcast(positions))
       .select(col("id"), col("pos"),
@@ -311,11 +297,10 @@ object PageRank {
         when(col("t") > 0, col("rank") / col("t")).otherwise(col("rank")).as("rank"))
       .groupBy("id")
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("rank")))),
-        s => s.getField("rank")).as("ranks"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
+        r => r.getField("rank")).as("ranks"))
+    val result = s.result(out)
     rotator.close()
-    out
+    result
   }
 
   /** The parameters a resumed run must share with the run that wrote the

@@ -2,9 +2,8 @@ package graft.algos
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.runtime.{AdaptivePartitions, StateRotator}
+import graft.runtime.{AdaptivePartitions, Storage}
 
 /** SVD++ collaborative filtering (Koren, KDD'08 §5) on a bipartite
   * user→item rating graph — the reference's `lib.SVDPlusPlus`
@@ -67,12 +66,11 @@ object SVDPlusPlus {
     * (id, factor, factor2, bias, norm) as documented above.
     * `initFactors`: the shared initial (factor, factor2) pair; defaults to
     * the seeded equivalent of the reference's one-time random draw.
-    * @note the returned frame is PERSISTED — the caller owns it
-    *       (`unpersist()` when done; see `PageRank.run`'s ownership
-    *       contract, uniform across engine algorithms). */
+    * @note the returned frame is PERSISTED and the caller owns it: see
+    *       `runtime.Storage`'s ownership contract. */
   def run(edges: DataFrame, conf: Conf = Conf(), seed: Long = 0L,
       initFactors: Option[(Array[Double], Array[Double])] = None,
-      numPartitions: Int = 0): (DataFrame, Double) = {
+      numPartitions: Int = 0): (DataFrame, Double) = Storage.scope { s =>
     require(conf.maxVal > conf.minVal, "maxVal must be > minVal")
     val spark = edges.sparkSession
     val (v1, v2) = initFactors.getOrElse {
@@ -83,11 +81,8 @@ object SVDPlusPlus {
     require(v1.length == conf.rank && v2.length == conf.rank,
       s"initFactors must have rank ${conf.rank}")
 
-    // an already-cached input is read through its own cache — no 2nd copy
-    val pre = edges.storageLevel != StorageLevel.NONE
-    val e = edges.select(col("src"), col("dst"),
-        col("rating").cast("double").as("rating"))
-    if (!pre) e.persist(StorageLevel.MEMORY_AND_DISK)
+    val e = s.input(edges, col("src"), col("dst"),
+      col("rating").cast("double").as("rating"))
     // one action materializes the cache AND yields |E| + μ (was two)
     val r0 = e.agg(sum("rating"), count(lit(1))).first()
     val eRows = r0.getLong(1)
@@ -98,7 +93,7 @@ object SVDPlusPlus {
     // init: deg/bias from BOTH directions (reference t0 sends to src+dst)
     val incident = e.select(col("src").as("id"), col("rating"))
       .union(e.select(col("dst").as("id"), col("rating")))
-    val rotator = new StateRotator(None, "svdpp")
+    val rotator = s.rotator(None, "svdpp")
     var state = rotator.adopt(incident.groupBy("id")
       .agg(count(lit(1)).as("deg"), sum("rating").as("rsum"))
       .select(col("id"),
@@ -208,13 +203,10 @@ object SVDPlusPlus {
       .select(col("dst").as("vid"),
         ((col("rating") - predF) * (col("rating") - predF)).as("se"))
       .groupBy("vid").agg(sum("se").as("errsum"))
-    val out = state.join(errs.hint("SHUFFLE_HASH"), state("id") === errs("vid"), "left")
+    val out = s.result(state.join(errs.hint("SHUFFLE_HASH"), state("id") === errs("vid"), "left")
       .select(col("id"), col("factor"), col("factor2"), col("bias"),
-        coalesce(col("errsum"), col("norm")).as("norm"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
+        coalesce(col("errsum"), col("norm")).as("norm")))
     rotator.close()
-    if (!pre) e.unpersist(false)
     (out, u)
   }
 

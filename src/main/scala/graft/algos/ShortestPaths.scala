@@ -2,9 +2,8 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.runtime.StateRotator
+import graft.runtime.Storage
 
 /** Landmark BFS hop counts (reference: spark-graphx 4.1.2
   * `lib.ShortestPaths` — vertex attr `Map[landmark -> dist]`, edges
@@ -30,23 +29,20 @@ object ShortestPaths {
     * within `maxIter` hops" — vertices farther from a landmark get NO row,
     * indistinguishable from unreachable — and a Trace warning records
     * that the cap tripped.
-    * @note the returned frame is PERSISTED — the caller owns it
-    *       (`unpersist()` when done; see `PageRank.run`'s ownership
-    *       contract, uniform across engine algorithms). */
+    * @note the returned frame is PERSISTED and the caller owns it: see
+    *       `runtime.Storage`'s ownership contract. */
   def run(edges: DataFrame, landmarks: Seq[Long],
-      maxIter: Int = Int.MaxValue): DataFrame = {
-    // an already-cached input is read through its own cache — no 2nd copy
-    val pre = edges.storageLevel != StorageLevel.NONE
-    val e = edges.select(col("src"), col("dst"))
-    if (!pre) { e.persist(StorageLevel.MEMORY_AND_DISK); e.count() }
+      maxIter: Int = Int.MaxValue): DataFrame = Storage.scope { s =>
+    val e = s.input(edges, col("src"), col("dst"))
+    if (s.owns(e)) e.count()
     val verts = graft.graph.EdgeOps.vertices(e)
 
     // dist 0: each landmark to itself (restricted to existing vertices);
     // truncated (localCheckpoint) like every later state so the rotation
     // and release paths below are uniform. Two rotators: the dists union
     // and the frontier each own one state
-    val rotD = new StateRotator(None, "sssp_dists")
-    val rotF = new StateRotator(None, "sssp_frontier")
+    val rotD = s.rotator(None, "sssp_dists")
+    val rotF = s.rotator(None, "sssp_frontier")
     var dists = rotD.rotate(verts.filter(col("id").isInCollection(landmarks))
       .select(col("id"), col("id").as("landmark"), lit(0).as("distance")), 0)
     var frontier = dists
@@ -77,15 +73,12 @@ object ShortestPaths {
         "is distances WITHIN maxIter hops, not the full fixed point")
     // fresh persisted projection: the caller's unpersist() can release it
     // (a localCheckpoint-backed frame it could not — Dataset.unpersist
-    // never reaches checkpoint blocks; see IterationHygiene.releaseLocal).
-    // The final dists checkpoint set stays alive backing `out` against
-    // eviction — the one bounded block set per run the ownership contract
-    // allows, same as every rotator-based algorithm's close().
-    val out = dists.select(col("id"), col("landmark"), col("distance"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    if (!pre) e.unpersist(false)
-    rotD.close(); rotF.releaseFinal()
+    // never reaches checkpoint blocks; see runtime.Storage). The final
+    // dists checkpoint set stays alive backing `out` against eviction —
+    // the one bounded block set per run the ownership contract allows;
+    // the frontier's final state is released at scope exit.
+    val out = s.result(dists.select(col("id"), col("landmark"), col("distance")))
+    rotD.close()
     out
   }
 
@@ -118,57 +111,50 @@ object ShortestPaths {
     * restriction with the same caveat documented on [[run]].
     */
   def runPregel(edges: DataFrame, landmarks: Seq[Long],
-      maxIter: Int = Int.MaxValue): DataFrame = {
-    val g = graft.graph.PreparedGraph(edges)
-    try runPregelPrepared(g, landmarks, maxIter)
-    finally g.unpersist()
+      maxIter: Int = Int.MaxValue): DataFrame = Storage.scope { s =>
+    runPregelPrepared(s.own(graft.graph.PreparedGraph(edges)), landmarks, maxIter)
   }
 
   /** [[runPregel]] over an already-prepared graph — amortizes the
     * adjacency/reverse-adjacency build across runs (the PreparedGraph
     * contract: built once, iterated many times). The caller owns `g`. */
   def runPregelPrepared(g: graft.graph.PreparedGraph, landmarks: Seq[Long],
-      maxIter: Int = Int.MaxValue): DataFrame = {
+      maxIter: Int = Int.MaxValue): DataFrame = Storage.scope { s =>
     import graft.graph.{Pregel, TripletFields}
-    {
-      val emptyMap = map_from_arrays(
-        array().cast("array<bigint>"), array().cast("array<int>"))
-      val init = g.vertices.select(col("id"),
-        when(col("id").isInCollection(landmarks), map(col("id"), lit(0)))
-          .otherwise(emptyMap).as("dists"),
-        col("id").isInCollection(landmarks).as("changed"))
-      // message: the dst's landmark map, every hop count +1
-      val toSrc = transform_values(col("dst_dists"), (_, v) => v + 1)
-      // merge: key-union with min over all received maps
-      val merge = aggregate(collect_list(col("msg")), emptyMap,
-        (acc, m) => map_zip_with(acc, m, (_, a, b) => least(a, b))).as("msg_dists")
-      // NOTE: the OLD map must be referenced dataframe-qualified
-      // (state("dists")): a bare col("dists") inside the exists/zip
-      // lambdas is captured by Spark's lateral-column-alias resolution
-      // and silently rebinds to the NEW sibling alias `dists` — measured:
-      // `changed` compared messages against the already-merged map and
-      // the loop halted after one superstep.
-      def vprog(state: DataFrame, msgs: DataFrame): DataFrame =
-        state.join(msgs.hint("SHUFFLE_HASH"), Seq("id"), "left")
-          .select(col("id"),
-            when(col("msg_dists").isNull, state("dists"))
-              .otherwise(map_zip_with(state("dists"), col("msg_dists"),
-                (_, a, b) => least(a, b))).as("dists"),
-            // improved iff some received entry is new or strictly smaller
-            when(col("msg_dists").isNull, lit(false))
-              .otherwise(exists(map_entries(col("msg_dists")), e =>
-                coalesce(e.getField("value") <
-                  try_element_at(state("dists"), e.getField("key")), lit(true))))
-              .as("changed"))
-      val state = Pregel.iterate(g, init,
-        toDst = None, toSrc = Some(toSrc), merge = Seq(merge), vprog,
-        Pregel.Config(maxIter = maxIter, fields = TripletFields.Dst,
-          sendersPred = Some(col("changed")), algo = "sssp"))
-      val out = state.select(col("id"), explode(col("dists"))
-          .as(Seq("landmark", "distance")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      out
-    }
+    val emptyMap = map_from_arrays(
+      array().cast("array<bigint>"), array().cast("array<int>"))
+    val init = g.vertices.select(col("id"),
+      when(col("id").isInCollection(landmarks), map(col("id"), lit(0)))
+        .otherwise(emptyMap).as("dists"),
+      col("id").isInCollection(landmarks).as("changed"))
+    // message: the dst's landmark map, every hop count +1
+    val toSrc = transform_values(col("dst_dists"), (_, v) => v + 1)
+    // merge: key-union with min over all received maps
+    val merge = aggregate(collect_list(col("msg")), emptyMap,
+      (acc, m) => map_zip_with(acc, m, (_, a, b) => least(a, b))).as("msg_dists")
+    // NOTE: the OLD map must be referenced dataframe-qualified
+    // (state("dists")): a bare col("dists") inside the exists/zip
+    // lambdas is captured by Spark's lateral-column-alias resolution
+    // and silently rebinds to the NEW sibling alias `dists` — measured:
+    // `changed` compared messages against the already-merged map and
+    // the loop halted after one superstep.
+    def vprog(state: DataFrame, msgs: DataFrame): DataFrame =
+      state.join(msgs.hint("SHUFFLE_HASH"), Seq("id"), "left")
+        .select(col("id"),
+          when(col("msg_dists").isNull, state("dists"))
+            .otherwise(map_zip_with(state("dists"), col("msg_dists"),
+              (_, a, b) => least(a, b))).as("dists"),
+          // improved iff some received entry is new or strictly smaller
+          when(col("msg_dists").isNull, lit(false))
+            .otherwise(exists(map_entries(col("msg_dists")), e =>
+              coalesce(e.getField("value") <
+                try_element_at(state("dists"), e.getField("key")), lit(true))))
+            .as("changed"))
+    val state = Pregel.iterate(g, init,
+      toDst = None, toSrc = Some(toSrc), merge = Seq(merge), vprog,
+      Pregel.Config(maxIter = maxIter, fields = TripletFields.Dst,
+        sendersPred = Some(col("changed")), algo = "sssp"))
+    s.result(state.select(col("id"), explode(col("dists"))
+      .as(Seq("landmark", "distance"))))
   }
 }

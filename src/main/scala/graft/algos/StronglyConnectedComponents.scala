@@ -2,10 +2,9 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.graph.EdgeOps
-import graft.runtime.{AdaptivePartitions, StateRotator}
+import graft.runtime.{AdaptivePartitions, StateRotator, Storage}
 
 /** Strongly connected components of a directed graph — the last named
   * algorithm of the reference surface (spark-graphx 4.1.2
@@ -63,26 +62,23 @@ object StronglyConnectedComponents {
 
   /** (id, component) for every vertex appearing in `edges`;
     * component = min vertex id of the vertex's SCC.
-    * @note the returned frame is PERSISTED — the caller owns it
-    *       (`unpersist()` when done; see `PageRank.run`'s ownership
-    *       contract, uniform across engine algorithms). */
-  def run(edges: DataFrame, cfg: Config = Config()): DataFrame = {
+    * @note the returned frame is PERSISTED and the caller owns it: see
+    *       `runtime.Storage`'s ownership contract. */
+  def run(edges: DataFrame, cfg: Config = Config()): DataFrame = Storage.scope { s =>
     val spark = edges.sparkSession
-    // an already-cached input is read through its own cache — no 2nd copy
-    val pre = edges.storageLevel != StorageLevel.NONE
-    val raw = edges.select(col("src"), col("dst"))
-    if (!pre) raw.persist(StorageLevel.MEMORY_AND_DISK)
+    val raw = s.input(edges, col("src"), col("dst"))
     val rawRows = raw.count()
     val pAll = AdaptivePartitions.forRows(spark, rawRows, cfg.numPartitions)
-    val allVerts = EdgeOps.vertices(raw).coalesce(pAll)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val allVerts = s.cache(EdgeOps.vertices(raw).coalesce(pAll))
     allVerts.count()
 
-    val rotE = new StateRotator(None, "scc_edges")
-    val rotC = new StateRotator(None, "scc_colors")
-    val rotF = new StateRotator(None, "scc_final")
-    val rotConf = new StateRotator(None, "scc_confirmed")
-    val rotFr = new StateRotator(None, "scc_frontier")
+    // only rotF's final state backs the result; the other four rotators'
+    // final states are released at scope exit
+    val rotE = s.rotator(None, "scc_edges")
+    val rotC = s.rotator(None, "scc_colors")
+    val rotF = s.rotator(None, "scc_final")
+    val rotConf = s.rotator(None, "scc_confirmed")
+    val rotFr = s.rotator(None, "scc_frontier")
     var step = 0
     def nextStep(): Int = { step += 1; step }
 
@@ -91,7 +87,7 @@ object StronglyConnectedComponents {
       if (cfg.inputIsSimple) raw
       else raw.filter(col("src") =!= col("dst")).distinct()
     var (e, eRows) = rotateCount(rotE, cleaned.coalesce(pAll), nextStep())
-    if (!pre) raw.unpersist(false)
+    s.release(raw)
 
     // finalized (id, component) — grows by union, rotated so the plan
     // never grows with it; vertices that simply fall out of the edge set
@@ -237,7 +233,7 @@ object StronglyConnectedComponents {
           .join(cDst.hint("SHUFFLE_HASH"), col("dst") === col("cdid"))
           .filter(col("csc") === col("cdc"))
           .select(col("src"), col("dst"))
-        val ecol = ecolPlan.coalesce(p).persist(StorageLevel.MEMORY_AND_DISK)
+        val ecol = s.cache(ecolPlan.coalesce(p))
         val ecolRows = ecol.count()
         val rev = ecol.select(col("dst").as("src"), col("src").as("dst"))
         // separate rotator: rotC still owns `colors`, which the confirmed
@@ -263,7 +259,7 @@ object StronglyConnectedComponents {
           members.join(sccMin.hint("SHUFFLE_HASH"), Seq("pivot"))
             .select(col("id"), col("component"))
             .coalesce(p))
-        ecol.unpersist(false)
+        s.release(ecol)
 
         // ---- 4. bank the confirmed SCCs, remove them from the graph
         finalized = rotF.adopt(finalized.union(confirmed).coalesce(pAll))
@@ -294,19 +290,10 @@ object StronglyConnectedComponents {
         "on condensation chains) — re-run with a larger maxOuterRounds")
 
     // singleton SCCs (trimmed / never-confirmed vertices) label themselves
-    val out = allVerts
+    val out = s.result(allVerts
       .join(finalized, Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    // only rotF's finalized state backs `out` (keep its blocks — the one
-    // bounded set per run the ownership contract allows); the other four
-    // rotators' final states are dead once `out` is materialized — release
-    // them, or each run strands 4 extra |V|-sized localCheckpoint sets
+      .select(col("id"), coalesce(col("component"), col("id")).as("component")))
     rotF.close()
-    rotE.releaseFinal(); rotC.releaseFinal()
-    rotConf.releaseFinal(); rotFr.releaseFinal()
-    allVerts.unpersist(false)
     out
   }
 

@@ -26,24 +26,17 @@ object TriangleCount {
   /** (id, triangles) for every vertex of `edges`. The returned frame is
     * materialized (persisted + counted) and all intermediate caches are
     * released before returning — repeated calls leak nothing.
-    * @note the returned frame is PERSISTED — the caller owns it
-    *       (`unpersist()` when done; see `PageRank.run`'s ownership
-    *       contract, uniform across engine algorithms). */
-  def run(edges: DataFrame): DataFrame = {
+    * @note the returned frame is PERSISTED and the caller owns it: see
+    *       `runtime.Storage`'s ownership contract. */
+  def run(edges: DataFrame): DataFrame = graft.runtime.Storage.scope { s =>
     val spark = edges.sparkSession
     // one pass over the (possibly expensive) input plan: canonicalization
     // AND the vertex universe both derive from this cache (same hazard CC
     // documents — without it the final vertices join re-executes the full
-    // upstream plan a second time). An already-cached input is read
-    // through its own cache — no second copy.
-    val pre = edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val raw = edges.select(col("src"), col("dst"))
-    if (!pre) {
-      raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      raw.count()
-    }
-    val canon = graft.graph.EdgeOps.canonicalize(raw)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // upstream plan a second time)
+    val raw = s.input(edges, col("src"), col("dst"))
+    if (s.owns(raw)) raw.count()
+    val canon = s.cache(graft.graph.EdgeOps.canonicalize(raw))
     val canonRows = canon.count()
     val p = graft.runtime.AdaptivePartitions.forRows(spark, canonRows)
 
@@ -58,12 +51,11 @@ object TriangleCount {
     // wedge pair can be ordered consistently with the orientation
     val srcFirst = (col("sdeg") < col("ddeg")) ||
       (col("sdeg") === col("ddeg") && col("src") < col("dst"))
-    val oriented = withDeg.select(
+    val oriented = s.cache(withDeg.select(
       when(srcFirst, col("src")).otherwise(col("dst")).as("lo"),
       when(srcFirst, col("dst")).otherwise(col("src")).as("hi"),
       when(srcFirst, col("ddeg")).otherwise(col("sdeg")).as("hideg"))
-      .coalesce(p)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .coalesce(p))
     oriented.count()
 
     // wedges at pivot a: out-neighbor pairs (b, c) with rank(b) < rank(c)
@@ -83,23 +75,16 @@ object TriangleCount {
       .select(explode(array(col("a"), col("b"), col("c"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("triangles"))
 
-    val out = graft.graph.EdgeOps.vertices(raw)
+    // materialized, then the scope releases the intermediates
+    s.result(graft.graph.EdgeOps.vertices(raw)
       .join(perVertex, Seq("id"), "left")
-      .select(col("id"), coalesce(col("triangles"), lit(0L)).as("triangles"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize, then release the intermediates
-    if (!pre) raw.unpersist(false)
-    canon.unpersist(false)
-    oriented.unpersist(false)
-    out
+      .select(col("id"), coalesce(col("triangles"), lit(0L)).as("triangles")))
   }
 
   /** Global triangle count (= Σ per-vertex / 3) — aggregates `run`'s
     * materialized output (one shared pipeline, not a second full run). */
-  def total(edges: DataFrame): Long = {
-    val perVertex = run(edges)
-    val r = perVertex.agg(sum("triangles")).first()
-    perVertex.unpersist(false)
+  def total(edges: DataFrame): Long = graft.runtime.Storage.scope { s =>
+    val r = s.own(run(edges)).agg(sum("triangles")).first()
     if (r.isNullAt(0)) 0L else r.getLong(0) / 3
   }
 }

@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.runtime.{CheckpointConfig, Checkpoints, StateRotator}
+import graft.runtime.{CheckpointConfig, Checkpoints, Storage}
 
 /** Which vertex attributes the message expressions read — the relational
   * analog of the reference's `TripletFields` (spark-graphx 4.1.2
@@ -292,14 +292,14 @@ object Pregel {
   def iterate(g: PreparedGraph, init: DataFrame,
       toDst: Option[Column], toSrc: Option[Column], merge: Seq[Column],
       vprog: (DataFrame, DataFrame) => DataFrame,
-      cfg: Config = Config()): DataFrame = {
+      cfg: Config = Config()): DataFrame = Storage.scope { s =>
     require(toDst.isDefined || toSrc.isDefined,
       "at least one of toDst / toSrc is required")
     require(merge.nonEmpty, "at least one merge aggregate is required")
     val halt = cfg.haltPred.orElse(cfg.sendersPred)
     require(halt.isDefined || cfg.maxIter != Int.MaxValue,
       "unbounded Pregel loop: set sendersPred/haltPred or a finite maxIter")
-    val rotator = new StateRotator(cfg.checkpoint, cfg.algo)
+    val rotator = s.rotator(cfg.checkpoint, cfg.algo)
     val p = if (cfg.numPartitions > 0) cfg.numPartitions else g.numPartitions
     def active(row: org.apache.spark.sql.Row): Long = if (halt.isDefined) row.getLong(0) else 1L
     // input-identity drift guard: the user's vprog/merge closures cannot

@@ -2,7 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.runtime.Storage
 
 /** A link graph prepared for iterative computation: the analog of the
   * reference's materialized `GraphImpl` (edge partitions + routing tables,
@@ -27,7 +28,7 @@ final class PreparedGraph private (
     val adjacency: DataFrame,
     val vertices: DataFrame,
     val numPartitions: Int,
-    val numEdges: Long) {
+    val numEdges: Long) extends Storage.Releasable {
 
   lazy val numVertices: Long = vertices.count()
 
@@ -45,17 +46,11 @@ final class PreparedGraph private (
     * page is the mega-hub case (10⁷–10⁸ sources). Built lazily on first
     * use; released by [[unpersist]]. */
   lazy val reverseAdjacency: DataFrame = {
-    val r = PreparedGraph.cappedBlocks(edges, "dst", "src", "in_degree", "srcs",
-        PreparedGraph.blockCap(spark))
-      .repartition(numPartitions, col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      r.count()
-    } catch {
-      // a failed build must not strand the persisted entry (revBuilt stays
-      // false, so unpersist() would never reach it)
-      case t: Throwable => r.unpersist(false); throw t
-    }
+    // a failed build is released by its scope (revBuilt stays false, so
+    // unpersist() would never reach it)
+    val r = Storage.scope(_.result(PreparedGraph.cappedBlocks(edges, "dst", "src",
+        "in_degree", "srcs", PreparedGraph.blockCap(spark))
+      .repartition(numPartitions, col("dst"))))
     revBuilt = true
     r
   }
@@ -129,36 +124,20 @@ object PreparedGraph {
     * structure. Partition count defaults to |E|-proportional
     * (AdaptivePartitions) so small graphs don't pay
     * shuffle.partitions-task stages every superstep. */
-  def apply(edgesDf: DataFrame, numPartitions: Int = 0): PreparedGraph = {
+  def apply(edgesDf: DataFrame, numPartitions: Int = 0): PreparedGraph = Storage.scope { s =>
     val spark = edgesDf.sparkSession
-    // an already-cached input (e.g. a memoized edge frame) is read through
-    // its own cache — persisting a second copy just to build from it costs
-    // an extra materialization pass and duplicate storage
-    val pre = edgesDf.storageLevel != StorageLevel.NONE
-    val e = edgesDf.select(col("src"), col("dst"))
-    if (!pre) e.persist(StorageLevel.MEMORY_AND_DISK)
-    var adj: DataFrame = null
-    var verts: DataFrame = null
-    try {
-      val edgeCount = e.count()
-      val p = graft.runtime.AdaptivePartitions.forRows(spark, edgeCount, numPartitions)
-      adj = cappedBlocks(e, "src", "dst", "degree", "dsts", blockCap(spark))
-        .repartition(p, col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      verts = adj.select(col("src").as("id"))
-        .union(e.select(col("dst").as("id")))
-        .distinct()
-        .repartition(p, col("id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      adj.count(); verts.count()
-      new PreparedGraph(spark, adj, verts, p, edgeCount)
-    } catch {
-      // a failed build must not strand persisted blocks: the PreparedGraph
-      // was never constructed, so its unpersist() is unreachable
-      case t: Throwable =>
-        if (adj != null) adj.unpersist(false)
-        if (verts != null) verts.unpersist(false)
-        throw t
-    } finally if (!pre) e.unpersist(false)
+    val e = s.input(edgesDf, col("src"), col("dst"))
+    val edgeCount = e.count()
+    val p = graft.runtime.AdaptivePartitions.forRows(spark, edgeCount, numPartitions)
+    // a failed build is released by the scope: the PreparedGraph is never
+    // constructed, so its unpersist() would be unreachable
+    val adj = s.cache(cappedBlocks(e, "src", "dst", "degree", "dsts", blockCap(spark))
+      .repartition(p, col("src")))
+    val verts = s.cache(adj.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id")))
+      .distinct()
+      .repartition(p, col("id")))
+    adj.count(); verts.count()
+    new PreparedGraph(spark, s.keep(adj), s.keep(verts), p, edgeCount)
   }
 }

@@ -56,21 +56,21 @@ object UrlDict {
     * tiny partition-count table). The result is the global url rank and is
     * independent of where the sampled range boundaries land.
     * @note the returned frame is localCheckpoint-backed — release with
-    *       `graft.runtime.IterationHygiene.releaseLocal` when done
-    *       (`Dataset.unpersist` cannot see a localCheckpoint's blocks). */
+    *       `graft.runtime.Storage.release` when done (`Dataset.unpersist`
+    *       cannot see a localCheckpoint's blocks). */
   def denseDict(urls: DataFrame, urlCol: String = "url",
-      numPartitions: Int = 0): DataFrame = {
+      numPartitions: Int = 0): DataFrame = graft.runtime.Storage.scope { s =>
     val spark = urls.sparkSession
     val d = urls.select(col(urlCol).as("url")).distinct()
     val p = if (numPartitions > 0) numPartitions
             else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val local = d.repartitionByRange(p, col("url"))
+    // counted once, ranked once — never recomputed
+    val local = s.local(d.repartitionByRange(p, col("url"))
       .sortWithinPartitions("url")
       .select(col("url"), monotonically_increasing_id().as("mid"))
       .select(col("url"),
         shiftright(col("mid"), 33).as("pid"),
-        col("mid").bitwiseAND((1L << 33) - 1).as("idx"))
-      .localCheckpoint(true) // counted once, ranked once — never recomputed
+        col("mid").bitwiseAND((1L << 33) - 1).as("idx")))
     val counts = local.groupBy("pid").agg(count(lit(1)).as("c"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
     // cumulative start offset per partition id (driver-side: one row per
@@ -80,10 +80,10 @@ object UrlDict {
       counts.map { case (pid, c) => val o = (pid, acc); acc += c; o }
     }
     val offsetDf = spark.createDataFrame(offsets.toSeq).toDF("pid", "off")
-    val out = local.join(broadcast(offsetDf), Seq("pid"))
-      .select((col("off") + col("idx")).as("id"), col("url"))
-      .localCheckpoint(true) // caller owns the result blocks
-    graft.runtime.IterationHygiene.releaseLocal(local)
+    // the caller owns the result's blocks
+    val out = s.keep(s.local(local.join(broadcast(offsetDf), Seq("pid"))
+      .select((col("off") + col("idx")).as("id"), col("url"))))
+    s.release(local)
     out
   }
 }

@@ -227,7 +227,8 @@ object Checkpoints {
   * rotator owns the rest: the resume prelude and exit handling
   * ([[loop]]), observe → rotate → await → trace → log ([[step]]), the
   * fallback when an observation does not surface ([[rotateObserved]]),
-  * and the state's storage ([[rotate]]).
+  * and the state's rotation ([[rotate]]). Made by a
+  * [[Storage.Scope.rotator]]: the scope owns every state's blocks.
   *
   * Rotation handles three concerns, all measured failure modes, together
   * (SURVEY.md §4.1):
@@ -238,23 +239,16 @@ object Checkpoints {
   *     task (de)serialization stack-overflows after ~50 supersteps;
   *     `localCheckpoint` truncates that too (plain plan surgery via
   *     `createDataFrame(df.rdd, schema)` does NOT);
-  *  3. storage leak — `Dataset.unpersist` does not release a
-  *     localCheckpoint's internal RDD blocks (they're outside the
-  *     CacheManager) → run-over-run degradation; we release the internal
-  *     RDD explicitly ([[IterationHygiene.releaseLocal]]) when rotating
-  *     past it.
+  *  3. storage leak — each superstep's blocks are released when the next
+  *     state replaces them, through the checkpoint's own RDD handle (see
+  *     [[Storage]]'s two release paths).
   * Durable parquet snapshots (CheckpointConfig cadence) are side-writes
   * of the same materialized state AND give resume points.
   */
-final class StateRotator(cfg: Option[CheckpointConfig], algo: String) {
+final class StateRotator private[runtime] (scope: Storage.Scope,
+    cfg: Option[CheckpointConfig], algo: String) {
 
-  // The state whose storage this rotator owns. Never released via
-  // Dataset.unpersist: that uncaches by PLAN EQUIVALENCE in the
-  // CacheManager and takes down any caller cache built over a sameResult
-  // plan (measured: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on algorithm results
-  // that are trivial projections of the final state) — the checkpoint's
-  // blocks are released via its internal RDD handle instead, which no
-  // CacheManager entry ever points at.
+  // the current state; its blocks are a local of `scope`
   private var owned: Option[DataFrame] = None
 
   private def own(df: DataFrame): DataFrame = {
@@ -263,8 +257,8 @@ final class StateRotator(cfg: Option[CheckpointConfig], algo: String) {
     // every state reference in the superstep) from compounding
     // exponentially across rotations — see graftplan.PlanStats
     val cp = org.apache.spark.sql.graftplan.PlanStats
-      .clampCheckpointStats(df.localCheckpoint(true))
-    owned.foreach(IterationHygiene.releaseLocal)
+      .clampCheckpointStats(scope.local(df))
+    owned.foreach(scope.release)
     owned = Some(cp)
     cp
   }
@@ -276,11 +270,10 @@ final class StateRotator(cfg: Option[CheckpointConfig], algo: String) {
     * committed snapshot. `body` receives `Some((superstep, state))` for a
     * resumed run and `None` for a fresh one; what a fresh run starts from
     * stays with the caller. On normal exit the superstep log is flushed.
-    * On an exception this run's buffered log rows are dropped and the
-    * current state's blocks released before rethrowing — nothing the
-    * failed run held outlives it, and the dropped rows belong to
-    * supersteps after the last snapshot, which a resume re-executes and
-    * re-logs. */
+    * On an exception this run's buffered log rows are dropped before
+    * rethrowing (the scope releases the state's blocks) — the dropped
+    * rows belong to supersteps after the last snapshot, which a resume
+    * re-executes and re-logs. */
   def loop[T](spark: SparkSession, fingerprint: => String, resume: Boolean)(
       body: Option[(Int, DataFrame)] => T): T = {
     val out =
@@ -292,7 +285,6 @@ final class StateRotator(cfg: Option[CheckpointConfig], algo: String) {
       catch {
         case t: Throwable =>
           cfg.foreach(Checkpoints.dropLog(_, algo))
-          releaseFinal()
           throw t
       }
     cfg.foreach(Checkpoints.flushLog(spark, _, algo))
@@ -372,20 +364,13 @@ final class StateRotator(cfg: Option[CheckpointConfig], algo: String) {
     * across the original and resumed runs. */
   def adopt(df: DataFrame): DataFrame = own(df)
 
-  /** Hand ownership of the FINAL state to the caller: its blocks stay
-    * alive for any result frame derived from it (one bounded |V|-sized
-    * block set per algorithm run; durable-checkpoint runs release fully
-    * on the next cadence). */
-  def close(): Unit = { owned = None }
-
-  /** Drop the FINAL state's blocks too — for auxiliary rotators whose
-    * last state nothing derived-but-unmaterialized depends on (e.g. the
-    * four side rotators of an SCC run once the result frame is
-    * materialized), and for a loop that exits by exception. Without this,
-    * each such state strands one |V|-sized localCheckpoint block set that
-    * no caller can ever release (`Dataset.unpersist` cannot reach it —
-    * see class doc #3). */
-  def releaseFinal(): Unit = { owned.foreach(IterationHygiene.releaseLocal); owned = None }
+  /** Hand the FINAL state to the caller: its blocks escape the scope and
+    * stay alive for any result frame derived from it (one bounded
+    * |V|-sized block set per algorithm run; see [[Storage]]'s ownership
+    * contract). Without `close()` the scope releases the final state at
+    * exit — right for an auxiliary rotator whose last state nothing
+    * derived-but-unmaterialized depends on. */
+  def close(): Unit = owned.foreach(scope.keep)
 }
 
 object StateRotator {
@@ -414,18 +399,4 @@ object StateRotator {
     scala.util.Try(scala.concurrent.Await.ready(obs.future,
         scala.concurrent.duration.Duration(10, "s"))).toOption
       .flatMap(_.value).collect { case scala.util.Success(r) if r.length > 0 => r }
-}
-
-/** Release helper for localCheckpoint-backed frames outside a rotator
-  * (memoized checkpoint frames, one-off truncations). */
-object IterationHygiene {
-
-  /** Unpersist a localCheckpoint's internal RDD blocks. `Dataset.unpersist`
-    * does not release them (they live outside the CacheManager) — the
-    * measured run-over-run leak; call this once nothing unmaterialized
-    * depends on the frame. */
-  def releaseLocal(df: DataFrame): Unit =
-    df.queryExecution.logical.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(false))
 }

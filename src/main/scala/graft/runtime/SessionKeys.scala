@@ -1,6 +1,6 @@
 package graft.runtime
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Stable, collision-free identity keys for per-session memoization.
   *
@@ -24,10 +24,12 @@ private[graft] object SessionKeys {
     }
   }
 
-  /** Remove entries of `memo` whose frame belongs to a stopped session. */
-  def purgeStopped[K](
-      memo: scala.collection.concurrent.TrieMap[K, DataFrame]): Unit =
-    memo.foreach { case (k, df) =>
-      if (df.sparkSession.sparkContext.isStopped) memo.remove(k)
+  /** Remove entries of `memo` whose value belongs to a stopped session
+    * (`session` reads it off the value: a frame's or a prepared
+    * structure's). */
+  def purgeStopped[K, V](memo: scala.collection.concurrent.TrieMap[K, V])(
+      session: V => SparkSession): Unit =
+    memo.foreach { case (k, v) =>
+      if (session(v).sparkContext.isStopped) memo.remove(k)
     }
 }

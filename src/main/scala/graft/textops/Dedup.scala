@@ -3,6 +3,8 @@ package graft.textops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.runtime.Storage
+
 /** Deduplication operators for a web-scale training corpus: exact,
   * n-gram Jaccard, MinHash+LSH, SimHash. All are shuffle-frugal
   * DataFrame plans: per-row signatures are pure expressions; candidate
@@ -55,48 +57,42 @@ object Dedup {
     * for small trusted corpora. */
   def ngramJaccardPairs(docs: DataFrame, k: Int = 3, threshold: Double = 0.8,
       idCol: String = "doc_id", textCol: String = "text",
-      maxShingleFreq: Int = 1000): DataFrame = {
+      maxShingleFreq: Int = 1000): DataFrame = Storage.scope { s =>
     // materialize the exploded shingle table ONCE: it feeds the size
     // aggregate, the frequency cap, and BOTH sides of the pair join —
     // left as a plan, the regexp-tokenize → shingle pipeline re-evaluates
-    // ~4× (Catalyst inlines it into every consumer)
+    // ~4× (Catalyst inlines it into every consumer). The scope releases
+    // it and the capped table after the pair join, or when it fails (the
+    // documented quadratic-risk stage)
     val sh = graft.runtime.Trace.stage("ngram_shingles") {
       // spread a few-split corpus before the CPU-heavy shingle stage
       // (one small parquet file would serialize it on one core)
-      graft.runtime.AdaptivePartitions.spread(docs)
+      s.local(graft.runtime.AdaptivePartitions.spread(docs)
         .select(col(idCol).as("id"),
-          explode(shingles(col(textCol), k)).as("s"))
-        .localCheckpoint(true)
+          explode(shingles(col(textCol), k)).as("s")))
     }
-    // releases in try/finally: a failure while materializing the pair join
-    // (the documented quadratic-risk stage) must not strand the two
-    // shingle-table-sized eager block sets for the JVM's life
-    var filtered: DataFrame = sh
-    try {
-      if (maxShingleFreq > 0) {
+    val filtered =
+      if (maxShingleFreq <= 0) sh
+      else {
         val freq = sh.groupBy("s").agg(count(lit(1)).as("f")).filter(col("f") <= maxShingleFreq)
         // the capped table also feeds both join sides — materialize it too
-        filtered = graft.runtime.Trace.stage("ngram_freq_cap") {
-          sh.join(freq.select("s"), "s").localCheckpoint(true)
+        graft.runtime.Trace.stage("ngram_freq_cap") {
+          s.local(sh.join(freq.select("s"), "s"))
         }
       }
-      val sizes = sh.groupBy("id").agg(count(lit(1)).as("n"))
-      val a = filtered.select(col("id").as("ia"), col("s"))
-      val b = filtered.select(col("id").as("ib"), col("s"))
-      val common = a.join(b, Seq("s")).filter(col("ia") < col("ib"))
-        .groupBy("ia", "ib").agg(count(lit(1)).as("common"))
-      val out = common
-        .join(sizes.select(col("id").as("ia"), col("n").as("na")), "ia")
-        .join(sizes.select(col("id").as("ib"), col("n").as("nb")), "ib")
-        .select(col("ia"), col("ib"),
-          (col("common").cast("double") /
-            (col("na") + col("nb") - col("common"))).as("jaccard"))
-        .filter(col("jaccard") >= threshold)
-      graft.runtime.Trace.stage("ngram_pair_join") { out.localCheckpoint(true) }
-    } finally {
-      graft.runtime.IterationHygiene.releaseLocal(sh)
-      if (filtered ne sh) graft.runtime.IterationHygiene.releaseLocal(filtered)
-    }
+    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n"))
+    val a = filtered.select(col("id").as("ia"), col("s"))
+    val b = filtered.select(col("id").as("ib"), col("s"))
+    val common = a.join(b, Seq("s")).filter(col("ia") < col("ib"))
+      .groupBy("ia", "ib").agg(count(lit(1)).as("common"))
+    val out = common
+      .join(sizes.select(col("id").as("ia"), col("n").as("na")), "ia")
+      .join(sizes.select(col("id").as("ib"), col("n").as("nb")), "ib")
+      .select(col("ia"), col("ib"),
+        (col("common").cast("double") /
+          (col("na") + col("nb") - col("common"))).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+    graft.runtime.Trace.stage("ngram_pair_join")(s.keep(s.local(out)))
   }
 
   // --------------------------------------------------------------- minhash
@@ -128,56 +124,47 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, k: Int = 3, numHashes: Int = 128,
       bands: Int = 16, threshold: Double = 0.8,
       idCol: String = "doc_id", textCol: String = "text",
-      portable: Boolean = false): DataFrame = {
+      portable: Boolean = false): DataFrame = Storage.scope { s =>
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
     // Materialize the shingle and band frames: the banded self-join plus
     // the verification joins would otherwise re-evaluate the
     // regexp-shingle → 128-hash pipeline ~5× (and Catalyst happily
     // inlines the shingle expression into every hash branch) — measured
-    // as a 50×+ blowup. localCheckpoint = eager, plan+lineage truncated.
+    // as a 50×+ blowup. localCheckpoint = eager, plan+lineage truncated;
+    // the scope releases both after the result is materialized, or when
+    // a materialization fails.
     // portable mode is ASCII-gated: a non-ASCII doc raises instead of
     // silently diverging from the DuckDB oracle family (ADVICE r4)
     val textIn = if (portable) PortableHash.assertAscii(col(textCol)) else col(textCol)
     // spread a few-split corpus before the shingle + numHashes-signature
     // stage (the query's CPU hot spot — measured 4.8 s on one core from a
     // single-file scan vs ~0.3 s spread)
-    val sh = graft.runtime.AdaptivePartitions.spread(docs)
-      .select(col(idCol).as("id"), shingles(textIn, k).as("sh"))
-      .localCheckpoint(true)
-    var banded: DataFrame = null
-    // releases in try/finally: the intermediate blocks are NOT
-    // CacheManager-tracked and a failed materialization would otherwise
-    // leak one shingle-table-sized block set per call
-    try {
-      val bandHash: (Column, Column) => Column =
-        if (portable) (b, sl) => PortableHash.polyCombine(sl, b)
-        else (b, sl) => xxhash64(b, sl)
-      banded = sh
-        .select(col("id"),
-          minhashSignatureOfShingles(col("sh"), numHashes, portable).as("sig"))
-        .select(col("id"),
-          posexplode(transform(sequence(lit(0), lit(bands - 1)),
-            b => bandHash(b, slice(col("sig"), b * r + 1, lit(r))))))
-        .select(col("id"), col("pos").as("band"), col("col").as("bh"))
-        .localCheckpoint(true)
-      val cand = banded.alias("x").join(banded.alias("y"),
-          col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-            col("x.id") < col("y.id"))
-        .select(col("x.id").as("ia"), col("y.id").as("ib")).distinct()
-      // verify candidates with exact Jaccard over shingle sets
-      val verified = cand
-        .join(sh.select(col("id").as("ia"), col("sh").as("sha")), "ia")
-        .join(sh.select(col("id").as("ib"), col("sh").as("shb")), "ib")
-        .select(col("ia"), col("ib"),
-          (size(array_intersect(col("sha"), col("shb"))).cast("double") /
-            size(array_union(col("sha"), col("shb")))).as("jaccard"))
-        .filter(col("jaccard") >= threshold)
-      verified.localCheckpoint(true) // materialize the (small) result
-    } finally {
-      graft.runtime.IterationHygiene.releaseLocal(sh)
-      if (banded != null) graft.runtime.IterationHygiene.releaseLocal(banded)
-    }
+    val sh = s.local(graft.runtime.AdaptivePartitions.spread(docs)
+      .select(col(idCol).as("id"), shingles(textIn, k).as("sh")))
+    val bandHash: (Column, Column) => Column =
+      if (portable) (b, sl) => PortableHash.polyCombine(sl, b)
+      else (b, sl) => xxhash64(b, sl)
+    val banded = s.local(sh
+      .select(col("id"),
+        minhashSignatureOfShingles(col("sh"), numHashes, portable).as("sig"))
+      .select(col("id"),
+        posexplode(transform(sequence(lit(0), lit(bands - 1)),
+          b => bandHash(b, slice(col("sig"), b * r + 1, lit(r))))))
+      .select(col("id"), col("pos").as("band"), col("col").as("bh")))
+    val cand = banded.alias("x").join(banded.alias("y"),
+        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
+          col("x.id") < col("y.id"))
+      .select(col("x.id").as("ia"), col("y.id").as("ib")).distinct()
+    // verify candidates with exact Jaccard over shingle sets
+    val verified = cand
+      .join(sh.select(col("id").as("ia"), col("sh").as("sha")), "ia")
+      .join(sh.select(col("id").as("ib"), col("sh").as("shb")), "ib")
+      .select(col("ia"), col("ib"),
+        (size(array_intersect(col("sha"), col("shb"))).cast("double") /
+          size(array_union(col("sha"), col("shb")))).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+    s.keep(s.local(verified)) // materialize the (small) result
   }
 
   // ------------------------------------------------------- dup clusters
@@ -196,25 +183,21 @@ object Dedup {
     * Scale shape: the pair graph is MUCH smaller than the corpus
     * (candidates were bucket-joined upstream), and CC is the engine's
     * log-round alternating-star algorithm — no driver-side union-find.
-    * @note the returned frame is PERSISTED — the caller owns it
-    *       (`unpersist()` when done; the engine-wide ownership contract). */
-  def dupClusters(pairs: DataFrame): DataFrame = {
+    * @note the returned frame is PERSISTED and the caller owns it: see
+    *       `runtime.Storage`'s ownership contract. */
+  def dupClusters(pairs: DataFrame): DataFrame = Storage.scope { s =>
     val cc = graft.runtime.Trace.stage("dedup_cc") {
-      graft.algos.ConnectedComponents
-        .run(pairs.select(col("ia").as("src"), col("ib").as("dst")))
+      s.own(graft.algos.ConnectedComponents
+        .run(pairs.select(col("ia").as("src"), col("ib").as("dst"))))
     }
     // fresh persisted projection (caller-owned, releasable via unpersist);
     // the CC result's own cache entry is released here — a lazy projection
     // over it would leave callers NO handle to that entry (the projection
     // is not sameResult with CC's cached plan, so unpersisting it is a
     // no-op and each call would pin a pair-graph-sized cache forever)
-    val out = cc
+    s.result(cc
       .select(col("id").as("doc_id"), col("component").as("cluster_id"),
-        (col("id") === col("component")).as("keep"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    cc.unpersist(false)
-    out
+        (col("id") === col("component")).as("keep")))
   }
 
   // --------------------------------------------------------------- simhash
@@ -267,7 +250,7 @@ object Dedup {
     * anyway (Manku et al. operate at 3). */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
       idCol: String = "doc_id", textCol: String = "text",
-      portable: Boolean = false): DataFrame = {
+      portable: Boolean = false): DataFrame = Storage.scope { s =>
     require(maxHamming >= 0 && maxHamming <= 7,
       s"maxHamming=$maxHamming out of range: must be in [0, 7] — larger " +
         "radii make the pair-bucket keys non-selective (quadratic candidate " +
@@ -275,49 +258,46 @@ object Dedup {
     // hash once, reused by both self-join sides and released after the
     // (small) result is materialized
     val sig = if (portable) simhashPortable(col(textCol)) else simhash(col(textCol))
-    val withSh = graft.runtime.AdaptivePartitions.spread(docs)
-      .select(col(idCol).as("id"), sig.as("sh"))
-      .localCheckpoint(true)
-    try {
-      // NOTE w = 64 (maxHamming = 0): 1L << 64 wraps to 1 in Java/Scala
-      // (shifts are mod 64), so (1L << w) - 1 would be 0 — an all-zero
-      // "mask" that put every doc in ONE bucket (all-pairs cross join).
-      // Band on the full signature instead.
-      def chunksOf(k: Int, w: Int): Column = {
-        val mask = if (w == 64) -1L else (1L << w) - 1
-        transform(sequence(lit(0), lit(k - 1)),
-          c => call_function("shiftrightunsigned", col("sh"), (c * w).cast("int"))
-            .bitwiseAND(mask))
+    val withSh = s.local(graft.runtime.AdaptivePartitions.spread(docs)
+      .select(col(idCol).as("id"), sig.as("sh")))
+    // NOTE w = 64 (maxHamming = 0): 1L << 64 wraps to 1 in Java/Scala
+    // (shifts are mod 64), so (1L << w) - 1 would be 0 — an all-zero
+    // "mask" that put every doc in ONE bucket (all-pairs cross join).
+    // Band on the full signature instead.
+    def chunksOf(k: Int, w: Int): Column = {
+      val mask = if (w == 64) -1L else (1L << w) - 1
+      transform(sequence(lit(0), lit(k - 1)),
+        c => call_function("shiftrightunsigned", col("sh"), (c * w).cast("int"))
+          .bitwiseAND(mask))
+    }
+    val banded =
+      if (maxHamming <= 3) {
+        val k = maxHamming + 1
+        val w = 64 / k // ≥ 16 bits
+        withSh.select(col("id"), col("sh"), posexplode(chunksOf(k, w)))
+          .select(col("id"), col("sh"), col("pos").as("b"), col("col").as("v"))
+      } else {
+        val k = maxHamming + 2
+        val w = 64 / k
+        val chunks = chunksOf(k, w)
+        val combos = flatten(transform(sequence(lit(0), lit(k - 2)), i =>
+          transform(sequence(i + 1, lit(k - 1)), j =>
+            struct((i * k + j).as("b"),
+              (element_at(chunks, (i + 1).cast("int")) * (1L << w) +
+                element_at(chunks, (j + 1).cast("int"))).as("v")))))
+        withSh.select(col("id"), col("sh"), explode(combos).as("e"))
+          .select(col("id"), col("sh"), col("e.b").as("b"), col("e.v").as("v"))
       }
-      val banded =
-        if (maxHamming <= 3) {
-          val k = maxHamming + 1
-          val w = 64 / k // ≥ 16 bits
-          withSh.select(col("id"), col("sh"), posexplode(chunksOf(k, w)))
-            .select(col("id"), col("sh"), col("pos").as("b"), col("col").as("v"))
-        } else {
-          val k = maxHamming + 2
-          val w = 64 / k
-          val chunks = chunksOf(k, w)
-          val combos = flatten(transform(sequence(lit(0), lit(k - 2)), i =>
-            transform(sequence(i + 1, lit(k - 1)), j =>
-              struct((i * k + j).as("b"),
-                (element_at(chunks, (i + 1).cast("int")) * (1L << w) +
-                  element_at(chunks, (j + 1).cast("int"))).as("v")))))
-          withSh.select(col("id"), col("sh"), explode(combos).as("e"))
-            .select(col("id"), col("sh"), col("e.b").as("b"), col("e.v").as("v"))
-        }
-      // hamming is deterministic per (ia, ib), so the verify filter
-      // commutes with distinct — filter FIRST so the dedup shuffle only
-      // carries verified pairs, not every band collision
-      val pairs = banded.alias("x").join(banded.alias("y"),
-          col("x.b") === col("y.b") && col("x.v") === col("y.v") &&
-            col("x.id") < col("y.id"))
-        .select(col("x.id").as("ia"), col("y.id").as("ib"),
-          call_function("bit_count", col("x.sh").bitwiseXOR(col("y.sh"))).cast("int").as("hamming"))
-        .filter(col("hamming") <= maxHamming)
-        .distinct()
-      pairs.localCheckpoint(true)
-    } finally graft.runtime.IterationHygiene.releaseLocal(withSh)
+    // hamming is deterministic per (ia, ib), so the verify filter
+    // commutes with distinct — filter FIRST so the dedup shuffle only
+    // carries verified pairs, not every band collision
+    val pairs = banded.alias("x").join(banded.alias("y"),
+        col("x.b") === col("y.b") && col("x.v") === col("y.v") &&
+          col("x.id") < col("y.id"))
+      .select(col("x.id").as("ia"), col("y.id").as("ib"),
+        call_function("bit_count", col("x.sh").bitwiseXOR(col("y.sh"))).cast("int").as("hamming"))
+      .filter(col("hamming") <= maxHamming)
+      .distinct()
+    s.keep(s.local(pairs))
   }
 }

@@ -150,16 +150,14 @@ object TextStats {
     * for the two consumers, the result is materialized, and tf is
     * RELEASED before returning, so repeated calls pin nothing but their
     * own result. The caller owns the returned frame's blocks — release
-    * with `runtime.IterationHygiene.releaseLocal` when done (`unpersist`
-    * cannot see a localCheckpoint's blocks). */
+    * with `runtime.Storage.release` when done (`unpersist` cannot see a
+    * localCheckpoint's blocks). */
   def tfidf(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = graft.runtime.Storage.scope { s =>
     val (tfPlan, n) = tfParts(docs, idCol, textCol)
-    val tf = tfPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      tf.count() // populate once: the df branch and the join probe side read the cache
-      tfidfOf(tf, n).localCheckpoint(true)
-    } finally tf.unpersist(false) // release on failure too — no stranded cache
+    val tf = s.cache(tfPlan)
+    tf.count() // populate once: the df branch and the join probe side read the cache
+    s.keep(s.local(tfidfOf(tf, n)))
   }
 
   /** Map-side-combined (doc_id, token, tf) counts + the 1-row corpus-size

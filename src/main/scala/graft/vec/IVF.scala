@@ -2,7 +2,6 @@ package graft.vec
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** IVF (inverted-file) approximate nearest neighbor — the classic
   * coarse-quantizer scale path (Sivic & Zisserman '03; FAISS's IVF family):
@@ -48,12 +47,12 @@ object IVF {
     * Centroids: (cid 0..k-1, cv), deterministic for a given (corpus ids,
     * k, seed).
     * @note the returned frame is localCheckpoint-backed (k rows) — release
-    *       with `runtime.IterationHygiene.releaseLocal` when done
-    *       (`unpersist` cannot see a localCheckpoint's blocks). */
+    *       with `runtime.Storage.release` when done (`unpersist` cannot
+    *       see a localCheckpoint's blocks). */
   def trainCentroids(corpus: DataFrame, k: Int, iters: Int = 10,
       seed: Long = 42L, idCol: String = "vec_id",
       vecCol: String = "embedding", initRounds: Int = 5,
-      maxTrainRows: Long = 200000L): DataFrame = {
+      maxTrainRows: Long = 200000L): DataFrame = graft.runtime.Storage.scope { s =>
     val spark = corpus.sparkSession
     import spark.implicits._
     require(k >= 1, s"k must be >= 1, got $k")
@@ -61,98 +60,94 @@ object IVF {
       Similarity.normalized(col(vecCol)).as("v"))
     val total = corpus.count()
     // enforced sample: deterministic id-hash admission, ≈maxTrainRows rows
-    val unit = (if (total <= maxTrainRows) unitAll
+    val unit = s.cache(if (total <= maxTrainRows) unitAll
       else unitAll.filter(
         pmod(xxhash64(col("id"), lit(seed)), lit(1000000L)) <
           lit((1000000.0 * maxTrainRows / total).toLong)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val sampleN = unit.count()
-      require(k <= sampleN,
-        s"k=$k exceeds the training sample size $sampleN — fewer distinct " +
-          "vectors than requested cells (raise maxTrainRows or lower k)")
+    val sampleN = unit.count()
+    require(k <= sampleN,
+      s"k=$k exceeds the training sample size $sampleN — fewer distinct " +
+        "vectors than requested cells (raise maxTrainRows or lower k)")
 
-      // ---- k-means‖ oversampling init (O(initRounds) jobs, not O(k)) ----
-      val firstSeed = unit.orderBy(xxhash64(col("id"), lit(seed)), asc("id"))
-        .select(col("id"), col("v")).head()
-      val candidates = scala.collection.mutable.LinkedHashMap[Long, Array[Double]](
-        firstSeed.getLong(0) -> firstSeed.getSeq[Double](1).toArray)
-      val ell = 2L * k
-      var round = 0
-      while (round < initRounds && candidates.size < sampleN) {
-        round += 1
-        val cands = broadcast(candidates.values.toSeq.map(Tuple1(_)).toDF("cv"))
-        // d² to the candidate set + the admission uniform, one pass
-        val scored = unit.crossJoin(cands)
-          .groupBy("id").agg(
-            (lit(2.0) - lit(2.0) * max(Similarity.dot(col("v"), col("cv")))).as("d2"),
-            first(col("v")).as("v"))
-        val phiRow = scored.agg(sum("d2")).first()
-        val phi = if (phiRow.isNullAt(0)) 0.0 else phiRow.getDouble(0)
-        if (phi <= 0.0) round = initRounds // every point covered exactly
-        else {
-          val admitted = scored.filter(
-            (pmod(xxhash64(col("id"), lit(seed + round)), lit(1000000L)) / 1e6) <
-              least(lit(1.0), lit(ell.toDouble) * col("d2") / lit(phi)))
-            .select(col("id"), col("v")).orderBy("id").collect()
-          admitted.foreach(r =>
-            candidates.getOrElseUpdate(r.getLong(0), r.getSeq[Double](1).toArray))
-        }
-      }
-      // low-diversity guard (ADVICE r3): a duplicate-heavy corpus can cover
-      // every point exactly after one round (φ ≤ 0 with as few as ONE
-      // candidate), leaving fewer than k candidates even though k ≤ sampleN
-      // held — pad deterministically (hash-ordered distinct ids not yet
-      // candidates) so driverKMeans always receives ≥ k points
-      if (candidates.size < k) {
-        val needed = k - candidates.size
-        val extra = unit
-          .filter(!col("id").isInCollection(candidates.keySet))
-          .orderBy(xxhash64(col("id"), lit(seed + 7919)), asc("id"))
-          .limit(needed)
-          .select(col("id"), col("v")).collect()
-        extra.foreach(r =>
+    // ---- k-means‖ oversampling init (O(initRounds) jobs, not O(k)) ----
+    val firstSeed = unit.orderBy(xxhash64(col("id"), lit(seed)), asc("id"))
+      .select(col("id"), col("v")).head()
+    val candidates = scala.collection.mutable.LinkedHashMap[Long, Array[Double]](
+      firstSeed.getLong(0) -> firstSeed.getSeq[Double](1).toArray)
+    val ell = 2L * k
+    var round = 0
+    while (round < initRounds && candidates.size < sampleN) {
+      round += 1
+      val cands = broadcast(candidates.values.toSeq.map(Tuple1(_)).toDF("cv"))
+      // d² to the candidate set + the admission uniform, one pass
+      val scored = unit.crossJoin(cands)
+        .groupBy("id").agg(
+          (lit(2.0) - lit(2.0) * max(Similarity.dot(col("v"), col("cv")))).as("d2"),
+          first(col("v")).as("v"))
+      val phiRow = scored.agg(sum("d2")).first()
+      val phi = if (phiRow.isNullAt(0)) 0.0 else phiRow.getDouble(0)
+      if (phi <= 0.0) round = initRounds // every point covered exactly
+      else {
+        val admitted = scored.filter(
+          (pmod(xxhash64(col("id"), lit(seed + round)), lit(1000000L)) / 1e6) <
+            least(lit(1.0), lit(ell.toDouble) * col("d2") / lit(phi)))
+          .select(col("id"), col("v")).orderBy("id").collect()
+        admitted.foreach(r =>
           candidates.getOrElseUpdate(r.getLong(0), r.getSeq[Double](1).toArray))
       }
-      // candidate weights: sample points per nearest candidate (one pass)
-      val candDf = broadcast(candidates.toSeq.zipWithIndex
-        .map { case ((_, v), i) => (i.toLong, v) }.toDF("cid", "cv"))
-      val weights = assignCells(unit, candDf, "id", "v")
-        .groupBy("cid").agg(count(lit(1)).as("w"))
-        .collect().map(r => r.getLong(0).toInt -> r.getLong(1).toDouble).toMap
+    }
+    // low-diversity guard (ADVICE r3): a duplicate-heavy corpus can cover
+    // every point exactly after one round (φ ≤ 0 with as few as ONE
+    // candidate), leaving fewer than k candidates even though k ≤ sampleN
+    // held — pad deterministically (hash-ordered distinct ids not yet
+    // candidates) so driverKMeans always receives ≥ k points
+    if (candidates.size < k) {
+      val needed = k - candidates.size
+      val extra = unit
+        .filter(!col("id").isInCollection(candidates.keySet))
+        .orderBy(xxhash64(col("id"), lit(seed + 7919)), asc("id"))
+        .limit(needed)
+        .select(col("id"), col("v")).collect()
+      extra.foreach(r =>
+        candidates.getOrElseUpdate(r.getLong(0), r.getSeq[Double](1).toArray))
+    }
+    // candidate weights: sample points per nearest candidate (one pass)
+    val candDf = broadcast(candidates.toSeq.zipWithIndex
+      .map { case ((_, v), i) => (i.toLong, v) }.toDF("cid", "cv"))
+    val weights = assignCells(unit, candDf, "id", "v")
+      .groupBy("cid").agg(count(lit(1)).as("w"))
+      .collect().map(r => r.getLong(0).toInt -> r.getLong(1).toDouble).toMap
 
-      // ---- driver-local weighted k-means++ + Lloyd over the candidates ----
-      val pts = candidates.values.toArray
-      val w = pts.indices.map(i => weights.getOrElse(i, 0.0)).toArray
-      val init = driverKMeans(pts, w, k, iters = 20, seed)
+    // ---- driver-local weighted k-means++ + Lloyd over the candidates ----
+    val pts = candidates.values.toArray
+    val w = pts.indices.map(i => weights.getOrElse(i, 0.0)).toArray
+    val init = driverKMeans(pts, w, k, iters = 20, seed)
 
-      // ---- distributed spherical Lloyd over the sample ----
-      var cents = init.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-        .toSeq.toDF("cid", "cv").localCheckpoint(true)
-      for (_ <- 1 to iters) {
-        val assigned = assignCells(unit.select(col("id"), col("v")), cents, "id", "v")
-        // zero-norm guard (same case driverKMeans guards): a cell whose
-        // members sum to the exact zero vector (e.g. mirrored ±v pairs)
-        // would normalize to an all-NaN centroid, and Spark orders NaN
-        // ABOVE every double, so next round's max_by would route EVERY
-        // vector into the poisoned cell — null it out instead so the
-        // coalesce below keeps the previous centroid
-        val means = assigned.join(unit, Seq("id"))
-          .groupBy("cid")
-          .agg(org.apache.spark.sql.graftvec.VectorExpressions.vectorSum(col("v")).as("sv"))
-          .select(col("cid"),
-            when(Similarity.dot(col("sv"), col("sv")) > 0,
-              Similarity.normalized(col("sv"))).as("cv"))
-        // keep previous centroid for cells that lost every member
-        val next = cents.select(col("cid"), col("cv").as("prev"))
-          .join(means, Seq("cid"), "left")
-          .select(col("cid"), coalesce(col("cv"), col("prev")).as("cv"))
-          .localCheckpoint(true)
-        graft.runtime.IterationHygiene.releaseLocal(cents)
-        cents = next
-      }
-      cents
-    } finally unit.unpersist(false) // release on failure too
+    // ---- distributed spherical Lloyd over the sample ----
+    var cents = s.local(init.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toSeq.toDF("cid", "cv"))
+    for (_ <- 1 to iters) {
+      val assigned = assignCells(unit.select(col("id"), col("v")), cents, "id", "v")
+      // zero-norm guard (same case driverKMeans guards): a cell whose
+      // members sum to the exact zero vector (e.g. mirrored ±v pairs)
+      // would normalize to an all-NaN centroid, and Spark orders NaN
+      // ABOVE every double, so next round's max_by would route EVERY
+      // vector into the poisoned cell — null it out instead so the
+      // coalesce below keeps the previous centroid
+      val means = assigned.join(unit, Seq("id"))
+        .groupBy("cid")
+        .agg(org.apache.spark.sql.graftvec.VectorExpressions.vectorSum(col("v")).as("sv"))
+        .select(col("cid"),
+          when(Similarity.dot(col("sv"), col("sv")) > 0,
+            Similarity.normalized(col("sv"))).as("cv"))
+      // keep previous centroid for cells that lost every member
+      val next = s.local(cents.select(col("cid"), col("cv").as("prev"))
+        .join(means, Seq("cid"), "left")
+        .select(col("cid"), coalesce(col("cv"), col("prev")).as("cv")))
+      s.release(cents)
+      cents = next
+    }
+    s.keep(cents)
   }
 
   /** Seeded weighted spherical k-means++ init + Lloyd on the DRIVER —

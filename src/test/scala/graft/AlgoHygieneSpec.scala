@@ -5,6 +5,8 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.algos.{ConnectedComponents, LabelPropagation, ShortestPaths,
   StronglyConnectedComponents, SVDPlusPlus}
+import graft.graph.PreparedGraph
+import graft.runtime.CheckpointConfig
 
 /** Regression pins for the round-5 algorithm-hygiene review: cap behavior
   * fails loudly instead of returning corrupt/partial output, results obey
@@ -12,18 +14,57 @@ import graft.algos.{ConnectedComponents, LabelPropagation, ShortestPaths,
   * sets are released, and argmax tie-breaks can't wrap on Long.MinValue. */
 class AlgoHygieneSpec extends SparkTestBase {
 
+  /** Ids of the persisted RDDs and the number of CacheManager entries. */
+  private def storage(): (Set[Int], Int) =
+    (spark.sparkContext.getPersistentRDDs.keySet.toSet,
+      org.apache.spark.sql.graftcheck.CacheEntries.count(spark))
+
+  /** A failed call released every cache and checkpoint it made. */
+  private def assertNothingStranded(before: (Set[Int], Int)): Unit = {
+    val (rdds, entries) = storage()
+    assert((rdds -- before._1).isEmpty, s"RDDs stranded: ${rdds -- before._1}")
+    assert(entries == before._2, s"CacheManager entries ${before._2} -> $entries")
+  }
+
   test("CC fails loudly when maxRounds trips before convergence " +
     "(silent duplicate-label corruption otherwise)") {
     // a 40-vertex path needs several small/large-star rounds; cap at 1
     val chain = edgesDF((0L until 39L).map(i => (i, i + 1)))
+    val before = storage()
     val ex = intercept[IllegalArgumentException] {
       ConnectedComponents.run(chain, ConnectedComponents.Config(maxRounds = 1))
     }
     assert(ex.getMessage.contains("did not converge"))
+    // the vertex universe and the last rotated state are released too
+    assertNothingStranded(before)
     // and the same graph converges fine under the default cap
     val ok = ConnectedComponents.run(chain)
     assert(ok.select(countDistinct(col("component"))).first().getLong(0) == 1L)
     ok.unpersist(true)
+  }
+
+  test("CC refused by the checkpoint guard strands no cache or checkpoint") {
+    val ck = CheckpointConfig(tempDir("ccguard").toString, "guard", every = 2)
+    val cfg = ConnectedComponents.Config(checkpoint = Some(ck))
+    ConnectedComponents.run(edgesDF(Seq((1L, 2L), (2L, 3L))), cfg).unpersist(true)
+    // a fresh run on different edges in the same dir/runId is refused
+    val before = storage()
+    val ex = intercept[IllegalArgumentException] {
+      ConnectedComponents.run(edgesDF(Seq((1L, 2L), (5L, 6L))), cfg)
+    }
+    assert(ex.getMessage.contains("refusing to run"))
+    assertNothingStranded(before)
+  }
+
+  test("a PreparedGraph build that fails strands no cache") {
+    val bad = edgesDF((0L until 20L).map(i => (i, i + 1)))
+      .select(col("src"),
+        when(col("dst") === 7L, raise_error(lit("bad edge 7"))).otherwise(col("dst")).as("dst"))
+    val before = storage()
+    val ex = intercept[Exception](PreparedGraph(bad))
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("bad edge 7"))), ex)
+    assertNothingStranded(before)
   }
 
   test("LPA tie-break: Long.MinValue label WINS ties (negating the label " +

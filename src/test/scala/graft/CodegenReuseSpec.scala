@@ -28,7 +28,7 @@ class CodegenReuseSpec extends SparkTestBase {
 
   test("a warm Pipeline.run compiles no generated code") {
     val (cold, warm) = coldAndWarmCompiles { () =>
-      val dir = java.nio.file.Files.createTempDirectory("cgpipe").toString
+      val dir = tempDir("cgpipe").toString
       Pipeline.run(spark, dir, numPages = 300, prIters = 3)
     }
     assert(warm == 0, s"warm run compiled $warm classes (cold run: $cold)")

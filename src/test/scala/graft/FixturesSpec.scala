@@ -14,7 +14,7 @@ class FixturesSpec extends SparkTestBase {
     df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
   test("edge list loader matches GraphLoader parse semantics (probe)") {
-    val p = java.nio.file.Files.createTempFile("probe", ".txt")
+    val p = tempDir("probe").resolve("edges.txt")
     java.nio.file.Files.write(p, "# comment\n1 2\n1 2\n2 2\n3\t1\n".getBytes)
     val e = EdgeOps.edgeListFile(spark, p.toString)
       .collect().map(r => s"${r.getLong(0)}->${r.getLong(1)}").sorted.mkString(",")

@@ -17,7 +17,7 @@ class GraphLayerHygieneSpec extends SparkTestBase {
 
   test("edgeListFile fails loudly on malformed lines (reference throws " +
     "too; silent null-id phantom edges are worse)") {
-    val p = java.nio.file.Files.createTempFile("bad", ".txt")
+    val p = tempDir("bad").resolve("edges.txt")
     java.nio.file.Files.write(p, "1 2\n3 x\n".getBytes)
     val ex = intercept[Exception] {
       EdgeOps.edgeListFile(spark, p.toString).collect()
@@ -27,10 +27,10 @@ class GraphLayerHygieneSpec extends SparkTestBase {
     assert(messages(ex).exists(_.contains("invalid line")),
       s"expected a line-identifying error, got: ${messages(ex)}")
     // one-token and indented-comment lines fail too; valid files still parse
-    val p2 = java.nio.file.Files.createTempFile("bad2", ".txt")
+    val p2 = tempDir("bad2").resolve("edges.txt")
     java.nio.file.Files.write(p2, "1 2\n3\n".getBytes)
     intercept[Exception] { EdgeOps.edgeListFile(spark, p2.toString).collect() }
-    val p3 = java.nio.file.Files.createTempFile("ok", ".txt")
+    val p3 = tempDir("ok").resolve("edges.txt")
     java.nio.file.Files.write(p3, "# c\n1 2 extra\n 3 4\n".getBytes)
     val got = EdgeOps.edgeListFile(spark, p3.toString)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

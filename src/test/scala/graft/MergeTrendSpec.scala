@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-class MergeTrendSpec extends AnyFunSuite {
+class MergeTrendSpec extends AnyFunSuite with TempDirs {
 
   private def write(dir: Path, name: String, json: String): String = {
     val p = dir.resolve(name)
@@ -26,7 +26,7 @@ class MergeTrendSpec extends AnyFunSuite {
     """"pagerank":{"points":[{"size":10,"rows":10,"sec":9.99}],"exponent":null,"r2":null}"""
 
   test("merges parts, preserves first-seen order, last part wins per workload") {
-    val dir = Files.createTempDirectory("mergetrend")
+    val dir = tempDir("mergetrend")
     val out = dir.resolve("merged.json").toString
     MergeTrend.main(Array(out,
       write(dir, "a.json", part(10, wlA)),
@@ -43,7 +43,7 @@ class MergeTrendSpec extends AnyFunSuite {
   }
 
   test("refuses to merge parts captured under different protocols") {
-    val dir = Files.createTempDirectory("mergetrend")
+    val dir = tempDir("mergetrend")
     val out = dir.resolve("merged.json").toString
     val e = intercept[IllegalArgumentException] {
       MergeTrend.main(Array(out,

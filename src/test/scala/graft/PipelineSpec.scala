@@ -52,7 +52,7 @@ class PipelineSpec extends SparkTestBase {
   test("north-star Pipeline entry point: pages → extract → encode → " +
       "checkpointed PR+CC → TableIO sinks; --resume re-run recomputes " +
       "nothing and agrees") {
-    val dir = java.nio.file.Files.createTempDirectory("pipe").toString
+    val dir = tempDir("pipe").toString
     val r1 = graft.Pipeline.run(spark, dir, numPages = 1500,
       resume = false, prIters = 8)
     assert(r1.pages == 1500 && r1.edges > 1000 && r1.components >= 1)
@@ -74,7 +74,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("Pipeline.run leaves no superstep-log buffer behind") {
-    val dir = java.nio.file.Files.createTempDirectory("pipe3").toString
+    val dir = tempDir("pipe3").toString
     graft.Pipeline.run(spark, dir, numPages = 300, resume = false, prIters = 2)
     val left = graft.runtime.Checkpoints.bufferedLogKeys.filter(_._1.startsWith(dir))
     assert(left.isEmpty, s"log buffers left behind: $left")
@@ -82,7 +82,7 @@ class PipelineSpec extends SparkTestBase {
 
   test("pipeline pages stage is input data: an existing committed table " +
       "is reused (never overwritten), a torn one fails loudly (review r5)") {
-    val dir = java.nio.file.Files.createTempDirectory("pipe2").toString
+    val dir = tempDir("pipe2").toString
     val r1 = graft.Pipeline.run(spark, dir, numPages = 300,
       resume = false, prIters = 2)
     assert(r1.pages == 300)

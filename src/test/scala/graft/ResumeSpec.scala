@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 import graft.algos.{ConnectedComponents, LabelPropagation, PageRank}
 import graft.graph.{PreparedGraph, Pregel}
-import graft.runtime.{CheckpointConfig, Checkpoints, StateRotator}
+import graft.runtime.{CheckpointConfig, Checkpoints, StateRotator, Storage}
 
 /** North-rule resumability: jobs resume mid-iteration from the superstep
   * checkpoint store and produce bit-identical results; per-partition
@@ -13,7 +13,7 @@ class ResumeSpec extends SparkTestBase {
 
   test("pagerank resumed from superstep checkpoint is bit-identical") {
     val edges = edgesDF(randomEdges(7, n = 80, m = 300))
-    val dir = java.nio.file.Files.createTempDirectory("resume").toString
+    val dir = tempDir("resume").toString
     val ck = CheckpointConfig(dir, "run1", every = 4)
     // interrupted run: stops after superstep 8 (checkpoints at 4 and 8)
     PageRank.run(edges, PageRank.Config(numIter = 8, checkpoint = Some(ck),
@@ -31,7 +31,7 @@ class ResumeSpec extends SparkTestBase {
   test("resume under a changed numeric config fails loudly instead of " +
       "silently mixing parameterizations (review r5)") {
     val edges = edgesDF(randomEdges(13, n = 60, m = 200))
-    val dir = java.nio.file.Files.createTempDirectory("resume_fp").toString
+    val dir = tempDir("resume_fp").toString
     val ck = CheckpointConfig(dir, "fp1", every = 3)
     PageRank.run(edges, PageRank.Config(numIter = 6, checkpoint = Some(ck)))
     val e = intercept[IllegalArgumentException] {
@@ -51,7 +51,7 @@ class ResumeSpec extends SparkTestBase {
       "loudly: it would overwrite only the snapshots its cadence reaches " +
       "and leave the old config's tail as mixed state (review r5)") {
     val edges = edgesDF(randomEdges(17, n = 40, m = 120))
-    val dir = java.nio.file.Files.createTempDirectory("resume_mix").toString
+    val dir = tempDir("resume_mix").toString
     val ck = CheckpointConfig(dir, "mix1", every = 2)
     PageRank.run(edges, PageRank.Config(numIter = 4, checkpoint = Some(ck)))
       .unpersist(false)
@@ -71,7 +71,7 @@ class ResumeSpec extends SparkTestBase {
       "(review r5)") {
     val edgesA = edgesDF(randomEdges(19, n = 60, m = 200))
     val edgesB = edgesDF(randomEdges(23, n = 60, m = 200)) // different graph
-    val dir = java.nio.file.Files.createTempDirectory("resume_input").toString
+    val dir = tempDir("resume_input").toString
     val ck = CheckpointConfig(dir, "in1", every = 3)
     PageRank.run(edgesA, PageRank.Config(numIter = 6, checkpoint = Some(ck)))
       .unpersist(false)
@@ -105,7 +105,7 @@ class ResumeSpec extends SparkTestBase {
       "fails loudly instead of adopting stale labels") {
     val pairsA = randomEdges(19, n = 60, m = 200)
     val edgesB = edgesDF(randomEdges(23, n = 60, m = 200)) // different graph
-    val dir = java.nio.file.Files.createTempDirectory("resume_lpa_input").toString
+    val dir = tempDir("resume_lpa_input").toString
     val ck = CheckpointConfig(dir, "inlpa", every = 2)
     LabelPropagation.run(edgesDF(pairsA), LabelPropagation.Config(maxSteps = 2,
       checkpoint = Some(ck))).unpersist(false)
@@ -122,7 +122,7 @@ class ResumeSpec extends SparkTestBase {
 
   test("a torn _config write (killed first run) is repaired, not treated " +
       "as recorded — the drift guard stays armed (review r5)") {
-    val dir = java.nio.file.Files.createTempDirectory("resume_torn").toString
+    val dir = tempDir("resume_torn").toString
     val ck = CheckpointConfig(dir, "torn1", every = 1)
     Checkpoints.recordFingerprint(spark, ck, "pagerank", "fpA")
     // tear it: the dir exists (exists()=true) but the commit marker is
@@ -143,7 +143,7 @@ class ResumeSpec extends SparkTestBase {
 
   test("tol-mode pagerank resumed from checkpoint is bit-identical") {
     val edges = edgesDF(randomEdges(11, n = 80, m = 300))
-    val dir = java.nio.file.Files.createTempDirectory("resume_tol").toString
+    val dir = tempDir("resume_tol").toString
     val ck = CheckpointConfig(dir, "tol1", every = 3)
     // interrupted run converges and checkpoints along the way; resuming
     // from its latest snapshot replays the identical tail
@@ -159,7 +159,7 @@ class ResumeSpec extends SparkTestBase {
 
   test("connected components resumed from checkpoint is bit-identical") {
     val edges = edgesDF(randomEdges(12, n = 100, m = 220))
-    val dir = java.nio.file.Files.createTempDirectory("resume_cc").toString
+    val dir = tempDir("resume_cc").toString
     val ck = CheckpointConfig(dir, "cc1", every = 1)
     val full = ConnectedComponents.run(edges,
       ConnectedComponents.Config(checkpoint = Some(ck)))
@@ -172,7 +172,7 @@ class ResumeSpec extends SparkTestBase {
 
   test("label propagation resumed mid-run matches an uninterrupted run") {
     val edges = edgesDF(randomEdges(13, n = 80, m = 240))
-    val dir = java.nio.file.Files.createTempDirectory("resume_lpa").toString
+    val dir = tempDir("resume_lpa").toString
     val ck = CheckpointConfig(dir, "lpa1", every = 2)
     // interrupted at step 2 (snapshot), resume continues 3..4
     LabelPropagation.run(edges, LabelPropagation.Config(maxSteps = 2,
@@ -189,7 +189,7 @@ class ResumeSpec extends SparkTestBase {
       "run (min-label CC on the combinator, checkpointed supersteps)") {
     import graft.graph.{PreparedGraph, Pregel}
     val pairs = randomEdges(17, n = 80, m = 80)
-    val dir = java.nio.file.Files.createTempDirectory("resume_pregel").toString
+    val dir = tempDir("resume_pregel").toString
     val ck = CheckpointConfig(dir, "ml1", every = 1)
     def run(g: PreparedGraph, maxIter: Int, resume: Boolean) = {
       val init = g.vertices.select(col("id"), col("id").as("label"),
@@ -246,7 +246,7 @@ class ResumeSpec extends SparkTestBase {
     // loop is still running when the vprog throws building superstep 5
     val g = PreparedGraph(edgesDF((0L until 11L).map(i => (i + 1, i))))
     g.numVertices
-    val dir = java.nio.file.Files.createTempDirectory("resume_throw").toString
+    val dir = tempDir("resume_throw").toString
     val ck = CheckpointConfig(dir, "throw1", every = 3)
     val cfg = Pregel.Config(checkpoint = Some(ck), algo = "minlabel_throw")
     val before = spark.sparkContext.getPersistentRDDs.keySet
@@ -290,19 +290,21 @@ class ResumeSpec extends SparkTestBase {
     val metrics = Seq(count(lit(1)).as("c"),
       coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L)).as("h"),
       Checkpoints.partitionCountsMetric.as("pcounts"))
-    val obs = org.apache.spark.sql.Observation("pcounts_parity")
-    val rot = new StateRotator(None, "parity")
-    val mat = rot.rotate(df.observe(obs, metrics.head, metrics.tail: _*), 1)
-    val observed = StateRotator.awaitObservedRow(obs)
-    assert(observed.isDefined, "observation did not surface")
-    val fused = observed.get.getMap[Int, Long](2).toMap
-    val job = mat.select(spark_partition_id().as("p"))
-      .groupBy("p").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(fused == job)
-    assert(fused.values.sum == 1000L)
-    assert(StateRotator.measure(mat, metrics) == observed.get)
-    rot.releaseFinal()
+    // the scope releases the rotator's final state
+    Storage.scope { s =>
+      val obs = org.apache.spark.sql.Observation("pcounts_parity")
+      val rot = s.rotator(None, "parity")
+      val mat = rot.rotate(df.observe(obs, metrics.head, metrics.tail: _*), 1)
+      val observed = StateRotator.awaitObservedRow(obs)
+      assert(observed.isDefined, "observation did not surface")
+      val fused = observed.get.getMap[Int, Long](2).toMap
+      val job = mat.select(spark_partition_id().as("p"))
+        .groupBy("p").count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      assert(fused == job)
+      assert(fused.values.sum == 1000L)
+      assert(StateRotator.measure(mat, metrics) == observed.get)
+    }
   }
 
   /** (superstep, Σrows, active_count) per logged superstep, after checking
@@ -325,7 +327,7 @@ class ResumeSpec extends SparkTestBase {
     val pairs = randomEdges(8, n = 50, m = 150)
     val edges = edgesDF(pairs)
     val nV = pairs.flatMap(p => Seq(p._1, p._2)).distinct.size.toLong
-    val dir = java.nio.file.Files.createTempDirectory("sslog").toString
+    val dir = tempDir("sslog").toString
     val ck = CheckpointConfig(dir, "run2", every = 2)
     PageRank.run(edges, PageRank.Config(numIter = 4, checkpoint = Some(ck)))
       .unpersist(false)

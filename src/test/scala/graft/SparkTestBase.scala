@@ -1,12 +1,31 @@
 package graft
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+/** Scratch directories for a suite: each [[tempDir]] is a fresh dir under
+  * `java.io.tmpdir`, deleted with everything in it after the suite. */
+trait TempDirs extends BeforeAndAfterAll { this: AnyFunSuite =>
+
+  private val dirs = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    dirs.synchronized(dirs += d)
+    d
+  }
+
+  override def afterAll(): Unit =
+    try dirs.synchronized(dirs.foreach(d => FileUtils.deleteQuietly(d.toFile)))
+    finally super.afterAll()
+}
 
 /** One shared local SparkSession across all suites (getOrCreate), built
   * by the engine's own session factory so specs run under the same join,
   * AQE and codegen-cache policy as the driver mains. */
-trait SparkTestBase extends AnyFunSuite {
+trait SparkTestBase extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = {
     val s = graft.runtime.Sessions.local(4, 8, "graft-test")
     s.sparkContext.setLogLevel("ERROR")

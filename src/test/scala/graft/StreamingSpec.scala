@@ -41,7 +41,7 @@ class StreamingSpec extends SparkTestBase {
     assert(streamed == batch && streamed.size == 5)
 
     // parquet sink: AvailableNow drains a fresh stream into the batch layout
-    val dir = java.nio.file.Files.createTempDirectory("estream").toString
+    val dir = tempDir("estream").toString
     val in2 = MemoryStream[(String, Array[Byte])]
     in2.addData((b1 ++ b2): _*)
     val q2 = StreamOps.writeEdgeStream(

@@ -70,7 +70,7 @@ class StructuralOpsSpec extends SparkTestBase {
   }
 
   test("edge list loader canonical orientation flips per edge without dedup") {
-    val p = java.nio.file.Files.createTempFile("canon", ".txt")
+    val p = tempDir("canon").resolve("edges.txt")
     java.nio.file.Files.write(p, "3 1\n1 3\n2 5\n".getBytes)
     val c = EdgeOps.edgeListFile(spark, p.toString, canonicalOrientation = true)
       .collect().map(x => (x.getLong(0), x.getLong(1)))

@@ -12,7 +12,7 @@ class TableIOSpec extends SparkTestBase {
 
   test("parquet impl: write/read round-trip, append, exists, children") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("tio").toString
+    val base = tempDir("tio").toString
     val io = ParquetTableIO
     val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
 
@@ -43,7 +43,7 @@ class TableIOSpec extends SparkTestBase {
       "markerless table (object-store tuning, non-Spark writer) is not " +
       "branded torn (review r5)") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("tio4").toString
+    val base = tempDir("tio4").toString
     val io = ParquetTableIO
     io.write(Seq((1L, "a")).toDF("k", "v"), s"$base/p/superstep=1")
     // simulate a markerless writer: drop the marker the committer left
@@ -62,7 +62,7 @@ class TableIOSpec extends SparkTestBase {
 
   test("parquet impl: clusterBy writes partitioned layout") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("tio2").toString
+    val base = tempDir("tio2").toString
     val df = Seq((0, 1L), (0, 2L), (1, 3L)).toDF("bucket", "src")
     ParquetTableIO.write(df, s"$base/adj", SaveMode.Overwrite, Seq("bucket"))
     assert(new java.io.File(s"$base/adj/bucket=0").isDirectory)
@@ -73,7 +73,7 @@ class TableIOSpec extends SparkTestBase {
 
   test("checkpoint store goes through the seam (save + latest round-trip)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("tio3").toString
+    val dir = tempDir("tio3").toString
     val cfg = graft.runtime.CheckpointConfig(dir, "r1")
     val st = Seq((1L, 0.5), (2L, 0.7)).toDF("id", "rank")
     graft.runtime.Checkpoints.save(st, cfg, "pr", 4)

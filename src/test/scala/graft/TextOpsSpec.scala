@@ -196,7 +196,7 @@ class TextOpsSpec extends SparkTestBase {
     assert(rows((7L, "tok7")) == ((1L, 1L)))
     assert(rows.size == 2 * n)
     // eager contract: nothing but the result's own blocks stays pinned
-    graft.runtime.IterationHygiene.releaseLocal(out)
+    graft.runtime.Storage.release(out)
   }
 
   test("portable hash mode raises on non-ASCII text instead of silently " +

@@ -43,7 +43,7 @@ class TextVecHygieneSpec extends SparkTestBase {
       (2L, Array(-1.0, 0.0, 0.0))).toDF("vec_id", "embedding")
     val cents = graft.vec.IVF.trainCentroids(vecs, k = 1, iters = 3, seed = 5L)
     val cv = cents.select("cv").collect().map(_.getSeq[Double](0))
-    graft.runtime.IterationHygiene.releaseLocal(cents)
+    graft.runtime.Storage.release(cents)
     assert(cv.nonEmpty && cv.forall(v => v.forall(x => !x.isNaN)),
       s"NaN centroid escaped the zero-norm guard: ${cv.map(_.mkString(",")).mkString(" | ")}")
   }
