@@ -21,8 +21,8 @@ from pathlib import Path
 STORAGE_SITE = re.compile(
     r"\.persist\(|\.localCheckpoint\(|unpersist\(|releaseLocal\(|releaseFinal\("
     r"|storageLevel\s*[!=]=")
-NOT_LIBRARY = {"Storage.scala", "Bench.scala", "BenchExtra.scala", "ScaleTrend.scala",
-               "ScalingBench.scala", "MergeTrend.scala", "Profile.scala", "PlanDump.scala"}
+NOT_LIBRARY = {"Storage.scala", "Bench.scala", "BenchExtra.scala", "ScalingBench.scala",
+               "Profile.scala"}
 
 
 def count(text):

@@ -7,9 +7,7 @@
 # evidence (see BENCH.md).
 set -euo pipefail
 CPUS="${SPARK_GRAFT_CPUS:-8}"
-# Default matches a realistic per-executor heap; raise for driver-heavy
-# local captures (e.g. ScaleTrend's quadratic disclosure point needs >8g
-# at 50k docs under min-of-2 timing).
+# Default matches a realistic per-executor heap.
 DRIVER_MEM="${SPARK_GRAFT_DRIVER_MEM:-8g}"
 JAR="$(dirname "$0")/../target/scala-2.13/graphxspark_2.13-0.1.0.jar"
 CLASS="${1:-graft.Bench}"

@@ -1,56 +1,46 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 import graft.algos.PageRank
 import graft.graph.{GraphGen, PreparedGraph}
 
 /** Scaling-efficiency evidence for the north rule's "N and 4N executors,
-  * ≥0.8 throughput scaling efficiency": no real cluster exists in this
-  * sandbox, so the same job runs at two parallelism levels (local[8] vs
-  * local[32]) on the SAME input, per BASELINE.md's sizing lessons:
-  * input ≥ ~10M edges per core at the small level, shuffle partitions
-  * proportional to cores, identical moderate heap, best-of-3 with raws
-  * reported.
+  * ≥0.8 throughput scaling efficiency". No real cluster exists here, so the
+  * same job runs at two local parallelism levels on the same input, ONE
+  * LEVEL PER JVM: a second level run in the same JVM measurably read
+  * slower than it did fresh (BENCH.md § Scaling).
   *
-  * Usage: SPARK_SCALE_VERTS=1000000 sbt "runMain graft.ScalingBench"
-  * Prints one JSON line; paste/record results in BENCH.md.
+  * The job is Bench's headline: `GraphGen.logNormalEdges` over
+  * SPARK_GRAFT_BENCH_VERTS vertices (default 100000, about 12.7M edges),
+  * prepared once, then 3 timed `PageRank.runPrepared` runs of 5
+  * supersteps; the best run gives edges/s/superstep.
+  *
+  * Usage: SPARK_GRAFT_CPUS=1 sbt "runMain graft.ScalingBench", then again
+  * with SPARK_GRAFT_CPUS=4. Prints one JSON line per run; the efficiency
+  * is (eps at 4N / eps at N) / 4, taken from two such lines.
   */
 object ScalingBench {
   def main(args: Array[String]): Unit = {
-    val nVerts = sys.env.getOrElse("SPARK_SCALE_VERTS", "1000000").toLong
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val nVerts = sys.env.getOrElse("SPARK_GRAFT_BENCH_VERTS", "100000").toLong
     val iters = 5
-    val levels = sys.env.getOrElse("SPARK_SCALE_LEVELS", "8,32")
-      .split(",").map(_.trim.toInt).toSeq
-
-    val results = levels.map { cpus =>
-      val spark = graft.runtime.Sessions.local(cpus, 2 * cpus, s"graft-scaling-$cpus")
-      val t0 = System.nanoTime()
-      val g = PreparedGraph(
-        GraphGen.logNormalEdges(spark, nVerts, numPartitions = 2 * cpus),
-        numPartitions = 2 * cpus)
-      val prepSec = (System.nanoTime() - t0) / 1e9
-      val m = g.numEdges
-      val nRuns = sys.env.getOrElse("SPARK_SCALE_RUNS", "3").toInt
-      val runs = (1 to nRuns).map { _ =>
-        val t1 = System.nanoTime()
-        PageRank.runPrepared(g, PageRank.Config(numIter = iters)).unpersist(false)
-        (System.nanoTime() - t1) / 1e9
-      }
-      val best = runs.min
-      val eps = m.toDouble * iters / best
-      System.err.println(f"[scaling] cpus=$cpus edges=$m prep=$prepSec%.1f " +
-        f"runs=${runs.map(r => f"$r%.1f").mkString("/")} eps=${eps / 1e6}%.2f M/s")
-      g.unpersist(); spark.catalog.clearCache()
-      spark.stop()
-      (cpus, m, prepSec, runs, eps)
+    val spark = graft.runtime.Sessions.local(cpus, 2 * cpus, s"graft-scaling-$cpus")
+    def since(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+    val t0 = System.nanoTime()
+    val g = PreparedGraph(
+      GraphGen.logNormalEdges(spark, nVerts, numPartitions = 2 * cpus),
+      numPartitions = 2 * cpus)
+    val prepSec = since(t0)
+    val m = g.numEdges
+    val runs = (1 to 3).map { _ =>
+      val t1 = System.nanoTime()
+      PageRank.runPrepared(g, PageRank.Config(numIter = iters,
+        numPartitions = 2 * cpus)).unpersist(false)
+      since(t1)
     }
-
-    val (c1, m1, _, runs1, eps1) = results.head
-    val (c2, _, _, runs2, eps2) = results.last
-    val efficiency = (eps2 / eps1) / (c2.toDouble / c1)
+    val eps = m.toDouble * iters / runs.min
+    g.unpersist()
+    spark.stop()
     println(
-      f"""{"metric":"scaling_efficiency","value":$efficiency%.3f,"unit":"ratio","vertices":$nVerts,"edges":$m1,"supersteps":$iters,"levels":[{"cpus":$c1,"runs":[${runs1.map(r => f"$r%.2f").mkString(",")}],"edges_per_sec_per_superstep":${eps1}%.0f},{"cpus":$c2,"runs":[${runs2.map(r => f"$r%.2f").mkString(",")}],"edges_per_sec_per_superstep":${eps2}%.0f}]}""")
+      f"""{"metric":"scaling_level","cpus":$cpus,"vertices":$nVerts,"edges":$m,"supersteps":$iters,"prep_sec":$prepSec%.2f,"runs":[${runs.map(r => f"$r%.2f").mkString(",")}],"edges_per_sec_per_superstep":$eps%.0f}""")
   }
 }

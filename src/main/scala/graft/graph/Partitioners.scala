@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The reference's vertex-cut partition strategies (spark-graphx 4.1.2
@@ -31,7 +31,4 @@ object Partitioners {
     * together. */
   def canonicalRandomVertexCut(n: Int): Column =
     pmod(hash(least(col("src"), col("dst")), greatest(col("src"), col("dst"))), lit(n))
-
-  def repartitionBy(e: DataFrame, strategy: Int => Column, n: Int): DataFrame =
-    e.repartition(n, strategy(n))
 }

@@ -83,14 +83,6 @@ object MediaOps {
         (col("frame_idx") * (1000.0 / fps)).cast("long").as("ts_ms"))
   }
 
-  /** Size-banded repartitioning: large payloads spread across partitions
-    * (hash of id), so a handful of giant videos can't skew one task. */
-  def repartitionBySize(media: DataFrame, numPartitions: Int): DataFrame =
-    // hash ONCE: repartition(n, expr) already murmur3-hashes the exprs —
-    // pre-bucketing with pmod(hash…) would re-hash the bucket number,
-    // leaving ~1/e of the partitions empty (balls-into-bins over n values)
-    media.repartition(numPartitions, col("media_id"), length(col("bytes")))
-
   /** Deterministic synthetic media table for tests (payload bytes are a
     * pure function of id). */
   def syntheticMedia(spark: SparkSession, n: Long): Dataset[MediaRow] = {

@@ -33,10 +33,6 @@ object TextStats {
     when(length(text) === 0, 0.0).otherwise(
       length(regexp_replace(text, "[^0-9]", "")).cast("double") / length(text))
 
-  def upperRatio(text: Column): Column =
-    when(length(text) === 0, 0.0).otherwise(
-      length(regexp_replace(text, "[^A-Z]", "")).cast("double") / length(text))
-
   private val enStop = Seq("the", "of", "and", "to", "in", "a", "is", "that", "it", "for")
   private val deStop = Seq("der", "die", "und", "das", "ist", "nicht", "ein", "zu", "mit", "den")
   private val frStop = Seq("le", "la", "les", "de", "et", "est", "un", "une", "que", "pour")
