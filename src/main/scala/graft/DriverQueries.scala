@@ -533,11 +533,10 @@ object DriverQueries {
   val SpLandmarks = Seq(147L, 148L, 149L)
 
   /** Runs on the generic Pregel combinator (the reference's own map-attr
-    * formulation; `ShortestPaths.runPregel`) — differentially pinned equal
-    * to the long-format fast path `ShortestPaths.run` in
-    * AggregateMessagesSpec, and measured equal-cost on this workload. */
+    * formulation; `ShortestPaths.run`) — differentially pinned equal to
+    * the GraphX jar in ShortestPathsSpec. */
   def qShortestPaths(spark: SparkSession, dir: String): DataFrame =
-    graft.algos.ShortestPaths.runPregelPrepared(
+    graft.algos.ShortestPaths.runPrepared(
       preparedGraph("ring", spark, dir)(ringGraph(spark, dir)), SpLandmarks)
 
   /** BFS min-hops as bounded recursive closure (cap 50 ≫ diameter). */

@@ -3,8 +3,8 @@ package graft.algos
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.graph.EdgeOps
-import graft.runtime.{AdaptivePartitions, CheckpointConfig, Checkpoints, Storage}
+import graft.graph.PreparedGraph
+import graft.runtime.{CheckpointConfig, Checkpoints, Storage}
 
 /** Synchronous label propagation (reference: spark-graphx 4.1.2
   * `lib.LabelPropagation`; Raghavan et al. 2007).
@@ -36,39 +36,27 @@ object LabelPropagation {
       checkpoint: Option[CheckpointConfig] = None,
       resume: Boolean = false)
 
-  /** The symmetrized-adjacency structure LPA iterates over — built once,
-    * usable for many runs (the PreparedGraph contract, specialized to
-    * LPA's both-directions message multiset). `unpersist()` when done. */
+  /** The symmetrized graph LPA iterates over — a [[PreparedGraph]] built
+    * over `e ∪ reverse(e)`, so every directed edge is listed under both
+    * endpoints: exactly the reference's sendMsg-to-both-endpoints message
+    * multiset, in ONE cached adjacency (degree-capped like every
+    * PreparedGraph). Its own type, so a run can only be handed a
+    * symmetrized graph. Built once, usable for many runs; `unpersist()`
+    * when done. */
   final class Prepared private[LabelPropagation] (
-      private[LabelPropagation] val adj: DataFrame,
-      private[LabelPropagation] val verts: DataFrame,
-      private[LabelPropagation] val p: Int) extends Storage.Releasable {
-    def session: org.apache.spark.sql.SparkSession = adj.sparkSession
-    def unpersist(): Unit = { adj.unpersist(false); verts.unpersist(false) }
+      private[LabelPropagation] val g: PreparedGraph) extends Storage.Releasable {
+    def session: org.apache.spark.sql.SparkSession = g.spark
+    def unpersist(): Unit = g.unpersist()
   }
 
-  /** Build the cached symmetrized capped adjacency + vertex set once.
-    * An already-cached edge input is read through its cache instead of
-    * being persisted a second time. */
-  def prepare(edges: DataFrame, numPartitions: Int = 0): Prepared = Storage.scope { s =>
-    val spark = edges.sparkSession
-    val e = s.input(edges, col("src"), col("dst"))
-    val edgeCount = e.count()
-    val P = AdaptivePartitions.forRows(spark, edgeCount, numPartitions)
-
-    // ONE symmetrized adjacency (each directed edge contributes both ways —
-    // exactly the reference's sendMsg-to-both-endpoints message multiset):
-    // halves the cached footprint and the per-superstep joins vs the r2
-    // separate fwd+rev frames (VERDICT r2 minor #3). Degree-capped blocks
-    // (VERDICT r3 #1): a hub's symmetric neighborhood spans multiple rows
-    // instead of one unbounded collect_list row
-    val adj = s.result(graft.graph.PreparedGraph.cappedBlocks(
-        e.union(EdgeOps.reverse(e)), "src", "dst", "__deg", "dsts",
-        graft.graph.PreparedGraph.blockCap(spark))
-      .select(col("src"), col("dsts"))
-      .repartition(P, col("src")))
-    val verts = s.result(EdgeOps.vertices(e).repartition(P, col("id")))
-    new Prepared(adj, verts, P)
+  /** Build the symmetrized prepared graph once. Each input row emits
+    * itself and its reverse, so the input plan is read once (a union of
+    * `e` and `reverse(e)` would read it twice, or need a cached copy of
+    * `e` beside the cached 2|E|-row union `PreparedGraph` builds from). */
+  def prepare(edges: DataFrame, numPartitions: Int = 0): Prepared = {
+    val both = explode(array(struct(col("src"), col("dst")),
+      struct(col("dst").as("src"), col("src").as("dst"))))
+    new Prepared(PreparedGraph(edges.select(both.as("e")).select("e.*"), numPartitions))
   }
 
   /** (id, label) after `cfg.maxSteps` synchronous supersteps.
@@ -79,22 +67,21 @@ object LabelPropagation {
 
   /** [[run]] over an already-prepared structure (caller owns `prep`). */
   def runPrepared(prep: Prepared, cfg: Config = Config()): DataFrame = Storage.scope { s =>
-    val spark = prep.adj.sparkSession
-    val adj = prep.adj
-    val verts = prep.verts
-    val P = prep.p
+    val g = prep.g
+    val adj = g.adjacency
+    val P = g.numPartitions
 
     val rotator = s.rotator(cfg.checkpoint, "lpa")
     // input-identity drift guard: a resume against the same dir/runId with
     // different edges must fail loudly, not adopt stale labels. LPA ignores
-    // edge direction, so its input identity is the symmetrized adjacency it
+    // edge direction, so its input identity is the symmetrized graph it
     // iterates (one cheap aggregate over the cached blocks)
-    val labels = rotator.loop(spark, Checkpoints.inputSignature(
-        adj.select(col("src"), explode(col("dsts")).as("dst"))), cfg.resume) { resumed =>
+    val labels = rotator.loop(g.spark, Checkpoints.inputSignature(g.edges),
+        cfg.resume) { resumed =>
       // resume mid-iteration: the checkpointed (id, label) frame IS the full
       // superstep state — continuing from it is bit-identical
       var (startStep, labels) =
-        resumed.getOrElse((0, verts.select(col("id"), col("id").as("label"))))
+        resumed.getOrElse((0, g.vertices.select(col("id"), col("id").as("label"))))
       for (step <- (startStep + 1) to cfg.maxSteps) {
         labels = rotator.step(step, Nil, _ => 0L) {
           // messages along both directions of every directed edge (one join

@@ -96,10 +96,13 @@ object PageRank {
   }
 
   /** Per-dst message sums for one superstep. `senders` must carry
-    * (id, value); each source spreads value / out-degree along every
-    * out-edge (the degree-inverse is applied HERE, not by the caller).
+    * (id, value, keys…); each source spreads value / out-degree along every
+    * out-edge (the degree-inverse is applied HERE, not by the caller), and
+    * sums land per (dst, keys…) — `keys` carries a sender column through
+    * to the recipient (parallel PPR's source position); none by default.
     * Optional two-level salted aggregation for hub in-degree skew. */
-  private def msgSums(g: PreparedGraph, senders: DataFrame, salt: Int): DataFrame = {
+  private def msgSums(g: PreparedGraph, senders: DataFrame, salt: Int,
+      keys: Seq[String] = Nil): DataFrame = {
     val adj = g.adjacency
     // senders ≤ |V| rows: a shuffled-hash join moves ONLY those rows (the
     // adjacency is cached hash(src)-partitioned and never moves) and runs
@@ -108,15 +111,16 @@ object PageRank {
     // (collect + rebroadcast every iteration) — measured 2× slower on the
     // 12.7M-edge headline workload than the two |V|-row exchanges it saves.
     val contribs = adj.join(senders.hint("SHUFFLE_HASH"), adj("src") === senders("id"))
-      .select(explode(col("dsts")).as("dst"),
-        (col("value") / col("degree")).as("contrib"))
+      .select(explode(col("dsts")).as("dst") +: keys.map(col) :+
+        (col("value") / col("degree")).as("contrib"): _*)
     if (salt <= 1)
-      contribs.groupBy("dst").agg(sum("contrib").as("msg"))
+      contribs.groupBy("dst", keys: _*).agg(sum("contrib").as("msg"))
     else
       contribs
-        .groupBy(col("dst"), pmod(hash(col("dst"), spark_partition_id()), lit(salt)).as("s"))
+        .groupBy(col("dst") +: keys.map(col) :+
+          pmod(hash(col("dst"), spark_partition_id()), lit(salt)).as("s"): _*)
         .agg(sum("contrib").as("msg"))
-        .groupBy("dst").agg(sum("msg").as("msg"))
+        .groupBy("dst", keys: _*).agg(sum("msg").as("msg"))
   }
 
   private def runStatic(g: PreparedGraph, cfg: Config, numVertices: Long,
@@ -268,7 +272,6 @@ object PageRank {
     import spark.implicits._
     val srcArr = array(sources.map(lit): _*)
     val positions = sources.indices.map(_.toLong).toDF("pos")
-    val adj = g.adjacency
     val rotator = s.rotator(None, "ppr")
 
     var state = g.vertices.crossJoin(broadcast(positions))
@@ -277,11 +280,8 @@ object PageRank {
           .otherwise(0.0).as("rank"))
     for (i <- 1 to numIter) {
       val senders = state.filter(col("rank") =!= 0.0)
-        .select(col("id"), col("pos").as("spos"), col("rank"))
-      val msgs = adj.join(senders.hint("SHUFFLE_HASH"), adj("src") === senders("id"))
-        .select(explode(col("dsts")).as("dst"), col("spos"),
-          (col("rank") / col("degree")).as("contrib"))
-        .groupBy("dst", "spos").agg(sum("contrib").as("msg"))
+        .select(col("id"), col("pos").as("spos"), col("rank").as("value"))
+      val msgs = msgSums(g, senders, salt = 1, keys = Seq("spos"))
       val next = state.join(msgs.hint("SHUFFLE_HASH"),
           state("id") === msgs("dst") && state("pos") === msgs("spos"), "left")
         .select(state("id"), state("pos"),

@@ -89,8 +89,8 @@ object PreparedGraph {
     * EAGER: the cap decision is a driver action at construction time, and
     * the returned plan references `e` once (fast path) or twice (capped) —
     * an expensive input must be cached (or cheaply re-derivable from a
-    * cache, like the reverse-adjacency explode) before calling. Engine
-    * call sites (PreparedGraph.apply, LPA) pre-persist; the PUBLIC
+    * cache, like the reverse-adjacency explode) before calling. The engine
+    * call site (PreparedGraph.apply) pre-persists; the PUBLIC
     * entry points guard themselves via [[Adjacency.materializedOnce]]
     * (ADVICE r4, re-raised r5 review). */
   private[graft] def cappedBlocks(e: DataFrame, key: String, nbr: String,

@@ -61,8 +61,8 @@ object Checkpoints {
     * INPUT identity into the resume fingerprint: snapshots are keyed only
     * by dir/runId/algo, so without this a resume (or a fresh run, then a
     * resume) against the same directory but DIFFERENT edge data would
-    * silently adopt state computed from the old edges. Config drift was
-    * already guarded ([[recordFingerprint]]); input drift is the same
+    * silently adopt state computed from the old edges. [[guard]] checks it
+    * together with the numeric config: input drift is the same
     * silent-wrong-results class.
     *
     * One cheap aggregate job — count + XOR + bounded SUM of per-edge
@@ -83,34 +83,23 @@ object Checkpoints {
     s"edges=${r.getLong(0)},xor=${r.getLong(1)},sum=${r.getDecimal(2)}"
   }
 
-  /** The full drift guard every checkpointing algorithm runs before
-    * touching snapshots: on resume, verify the stored fingerprint matches;
-    * always, record-or-verify it (a fresh run against a dir committed
-    * under a different fingerprint fails loudly — see
-    * [[recordFingerprint]]'s mixed-state rationale). */
-  def guard(spark: SparkSession, cfg: CheckpointConfig, algo: String,
-      fp: String, resume: Boolean): Unit = {
-    if (resume) verifyFingerprint(spark, cfg, algo, fp)
-    recordFingerprint(spark, cfg, algo, fp)
-  }
-
-  /** Verify-or-record the run's numeric-config fingerprint. Together with
-    * [[verifyFingerprint]] it closes the silent-wrong-results resume
-    * class: snapshots are keyed only by dir/runId/algo, so without the
-    * fingerprint a resume under CHANGED numerics (resetProb, tol, …)
-    * would continue old-parameter state under new parameters and match
-    * neither configuration.
+  /** The drift guard every checkpointing algorithm runs before touching
+    * snapshots: record the run's fingerprint (numeric config + input
+    * signature), or verify it against the one already committed. It
+    * closes the silent-wrong-results resume class: snapshots are keyed
+    * only by dir/runId/algo, so without it a resume under CHANGED
+    * numerics (resetProb, tol, …) or edges would continue old state under
+    * new parameters and match neither configuration.
     *
-    * A FRESH run that finds a committed fingerprint with a DIFFERENT
-    * config fails loudly instead of recording: it would overwrite only
+    * A mismatch fails loudly on a FRESH run too: it would overwrite only
     * the snapshots its own cadence reaches, leaving the old config's
     * higher-superstep snapshots in place for a later resume to adopt —
     * mixed-parameterization state no fingerprint could then detect.
     * A matching fingerprint is fine (same config ⇒ deterministic
     * supersteps ⇒ any stale snapshot is bit-identical to what this run
     * would write there). */
-  def recordFingerprint(spark: SparkSession, cfg: CheckpointConfig,
-      algo: String, fp: String): Unit = {
+  def guard(spark: SparkSession, cfg: CheckpointConfig, algo: String,
+      fp: String, resume: Boolean): Unit = {
     val io = TableIO.forSession(spark)
     val ref = fingerprintRef(cfg, algo)
     // gate on committed(), not exists(): a run killed mid-write leaves a
@@ -123,29 +112,18 @@ object Checkpoints {
     } else {
       val stored = io.read(spark, ref).select("fingerprint").first().getString(0)
       require(stored == fp,
-        s"refusing to run $algo against ${cfg.dir}/${cfg.runId}: the dir " +
-          s"already holds checkpoints written under config [$stored], the " +
-          s"current config is [$fp] — a fresh run would overwrite only the " +
-          "snapshots it reaches and leave the rest as mixed state; delete " +
-          "the checkpoint dir, use a new runId, or restore the original " +
-          "config")
-    }
-  }
-
-  /** Fail loudly when resuming under a config that differs from the one
-    * the checkpoints were written with. A missing fingerprint (pre-upgrade
-    * checkpoint dir) verifies vacuously. */
-  def verifyFingerprint(spark: SparkSession, cfg: CheckpointConfig,
-      algo: String, fp: String): Unit = {
-    val io = TableIO.forSession(spark)
-    val ref = fingerprintRef(cfg, algo)
-    if (io.committed(spark, ref)) {
-      val stored = io.read(spark, ref).select("fingerprint").first().getString(0)
-      require(stored == fp,
-        s"refusing to resume $algo from ${cfg.dir}/${cfg.runId}: checkpoints " +
-          s"were written under config [$stored], the current config is [$fp] — " +
-          "continuing would produce results matching neither; delete the " +
-          "checkpoint dir or restore the original config")
+        if (resume)
+          s"refusing to resume $algo from ${cfg.dir}/${cfg.runId}: checkpoints " +
+            s"were written under config [$stored], the current config is [$fp] — " +
+            "continuing would produce results matching neither; delete the " +
+            "checkpoint dir or restore the original config"
+        else
+          s"refusing to run $algo against ${cfg.dir}/${cfg.runId}: the dir " +
+            s"already holds checkpoints written under config [$stored], the " +
+            s"current config is [$fp] — a fresh run would overwrite only the " +
+            "snapshots it reaches and leave the rest as mixed state; delete " +
+            "the checkpoint dir, use a new runId, or restore the original " +
+            "config")
     }
   }
 

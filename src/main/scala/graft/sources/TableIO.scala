@@ -163,27 +163,8 @@ final class IcebergTableIO(catalog: String, namespace: String = "graft",
 
   private def fq(ref: String): String = s"$catalog.$namespace.${tableName(ref)}"
 
-  /** Pre-hash-suffix name (the scheme before the injective `tableName`
-    * upgrade). */
-  private def fqLegacy(ref: String): String =
-    s"$catalog.$namespace.${sanitized(ref)}"
-
-  /** Read-path resolution (ADVICE r3): prefer the hashed name; fall back
-    * to the legacy unsuffixed name so snapshots/checkpoints written by the
-    * pre-upgrade scheme stay discoverable — checkpoint resume must not
-    * silently see an empty history across the naming upgrade. New writes
-    * always use the hashed name (overwrite migrates forward). */
-  private def resolve(spark: SparkSession, ref: String): String = {
-    val hashed = fq(ref)
-    if (spark.catalog.tableExists(hashed)) hashed
-    else {
-      val legacy = fqLegacy(ref)
-      if (spark.catalog.tableExists(legacy)) legacy else hashed
-    }
-  }
-
   override def read(spark: SparkSession, ref: String): DataFrame =
-    spark.table(resolve(spark, ref))
+    spark.table(fq(ref))
 
   override def write(df: DataFrame, ref: String, mode: SaveMode,
       clusterBy: Seq[String]): Unit = {
@@ -193,32 +174,19 @@ final class IcebergTableIO(catalog: String, namespace: String = "graft",
       clusterBy.tail.map(col): _*) else w0
     mode match {
       case SaveMode.Append =>
-        // continuity: keep appending to whichever table (hashed, or a
-        // pre-upgrade legacy one) already holds this ref's history
         if (!exists(df.sparkSession, ref)) w.create()
-        else df.writeTo(resolve(df.sparkSession, ref)).append()
-      case _ =>
-        w.createOrReplace()
-        // single source of truth (ADVICE r4): an overwrite migrates the
-        // ref forward to the hashed name — drop any pre-upgrade
-        // legacy-named table so stale data can't linger and resurface
-        // through resolve() if the hashed table is later dropped
-        val spark = df.sparkSession
-        val legacy = fqLegacy(ref)
-        if (legacy != fq(ref) && spark.catalog.tableExists(legacy))
-          spark.sql(s"DROP TABLE $legacy")
+        else df.writeTo(fq(ref)).append()
+      case _ => w.createOrReplace()
     }
   }
 
   override def exists(spark: SparkSession, ref: String): Boolean =
-    spark.catalog.tableExists(fq(ref)) ||
-      spark.catalog.tableExists(fqLegacy(ref))
+    spark.catalog.tableExists(fq(ref))
 
   /** Children match on the READABLE prefix (a child ref `parent/x`
     * sanitizes to `sanitized(parent)_x…`); each listed name has its own
-    * `_h<hex>` suffix stripped — legacy unsuffixed names pass through
-    * unchanged — so callers (checkpoint discovery) see the sanitized
-    * child name; a child present under both schemes lists once. */
+    * `_h<hex>` suffix stripped, so callers (checkpoint discovery) see the
+    * sanitized child name. */
   override def children(spark: SparkSession, ref: String): Seq[String] = {
     val prefix = sanitized(ref) + "_"
     // a fresh catalog has no namespace yet — that means "no checkpoints"
@@ -239,6 +207,5 @@ final class IcebergTableIO(catalog: String, namespace: String = "graft",
     names
       .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix))
       .map(_.replaceAll("_h[0-9a-f]{8}$", ""))
-      .distinct
   }
 }

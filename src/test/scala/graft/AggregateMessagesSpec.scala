@@ -122,20 +122,6 @@ class AggregateMessagesSpec extends SparkTestBase {
     }
   }
 
-  test("ShortestPaths.runPregel (reference-shaped map formulation on the " +
-      "combinator) equals the long-format fast path") {
-    for (seed <- 11 to 13) {
-      val pairs = randomEdges(seed, n = 60, m = 150)
-      val verts = pairs.flatMap(p => Seq(p._1, p._2)).distinct.sorted
-      val landmarks = verts.take(3)
-      val fast = graft.algos.ShortestPaths.run(edgesDF(pairs), landmarks)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-      val pregel = graft.algos.ShortestPaths.runPregel(edgesDF(pairs), landmarks)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-      assert(pregel == fast, s"seed=$seed runPregel vs run")
-    }
-  }
-
   test("Pregel expresses static PageRank: combinator ranks match the " +
       "engine's flagship implementation (and the jar) to 1e-9") {
     for (seed <- 14 to 15) {

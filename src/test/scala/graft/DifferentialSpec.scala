@@ -80,6 +80,39 @@ class DifferentialSpec extends SparkTestBase {
     }
   }
 
+  test("differential on adversarial shapes: ShortestPaths and static " +
+      "PageRank vs the jar (self-loops, parallel edges, absent landmark, " +
+      "star, R-MAT hub)") {
+    def pairsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val rmat = pairsOf(graft.graph.GraphGen.rmatEdges(spark, 64, 400, seed = 7L))
+    val hub = rmat.groupBy(_._2).maxBy(_._2.size)._1
+    // (tag, edges, landmarks)
+    val cases = Seq(
+      ("self-loops", Seq((1L, 1L), (1L, 2L), (2L, 2L), (2L, 3L), (3L, 3L), (4L, 4L)),
+        Seq(3L, 4L)),
+      ("parallel edges", Seq((1L, 2L), (1L, 2L), (1L, 2L), (2L, 3L), (3L, 1L), (3L, 1L)),
+        Seq(1L, 3L)),
+      ("absent landmark", Seq((1L, 2L), (2L, 3L), (3L, 4L)), Seq(4L, 99L)),
+      ("star", pairsOf(graft.graph.GraphGen.starEdges(spark, 40)), Seq(0L, 5L)),
+      ("rmat hub", rmat, Seq(hub, rmat.head._1)))
+    for ((tag, pairs, landmarks) <- cases) {
+      val g = graphxOf(pairs)
+      val sp = ShortestPaths.run(edgesDF(pairs), landmarks)
+      val oursSp = sp.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
+      sp.unpersist(false)
+      val theirsSp = org.apache.spark.graphx.lib.ShortestPaths.run(g, landmarks)
+        .vertices.collect().toMap
+        .flatMap { case (id, m) => m.map { case (lm, d) => (id, lm) -> d } }
+      assert(oursSp == theirsSp, s"sssp $tag")
+      val pr = PageRank.run(edgesDF(pairs), PageRank.Config(numIter = 10))
+      val oursPr = pr.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      pr.unpersist(false)
+      compareRanks(pairs, oursPr, g.staticPageRank(10).vertices.collect().toMap,
+        s"pr $tag")
+    }
+  }
+
   test("differential connected components on 5 random graphs (+ union-find)") {
     for (seed <- 20 to 24) {
       // sparse → many components

@@ -124,7 +124,7 @@ class ResumeSpec extends SparkTestBase {
       "as recorded — the drift guard stays armed (review r5)") {
     val dir = tempDir("resume_torn").toString
     val ck = CheckpointConfig(dir, "torn1", every = 1)
-    Checkpoints.recordFingerprint(spark, ck, "pagerank", "fpA")
+    Checkpoints.guard(spark, ck, "pagerank", "fpA", resume = false)
     // tear it: the dir exists (exists()=true) but the commit marker is
     // gone (committed()=false) — exactly what a mid-write kill leaves
     val ref = Checkpoints.fingerprintRef(ck, "pagerank")
@@ -132,11 +132,11 @@ class ResumeSpec extends SparkTestBase {
     assert(marker.exists(), "parquet write should have left a _SUCCESS")
     assert(marker.delete())
     // the old exists() gate would skip this write forever, silently
-    // disarming verifyFingerprint (which correctly requires committed())
-    Checkpoints.recordFingerprint(spark, ck, "pagerank", "fpB")
-    Checkpoints.verifyFingerprint(spark, ck, "pagerank", "fpB") // re-armed
+    // disarming the guard's verify half (which correctly requires committed())
+    Checkpoints.guard(spark, ck, "pagerank", "fpB", resume = false)
+    Checkpoints.guard(spark, ck, "pagerank", "fpB", resume = true) // re-armed
     val e = intercept[IllegalArgumentException] {
-      Checkpoints.verifyFingerprint(spark, ck, "pagerank", "fpC")
+      Checkpoints.guard(spark, ck, "pagerank", "fpC", resume = true)
     }
     assert(e.getMessage.contains("refusing to resume"))
   }

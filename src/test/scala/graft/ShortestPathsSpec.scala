@@ -7,9 +7,14 @@ import graft.algos.ShortestPaths
 class ShortestPathsSpec extends SparkTestBase {
 
   test("landmark BFS matches reference ShortestPaths on random graphs") {
-    for (seed <- 50 to 52) {
+    // seeds 50-52 with fixed landmarks; 11-13 with each graph's three
+    // smallest vertex ids
+    val inputs = (50 to 52).map(seed => (seed, randomEdges(seed, n = 60, m = 150),
+      Seq(1L, 5L, 10L))) ++ (11 to 13).map { seed =>
       val pairs = randomEdges(seed, n = 60, m = 150)
-      val landmarks = Seq(1L, 5L, 10L)
+      (seed, pairs, pairs.flatMap(p => Seq(p._1, p._2)).distinct.sorted.take(3))
+    }
+    for ((seed, pairs, landmarks) <- inputs) {
       val ours = ShortestPaths.run(edgesDF(pairs), landmarks)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
       val g = XGraph.fromEdgeTuples(spark.sparkContext.parallelize(pairs, 4), 1)

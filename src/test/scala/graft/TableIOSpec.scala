@@ -140,15 +140,6 @@ class TableIOSpec extends SparkTestBase {
       val latest = graft.runtime.Checkpoints.latest(spark, cfg, "pagerank")
       assert(latest.map(_._1) == Some(5), "latest() finds the max superstep table")
       assert(latest.get._2.count() == 2)
-
-      // legacy-name fallback (ADVICE r3): a pre-upgrade unsuffixed table
-      // is still found by read/exists/children
-      Seq((7L, 7L)).toDF("id", "component")
-        .writeTo("graftmem.graft.ck_run9_cc_superstep_1").using("memory").create()
-      val legacyRef = "ck/run9/cc/superstep=1"
-      assert(io.exists(spark, legacyRef))
-      assert(io.read(spark, legacyRef).count() == 1)
-      assert(io.children(spark, "ck/run9/cc") == Seq("superstep_1"))
     } finally {
       spark.conf.unset(TableIO.ImplKey)
       spark.conf.unset(TableIO.CatalogKey)
