@@ -123,8 +123,7 @@ object Bench {
     // doc pair frames included) so the headline measures the engine, not
     // the residue of 30 queries in the same JVM
     graft.runtime.Trace.stopCollecting()
-    DriverQueries.clearMemo(spark)
-    DocQueries.clearMemo(spark)
+    graft.runtime.Storage.clearMemo(spark)
     spark.catalog.clearCache()
     // first-run residue (final-superstep localCheckpoint blocks outside
     // the CacheManager): release explicitly — clearCache can't see them

@@ -35,71 +35,25 @@ object DriverQueries {
 
   // ---------------------------------------------------------------- graphs
 
-  /** The two derived graphs are inputs to 10+ queries; when the driver
-    * runs them back-to-back in one session, re-deriving the same ≤1M-row
-    * edge table per query is pure waste. Memoize the MATERIALIZED frame
-    * per (kind, session, dir) — bounded: two small cached frames per
-    * testdata dir. */
-  private val graphMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame]
-
+  /** The derived graphs and their prepared forms are inputs to 10+
+    * queries; when the driver runs them back-to-back in one session,
+    * re-deriving the same ≤1M-row edge table (or rebuilding the identical
+    * adjacency blocks, "built once, iterated many times") per query and
+    * per rerun is pure waste. Each is a [[Storage.memo]] per (session,
+    * testdata dir) — bounded: a handful of |V|-sized cached structures.
+    * A graph is memoized MATERIALIZED; a failed materialization is
+    * released by its scope, since the memo records no entry for it. */
   private def memoized(kind: String, spark: SparkSession, dir: String)(
-      build: => DataFrame): DataFrame = {
-    // collision-free session key (identityHashCode is not unique across a
-    // session's lifetime+GC) + eviction of stopped-session entries
-    graft.runtime.SessionKeys.purgeStopped(graphMemo)(_.sparkSession)
-    graphMemo.getOrElseUpdate((kind, graft.runtime.SessionKeys.of(spark), dir),
-      // labeled stage: the build cost is attributed in the bench JSON
-      // (per-query "stages" + aggregated "memo_builds") instead of hiding
-      // inside whichever query happened to run first
-      graft.runtime.Trace.stage(s"memo_build:$kind") {
-        // a failed materialization is released by its scope: getOrElseUpdate
-        // aborts without recording the entry, so clearMemo could never reach it
-        Storage.scope(_.result(build))
-      })
-  }
-
-  /** Prepared (cached adjacency + vertex set) forms of the derived graphs —
-    * the documented PreparedGraph usage ("built once, iterated many
-    * times"): PageRank/PPR/ShortestPaths/LPA over the same derived graph
-    * otherwise rebuild the identical adjacency blocks per query AND per
-    * rerun. Build cost is a labeled memo_build stage like every input memo
-    * (bench-JSON-attributable); bounded: a handful of |V|-sized cached
-    * structures per (session, testdata dir). */
-  private val pgMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), graft.graph.PreparedGraph]
-  private val lpaMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), graft.algos.LabelPropagation.Prepared]
+      build: => DataFrame): DataFrame =
+    Storage.memo(spark, kind, dir)(Storage.scope(_.result(build)))
 
   private def preparedGraph(kind: String, spark: SparkSession, dir: String)(
-      edges: => DataFrame): graft.graph.PreparedGraph = {
-    graft.runtime.SessionKeys.purgeStopped(pgMemo)(_.spark)
-    pgMemo.getOrElseUpdate((kind, graft.runtime.SessionKeys.of(spark), dir),
-      graft.runtime.Trace.stage(s"memo_build:${kind}_prepared")(
-        graft.graph.PreparedGraph(edges)))
-  }
+      edges: => DataFrame): graft.graph.PreparedGraph =
+    Storage.memo(spark, s"${kind}_prepared", dir)(graft.graph.PreparedGraph(edges))
 
   private def preparedLpa(spark: SparkSession, dir: String)(
-      edges: => DataFrame): graft.algos.LabelPropagation.Prepared = {
-    graft.runtime.SessionKeys.purgeStopped(lpaMemo)(_.session)
-    lpaMemo.getOrElseUpdate((graft.runtime.SessionKeys.of(spark), dir),
-      graft.runtime.Trace.stage("memo_build:lpa_prepared")(
-        graft.algos.LabelPropagation.prepare(edges)))
-  }
-
-  /** Release the memoized graphs of `spark` (bench phase boundaries). */
-  def clearMemo(spark: SparkSession): Unit = {
-    val h = graft.runtime.SessionKeys.of(spark)
-    graphMemo.keys.filter(_._2 == h).foreach { k =>
-      graphMemo.remove(k).foreach(_.unpersist(false))
-    }
-    pgMemo.keys.filter(_._2 == h).foreach { k =>
-      pgMemo.remove(k).foreach(_.unpersist())
-    }
-    lpaMemo.keys.filter(_._1 == h).foreach { k =>
-      lpaMemo.remove(k).foreach(_.unpersist())
-    }
-  }
+      edges: => DataFrame): graft.algos.LabelPropagation.Prepared =
+    Storage.memo(spark, "lpa_prepared", dir)(graft.algos.LabelPropagation.prepare(edges))
 
   /** Bipartite order graph, distinct edges. */
   def orderGraph(spark: SparkSession, dir: String): DataFrame =

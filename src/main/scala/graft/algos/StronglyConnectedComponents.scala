@@ -153,13 +153,6 @@ object StronglyConnectedComponents {
         // fixed point is relax-fixed; pivots are simply hash-chosen
         // instead of min-id (reference min-id labels restored by the
         // per-SCC relabel below).
-        //
-        // Relax and shortcut are rotated SEPARATELY: fusing them into one
-        // plan duplicates the relax join/agg subtree under both sides of
-        // the shortcut self-join, which sent Catalyst's size-in-bytes
-        // statistics (a product over children) into minutes of BigInteger
-        // arithmetic — measured as a full driver stall at sf0.1. Two
-        // shallow LogicalRDD-rooted plans per round keep stats O(1).
         def keyOf(idc: org.apache.spark.sql.Column) =
           struct(xxhash64(idc, lit(7L)).as("k"), idc.as("i"))
         // vertexBound: upper bound on the propagation's state rows — join
@@ -179,12 +172,7 @@ object StronglyConnectedComponents {
                 least(cs("color"), coalesce(col("m"), cs("color"))).as("color"),
                 (col("m").isNotNull && col("m") < cs("color")).as("changed"))
           }
-          // pointer-doubling shortcut: v jumps to its label's label —
-          // its own rotation (not fused over the relax output: that would
-          // duplicate the relax join/agg subtree under both sides of a
-          // self-join, which squares Catalyst's size-in-bytes statistic
-          // per nesting level — measured as minutes of driver-side
-          // BigInteger arithmetic at sf0.1)
+          // pointer-doubling shortcut: v jumps to its label's label
           def shortcut(cs: DataFrame): DataFrame = {
             val m = cs.select(col("id").as("mid"), col("color").as("mcolor"))
             cs.join(side(m),

@@ -127,72 +127,18 @@ object Checkpoints {
     }
   }
 
-  /** Append one superstep's lineage/convergence metrics, per shuffle
-    * partition of the state (schema FIXTURES.md §1.1 `superstep_log`).
-    * The log is an append-only journal of EXECUTED supersteps: a resume
-    * that re-runs supersteps past its snapshot re-logs them (they ran
-    * again) — consumers aggregating wall time must group by superstep or
-    * take the last attempt, not sum blindly. The per-partition counts ride
-    * the rotation's root-level observe ([[partitionCountsMetric]]), so
-    * logging costs no job of its own ([[StateRotator.step]]).
-    *
-    * BUFFERED writes (r6): rows go to a driver-side buffer flushed as ONE
-    * append per durable-snapshot cadence plus a final [[flushLog]] when
-    * the loop exits normally — a per-superstep parquet-append JOB was
-    * ~60% of a 72-superstep tol run's wall time. Durability is aligned
-    * with the resume contract: rows past the last flush belong to
-    * supersteps a resume re-executes (and re-logs) anyway, because
-    * snapshots — not the log — are the resume points. The same contract
-    * lets a loop that exits by exception drop them ([[dropLog]]). */
-  def logSuperstepRows(spark: SparkSession, counts: Seq[(Int, Long)],
-      cfg: CheckpointConfig, algo: String, superstep: Int, l1Delta: Double,
-      activeCount: Long, wallMs: Long): Unit = {
-    val rows = counts.map { case (p, n) =>
-      Row(cfg.runId, superstep, p, n, l1Delta, activeCount, wallMs)
-    }
-    val buffered = logBuffers.updateWith((cfg.dir, cfg.runId, algo))(
-      old => Some(old.getOrElse(Vector.empty) ++ rows)).get
-    // flush on the snapshot cadence, plus a size backstop so a sparse
-    // cadence × many partitions × many supersteps cannot grow the driver
-    // buffer unboundedly (100k rows ≈ a few MB)
-    if ((cfg.every > 0 && superstep % cfg.every == 0) || buffered.size > 100000)
-      flushLog(spark, cfg, algo)
-  }
-
   /** The map(partition_id → rows) aggregate column loops append to their
     * rotation observe when checkpointing is on (alias it "pcounts"). */
   def partitionCountsMetric: Column =
     org.apache.spark.sql.graftvec.VectorExpressions.partitionRowCounts()
 
-  /** Unflushed superstep-log rows per (dir, runId, algo). An entry exists
-    * only while it holds rows: [[flushLog]] removes it, so a finished run
-    * leaves no key behind (every pipeline run writes under a new dir). */
-  private val logBuffers = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String), Vector[Row]]
-
-  private[graft] def bufferedLogKeys: Set[(String, String, String)] =
-    logBuffers.keySet.toSet
-
-  private val logSchema = new org.apache.spark.sql.types.StructType()
+  /** One superstep-log row per shuffle partition of the state per executed
+    * superstep (FIXTURES.md §1.1 `superstep_log`); written by
+    * [[StateRotator]]. */
+  private[runtime] val logSchema = new org.apache.spark.sql.types.StructType()
     .add("run_id", "string").add("superstep", "int").add("partition_id", "int")
     .add("rows", "long").add("l1_delta", "double").add("active_count", "long")
     .add("wall_ms", "long")
-
-  /** Flush buffered superstep-log rows as one append: on the snapshot
-    * cadence ([[logSuperstepRows]]) and when a loop exits normally
-    * ([[StateRotator.loop]]). Idempotent when nothing is buffered. */
-  def flushLog(spark: SparkSession, cfg: CheckpointConfig, algo: String): Unit =
-    logBuffers.remove((cfg.dir, cfg.runId, algo)).filter(_.nonEmpty).foreach { rows =>
-      import scala.jdk.CollectionConverters._
-      TableIO.forSession(spark).append(
-        spark.createDataFrame(rows.asJava, logSchema), logPath(cfg, algo))
-    }
-
-  /** Discard buffered superstep-log rows unwritten — a loop that exits by
-    * exception ([[StateRotator.loop]]): they belong to supersteps after
-    * the last snapshot, which a resume re-executes and re-logs. */
-  def dropLog(cfg: CheckpointConfig, algo: String): Unit =
-    logBuffers.remove((cfg.dir, cfg.runId, algo))
 
   def readLog(spark: SparkSession, cfg: CheckpointConfig, algo: String): DataFrame =
     TableIO.forSession(spark).read(spark, logPath(cfg, algo))
@@ -229,6 +175,9 @@ final class StateRotator private[runtime] (scope: Storage.Scope,
   // the current state; its blocks are a local of `scope`
   private var owned: Option[DataFrame] = None
 
+  // superstep-log rows not yet appended; see writeLog
+  private var pending = Vector.empty[Row]
+
   private def own(df: DataFrame): DataFrame = {
     // eager localCheckpoint truncates plan + lineage; the stats clamp
     // stops the truncated plan's COMPUTED sizeInBytes (a product over
@@ -247,25 +196,19 @@ final class StateRotator private[runtime] (scope: Storage.Scope,
     * run that wrote the snapshots), then, when resuming, adopt the latest
     * committed snapshot. `body` receives `Some((superstep, state))` for a
     * resumed run and `None` for a fresh one; what a fresh run starts from
-    * stays with the caller. On normal exit the superstep log is flushed.
-    * On an exception this run's buffered log rows are dropped before
-    * rethrowing (the scope releases the state's blocks) — the dropped
-    * rows belong to supersteps after the last snapshot, which a resume
-    * re-executes and re-logs. */
+    * stays with the caller. On normal exit the pending superstep-log rows
+    * are written. An exception propagates and the unwritten rows die with
+    * the rotator (the scope releases the state's blocks) — they belong to
+    * supersteps after the last snapshot, which a resume re-executes and
+    * re-logs. */
   def loop[T](spark: SparkSession, fingerprint: => String, resume: Boolean)(
       body: Option[(Int, DataFrame)] => T): T = {
-    val out =
-      try body(cfg.flatMap { c =>
-        Checkpoints.guard(spark, c, algo, fingerprint, resume)
-        if (resume) Checkpoints.latest(spark, c, algo).map { case (s, df) => (s, adopt(df)) }
-        else None
-      })
-      catch {
-        case t: Throwable =>
-          cfg.foreach(Checkpoints.dropLog(_, algo))
-          throw t
-      }
-    cfg.foreach(Checkpoints.flushLog(spark, _, algo))
+    val out = body(cfg.flatMap { c =>
+      Checkpoints.guard(spark, c, algo, fingerprint, resume)
+      if (resume) Checkpoints.latest(spark, c, algo).map { case (s, df) => (s, adopt(df)) }
+      else None
+    })
+    cfg.foreach(writeLog(spark, _))
     out
   }
 
@@ -282,11 +225,39 @@ final class StateRotator private[runtime] (scope: Storage.Scope,
     Trace.record(f"${algo}_step_$n%02d", (System.nanoTime() - t0) / 1e9)
     cfg.foreach { c =>
       val counts = row.getMap[Int, Long](row.fieldIndex("pcounts")).toSeq.sortBy(_._1)
-      Checkpoints.logSuperstepRows(state.sparkSession, counts, c, algo, n,
-        Double.NaN, active(row), (System.nanoTime() - t0) / 1000000)
+      val wallMs = (System.nanoTime() - t0) / 1000000
+      pending ++= counts.map { case (p, rows) =>
+        Row(c.runId, n, p, rows, Double.NaN, active(row), wallMs)
+      }
+      // a size backstop so a sparse cadence × many partitions × many
+      // supersteps cannot grow the pending rows unboundedly (100k ≈ a few MB)
+      if (snapshots(c, n) || pending.size > 100000) writeLog(state.sparkSession, c)
     }
     (state, row)
   }
+
+  /** Append the pending superstep-log rows as ONE write: on the snapshot
+    * cadence, at the size backstop and when [[loop]] exits normally — a
+    * per-superstep parquet-append job was ~60% of a 72-superstep tol
+    * run's wall time. The log is an append-only journal of EXECUTED
+    * supersteps: a resume that re-runs supersteps past its snapshot
+    * re-logs them (they ran again), so consumers aggregating wall time
+    * must group by superstep or take the last attempt, not sum blindly.
+    * The per-partition counts ride the rotation's root-level observe
+    * ([[Checkpoints.partitionCountsMetric]]), so logging costs no job of
+    * its own. */
+  private def writeLog(spark: SparkSession, c: CheckpointConfig): Unit =
+    if (pending.nonEmpty) {
+      import scala.jdk.CollectionConverters._
+      graft.sources.TableIO.forSession(spark).append(
+        spark.createDataFrame(pending.asJava, Checkpoints.logSchema),
+        Checkpoints.logPath(c, algo))
+      pending = Vector.empty
+    }
+
+  /** Whether `superstep` is on the durable-snapshot cadence. */
+  private def snapshots(c: CheckpointConfig, superstep: Int): Boolean =
+    c.every > 0 && superstep % c.every == 0
 
   /** Rotate `next` and evaluate `metrics` (aggregate columns) over it,
     * collected by a ROOT-LEVEL observe during the rotation's own
@@ -322,7 +293,7 @@ final class StateRotator private[runtime] (scope: Storage.Scope,
   def rotate(next: DataFrame, superstep: Int): DataFrame = {
     val cp = own(next)
     cfg.foreach { c =>
-      if (c.every > 0 && superstep % c.every == 0)
+      if (snapshots(c, superstep))
         graft.sources.TableIO.forSession(cp.sparkSession)
           .write(cp, Checkpoints.stateDir(c, algo, superstep))
     }

@@ -1,7 +1,7 @@
 package graft.runtime
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** The one owner of the engine's storage: every cache and local checkpoint
@@ -63,6 +63,33 @@ object Storage {
   def release(df: DataFrame): Unit =
     if (df.storageLevel != StorageLevel.NONE) df.unpersist(false)
     else checkpointRdd(df).foreach(_.unpersist(false))
+
+  /** Session-lifetime memos, keyed by (session, label, dir). The key holds
+    * its session strongly and compares it by reference (`SparkSession`
+    * overrides neither `equals` nor `hashCode`), so a new session can
+    * never be handed a stopped session's entry. */
+  private val memos = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, String), AnyRef]
+
+  /** The value `build` makes for `(spark, label, dir)`, built once per
+    * session and kept until [[clearMemo]]: a frame of either kind or a
+    * [[Releasable]]. The build is timed as the trace stage
+    * `memo_build:<label>`, so its cost is attributed in the bench JSON
+    * instead of hiding inside whichever query ran first. Entries of a
+    * stopped session are dropped without release: their blocks died with
+    * the context. */
+  def memo[T <: AnyRef](spark: SparkSession, label: String, dir: String)(build: => T): T = {
+    memos.keys.foreach(k => if (k._1.sparkContext.isStopped) memos.remove(k))
+    memos.getOrElseUpdate((spark, label, dir),
+      Trace.stage(s"memo_build:$label")(build)).asInstanceOf[T]
+  }
+
+  /** Release every [[memo]] entry of `spark`; other sessions' stay. */
+  def clearMemo(spark: SparkSession): Unit =
+    memos.keys.filter(_._1 eq spark).foreach(k => memos.remove(k).foreach {
+      case df: DataFrame @unchecked => release(df)
+      case r: Releasable => r.unpersist()
+    })
 
   /** The RDD holding a localCheckpoint frame's blocks: the `LogicalRDD`
     * its plan was truncated to. */

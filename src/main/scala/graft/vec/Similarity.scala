@@ -180,8 +180,9 @@ object Similarity {
       vecCol: String = "embedding"): DataFrame = {
     val planes = planeMatrices(corpus.sparkSession, tables, bits,
       dimOf(corpus, vecCol))
-    val corpusS = graft.runtime.AdaptivePartitions.spread(corpus)
-    val bucketed = corpusS
+    // spread only the bucketing input, the stage the spread exists for; the
+    // verification joins read the raw corpus
+    val bucketed = graft.runtime.AdaptivePartitions.spread(corpus)
       .select(col(idCol).as("id"), col(vecCol).as("v"),
         posexplode(array((0 until tables).map(t =>
           lshBucketExpr(col(vecCol), planes(t))): _*)))
@@ -192,8 +193,8 @@ object Similarity {
       .filter(col("ia") < col("ib"))
       .select(col("ia"), col("ib")).distinct()
     cand
-      .join(corpusS.select(col(idCol).as("ia"), normalized(col(vecCol)).as("va")), Seq("ia"))
-      .join(corpusS.select(col(idCol).as("ib"), normalized(col(vecCol)).as("vb")), Seq("ib"))
+      .join(corpus.select(col(idCol).as("ia"), normalized(col(vecCol)).as("va")), Seq("ia"))
+      .join(corpus.select(col(idCol).as("ib"), normalized(col(vecCol)).as("vb")), Seq("ib"))
       .select(col("ia"), col("ib"), dot(col("va"), col("vb")).as("cos"))
       .filter(col("cos") >= minCos)
   }

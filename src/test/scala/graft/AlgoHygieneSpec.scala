@@ -1,17 +1,19 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.algos.{ConnectedComponents, LabelPropagation, ShortestPaths,
   StronglyConnectedComponents, SVDPlusPlus}
 import graft.graph.PreparedGraph
-import graft.runtime.CheckpointConfig
+import graft.runtime.{CheckpointConfig, Storage}
 
 /** Regression pins for the round-5 algorithm-hygiene review: cap behavior
   * fails loudly instead of returning corrupt/partial output, results obey
   * the caller-owns-persisted-frame contract, auxiliary checkpoint block
-  * sets are released, and argmax tie-breaks can't wrap on Long.MinValue. */
+  * sets are released, argmax tie-breaks can't wrap on Long.MinValue, and
+  * session memos are built once and released per session. */
 class AlgoHygieneSpec extends SparkTestBase {
 
   /** Ids of the persisted RDDs and the number of CacheManager entries. */
@@ -110,6 +112,39 @@ class AlgoHygieneSpec extends SparkTestBase {
     val after = spark.sparkContext.getPersistentRDDs.size
     assert(after <= before + 1,
       s"stranded checkpoint sets: before=$before after=$after")
+  }
+
+  test("Storage.memo builds once per (session, label, dir); clearMemo " +
+    "releases only that session's entries") {
+    var builds = 0
+    def frame(s: SparkSession, n: Long) = Storage.memo(s, "t_frame", "d") {
+      builds += 1
+      Storage.scope(_.result(s.range(n).toDF("id")))
+    }
+    def graph(s: SparkSession, n: Long) = Storage.memo(s, "t_graph", "d") {
+      builds += 1
+      PreparedGraph(s.range(n).select(col("id").as("src"), (col("id") + 1).as("dst")))
+    }
+    def cached(df: org.apache.spark.sql.DataFrame) = df.storageLevel != StorageLevel.NONE
+    val before = storage()
+    // the sessions of one context share a CacheManager, which keeps ONE
+    // cache per plan: the other session builds over a different range so
+    // its entries are caches of their own
+    val other = spark.newSession()
+    val (of, og) = (frame(other, 20), graph(other, 20))
+    val mid = storage()
+    val (f, g) = (frame(spark, 10), graph(spark, 10))
+    assert((frame(spark, 10) eq f) && (graph(spark, 10) eq g))
+    assert(builds == 4 && (of ne f) && (og ne g), s"builds=$builds")
+    Storage.clearMemo(spark)
+    assert(!cached(f) && !cached(g.adjacency) && !cached(g.vertices))
+    assert(cached(of) && cached(og.adjacency) && cached(og.vertices))
+    assertNothingStranded(mid)
+    // the next lookup after a clear rebuilds
+    assert((frame(spark, 10) ne f) && builds == 5)
+    Storage.clearMemo(spark)
+    Storage.clearMemo(other)
+    assertNothingStranded(before)
   }
 
   test("SVD++ rmse fails loudly on zero matched predictions") {

@@ -73,13 +73,6 @@ class PipelineSpec extends SparkTestBase {
       r2.components == r1.components && r2.edges == r1.edges)
   }
 
-  test("Pipeline.run leaves no superstep-log buffer behind") {
-    val dir = tempDir("pipe3").toString
-    graft.Pipeline.run(spark, dir, numPages = 300, resume = false, prIters = 2)
-    val left = graft.runtime.Checkpoints.bufferedLogKeys.filter(_._1.startsWith(dir))
-    assert(left.isEmpty, s"log buffers left behind: $left")
-  }
-
   test("pipeline pages stage is input data: an existing committed table " +
       "is reused (never overwritten), a torn one fails loudly (review r5)") {
     val dir = tempDir("pipe2").toString
