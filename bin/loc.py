@@ -21,8 +21,7 @@ from pathlib import Path
 STORAGE_SITE = re.compile(
     r"\.persist\(|\.localCheckpoint\(|unpersist\(|releaseLocal\(|releaseFinal\("
     r"|storageLevel\s*[!=]=")
-NOT_LIBRARY = {"Storage.scala", "Bench.scala", "BenchExtra.scala", "ScalingBench.scala",
-               "Profile.scala"}
+NOT_LIBRARY = {"Storage.scala", "Bench.scala", "BenchExtra.scala", "ScalingBench.scala"}
 
 
 def count(text):

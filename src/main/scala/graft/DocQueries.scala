@@ -289,15 +289,14 @@ object DocQueries {
 
   // --------------------------------------------------------------- events
 
-  /** Batch twin of the streaming windowed event aggregation
-    * (`streaming.StreamOps.windowedEventCounts` — identical expressions;
-    * the streaming variant adds only the watermark, a batch no-op).
-    * Window starts formatted as strings so the oracle compare is
+  /** Event count and value sum per 10-minute tumbling window and event
+    * type. Window starts formatted as strings so the oracle compare is
     * timestamp-serialization-proof. */
   def qEventWindows(spark: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamOps.windowedEventCounts(
-        spark.read.parquet(s"$dir/events.parquet"))
-      .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("w_start"),
+    spark.read.parquet(s"$dir/events.parquet")
+      .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("value")).as("value_sum"))
+      .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("w_start"),
         col("event_type"), col("n"), round(col("value_sum"), 4).as("value_sum"))
 
   val qEventWindowsSql: String =

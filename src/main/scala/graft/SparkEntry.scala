@@ -81,7 +81,6 @@ object SparkEntry {
     // full oracle since r3: portable character-polynomial fingerprint
     "q_text_analysis" -> DocQueries.qTextAnalysisSql,
     "q_tfidf" -> DocQueries.qTfidfSql,
-    // batch twin of the streaming windowed aggregation (r3)
     "q_event_windows" -> DocQueries.qEventWindowsSql,
     // full oracles since r4: the last three hash-native queries run the
     // PORTABLE arithmetic hash family (graft.textops.PortableHash) —

@@ -1,12 +1,11 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Degree-aware CSR-style adjacency blocks stored as a typed Dataset
-  * (north-star: "degree-aware CSR-style partitioned adjacency structures
-  * stored as typed Datasets"; reference analog `graphx.impl.EdgePartition`'s
-  * source-clustered arrays, SURVEY.md §1.1).
+/** Degree-aware CSR-style adjacency blocks as a DataFrame (reference
+  * analog `graphx.impl.EdgePartition`'s source-clustered arrays,
+  * SURVEY.md §1.1).
   *
   * Rows are `(bucket, src, degree, dsts sorted)` — ONE row per source
   * vertex up to the block-arity cap (`spark.graft.adjacency.maxBlockArity`);
@@ -14,8 +13,7 @@ import org.apache.spark.sql.functions._
   * carrying the true total `degree` (no unique-src invariant — see
   * [[fromEdges]] / [[PreparedGraph.cappedBlocks]]). `bucket` is a
   * degree-band (log2 of out-degree) so hubs can be placed, salted, or
-  * processed separately from the long tail; blocks are written
-  * repartitioned by (bucket, src) so a bucket's blocks are clustered.
+  * processed separately from the long tail.
   */
 object Adjacency {
 
@@ -58,25 +56,10 @@ object Adjacency {
         col("dsts"))
   }
 
-  def toTyped(df: DataFrame)(implicit spark: SparkSession): Dataset[AdjacencyBlock] = {
-    import spark.implicits._
-    df.select(col("bucket"), col("src"), col("degree"), col("dsts")).as[AdjacencyBlock]
-  }
-
   /** Explode blocks back to an edge table (inverse of fromEdges up to
     * parallel-edge multiplicity kept by collect_list). */
   def toEdges(adj: DataFrame): DataFrame =
     adj.select(col("src"), explode(col("dsts")).as("dst"))
-
-  /** Write clustered by degree bucket then source — the at-rest layout the
-    * north star asks for. Routed through the TableIO seam: locally a
-    * bucket-partitioned parquet dir, on a lakehouse an Iceberg table
-    * partitioned by the degree band. */
-  def write(adj: DataFrame, ref: String, numPartitions: Int = 32): Unit =
-    graft.sources.TableIO.forSession(adj.sparkSession).write(
-      adj.repartition(numPartitions, col("bucket"), col("src"))
-        .sortWithinPartitions("bucket", "src"),
-      ref, clusterBy = Seq("bucket"))
 
   /** Incident (vertex, neighbor) pairs under a direction: Out = a vertex's
     * out-neighbors, In = in-neighbors, Either = both (each parallel edge

@@ -1,12 +1,12 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Structural operators over the edge table — the Dataset re-expression of
   * the reference's `Graph`/`GraphOps` surface (spark-graphx 4.1.2
-  * `Graph.{reverse,subgraph,mask,groupEdges}`, `GraphOps.{removeSelfEdges,
-  * convertToCanonicalEdges,degrees,collectNeighborIds}`; SURVEY.md §2.2-2.3).
+  * `GraphOps.{removeSelfEdges,convertToCanonicalEdges,degrees,
+  * collectNeighborIds}`; SURVEY.md §2.2-2.3).
   *
   * All ops are single declarative plans: filters/projections stay narrow,
   * aggregations get map-side partial aggregation from Catalyst, and joins
@@ -34,10 +34,6 @@ object EdgeOps {
   def readEdges(spark: SparkSession, ref: String): DataFrame =
     graft.sources.TableIO.forSession(spark).read(spark, ref).select(col("src"), col("dst"))
 
-  /** Reference `Graph.reverse`. */
-  def reverse(e: DataFrame): DataFrame =
-    e.select(col("dst").as("src"), col("src").as("dst"))
-
   /** Reference `GraphOps.removeSelfEdges`. */
   def removeSelfLoops(e: DataFrame): DataFrame = e.filter(col("src") =!= col("dst"))
 
@@ -49,25 +45,6 @@ object EdgeOps {
       .select(least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst"))
       .distinct()
-
-  /** Reference `Graph.groupEdges` (ours is global, not per-partition —
-    * strictly stronger semantics, SURVEY.md §2.2): collapse parallel
-    * edges, counting multiplicity. */
-  def groupEdges(e: DataFrame): DataFrame =
-    e.groupBy("src", "dst").agg(count(lit(1)).as("multiplicity"))
-
-  /** Reference `Graph.subgraph(vpred)`: keep edges whose BOTH endpoints
-    * satisfy the vertex predicate — two semi-joins against the kept set. */
-  def subgraph(e: DataFrame, keptVertices: DataFrame): DataFrame = {
-    val v = keptVertices.select(col("id"))
-    val v2 = keptVertices.select(col("id").as("id2"))
-    e.join(v, e("src") === v("id"), "left_semi")
-      .join(v2, e("dst") === v2("id2"), "left_semi")
-  }
-
-  /** Reference `Graph.mask`: structural intersection on (src, dst). */
-  def mask(e: DataFrame, other: DataFrame): DataFrame =
-    e.join(other.select("src", "dst"), Seq("src", "dst"), "left_semi")
 
   /** Vertex set of an edge table. */
   def vertices(e: DataFrame): DataFrame =
@@ -86,12 +63,6 @@ object EdgeOps {
   def degrees(e: DataFrame): DataFrame =
     e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
       .groupBy("id").agg(count(lit(1)).as("degree"))
-
-  /** Total-degree with absent-as-zero semantics over a vertex universe. */
-  def degreesTotal(e: DataFrame, verts: DataFrame): DataFrame =
-    verts.select(col("id"))
-      .join(degrees(e), Seq("id"), "left")
-      .select(col("id"), coalesce(col("degree"), lit(0L)).as("degree"))
 
   /** GraphLoader-compatible text edge-list reader (reference
     * `GraphLoader.edgeListFile`, FIXTURES.md §1.2/§3.6): whitespace-

@@ -33,14 +33,13 @@ private[graft] object Sessions {
     * only takes effect when [[local]] creates the JVM's first session. */
   private val CodegenCacheEntries = 1000
 
-  def local(cpus: Int, shufflePartitions: Int, appName: String,
-      aqe: Boolean = true): SparkSession = {
+  def local(cpus: Int, shufflePartitions: Int, appName: String): SparkSession = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", aqe.toString)
+      .config("spark.sql.adaptive.enabled", "true")
       // iterative state joins: hash join (broadcast/shuffled), never
       // re-sort the big cached side every superstep
       .config("spark.sql.join.preferSortMergeJoin", "false")

@@ -110,7 +110,43 @@ class DifferentialSpec extends SparkTestBase {
       pr.unpersist(false)
       compareRanks(pairs, oursPr, g.staticPageRank(10).vertices.collect().toMap,
         s"pr $tag")
+      // the same shapes through CC, triangles and LPA
+      val oursCc = longsOf(ConnectedComponents.run(edgesDF(pairs)))
+      assert(oursCc == g.connectedComponents().vertices.collect().toMap, s"cc $tag vs graphx")
+      assert(oursCc == unionFindCC(pairs), s"cc $tag vs union-find")
+      val oursTri = longsOf(TriangleCount.run(edgesDF(pairs)))
+      val theirsTri = g.partitionBy(PartitionStrategy.RandomVertexCut)
+        .triangleCount().vertices.collect()
+        .map { case (id, c) => id -> c.toLong }.toMap
+      assert(oursTri == theirsTri, s"tri $tag")
+      val oursLpa = longsOf(LabelPropagation.run(edgesDF(pairs),
+        LabelPropagation.Config(maxSteps = 4)))
+      assert(oursLpa == syncLpa(pairs, 4), s"lpa $tag")
     }
+  }
+
+  /** Collect an (id, long) result into a map and release it. */
+  def longsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+    val m = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    df.unpersist(false)
+    m
+  }
+
+  /** In-memory synchronous LPA: messages along both directions of each
+    * directed edge, argmax count with smallest-label tie-break. */
+  def syncLpa(pairs: Seq[(Long, Long)], steps: Int): Map[Long, Long] = {
+    val verts = pairs.flatMap(p => Seq(p._1, p._2)).distinct
+    var labels = verts.map(v => v -> v).toMap
+    for (_ <- 1 to steps) {
+      val msgs = pairs.flatMap { case (s, d) => Seq(d -> labels(s), s -> labels(d)) }
+      val upd = msgs.groupBy(_._1).map { case (v, ms) =>
+        val counts = ms.groupBy(_._2).map { case (l, xs) => l -> xs.size }
+        val maxC = counts.values.max
+        v -> counts.filter(_._2 == maxC).keys.min
+      }
+      labels = labels ++ upd
+    }
+    labels
   }
 
   test("differential connected components on 5 random graphs (+ union-find)") {
@@ -277,20 +313,7 @@ class DifferentialSpec extends SparkTestBase {
       val ours = LabelPropagation.run(edgesDF(pairs),
         LabelPropagation.Config(maxSteps = steps))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // in-memory synchronous LPA, messages along both directions of each
-      // directed edge, argmax count with smallest-label tie-break
-      val verts = pairs.flatMap(p => Seq(p._1, p._2)).distinct
-      var labels = verts.map(v => v -> v).toMap
-      for (_ <- 1 to steps) {
-        val msgs = pairs.flatMap { case (s, d) => Seq(d -> labels(s), s -> labels(d)) }
-        val upd = msgs.groupBy(_._1).map { case (v, ms) =>
-          val counts = ms.groupBy(_._2).map { case (l, xs) => l -> xs.size }
-          val maxC = counts.values.max
-          v -> counts.filter(_._2 == maxC).keys.min
-        }
-        labels = labels ++ upd
-      }
-      assert(ours == labels, s"lpa seed=$seed")
+      assert(ours == syncLpa(pairs, steps), s"lpa seed=$seed")
     }
   }
 }
