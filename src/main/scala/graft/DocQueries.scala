@@ -3,14 +3,14 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.textops.{Dedup, TextStats}
+import graft.textops.{Dedup, PortableHash, TextStats}
 import graft.vec.Similarity
 
 /** Training-data-pipeline queries over the driver's `documents` /
-  * `embeddings` parquet tables, with DuckDB oracles where the math is
-  * engine-portable (md5, regex, double arithmetic). Hash-based operators
-  * (MinHash/SimHash/LSH — xxhash64 has no DuckDB twin) get rows-only
-  * checks here and full ScalaTest coverage instead. */
+  * `embeddings` parquet tables, each with a DuckDB oracle: the math is
+  * engine-portable (md5, regex, double arithmetic), and the hash-based
+  * operators (MinHash/SimHash/LSH) hash with the arithmetic family of
+  * [[graft.textops.PortableHash]], which DuckDB reproduces exactly. */
 object DocQueries {
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
@@ -164,9 +164,7 @@ object DocQueries {
       | SELECT qid, nid, round(cos, 5) AS cos FROM r WHERE rk <= 3""".stripMargin
 
   /** Embedding-cosine near-dup pairs, exact baseline (threshold set to the
-    * synthetic corpus's similarity regime — max pairwise cosine ≈ 0.51).
-    * The LSH-bucketed scale path (`Similarity.cosineDupes`) is recall-
-    * tested against this in TextOpsSpec. */
+    * synthetic corpus's similarity regime — max pairwise cosine ≈ 0.51). */
   def qEmbDupes(spark: SparkSession, dir: String): DataFrame =
     Similarity.cosineDupesExact(embs(spark, dir), minCos = 0.4)
       .select(col("ia"), col("ib"), round(col("cos"), 5).as("cos"))
@@ -245,8 +243,7 @@ object DocQueries {
   // ------------------------------------------------------- quality + langid
 
   /** Quality score + language ID — the SQL-expressible half of
-    * q_text_analysis, split out so it gets a real DuckDB oracle (the
-    * fingerprint column is xxhash64-based and stays engine-only). */
+    * q_text_analysis, split out so it gets its own DuckDB oracle. */
   def qTextQuality(spark: SparkSession, dir: String): DataFrame =
     // tokens projected ONCE and shared: the regex tokenizer is the hot
     // subtree and every expression occurrence re-evaluates it (langId
@@ -306,19 +303,22 @@ object DocQueries {
       | round(sum(value), 4) AS value_sum
       | FROM events GROUP BY 1, 2""".stripMargin
 
-  // ------------------------- hash-native queries, PORTABLE oracle mode
-  // (VERDICT r3 next #2): the driver queries run the arithmetic hash
-  // family (graft.textops.PortableHash — same native expressions and
-  // join shapes, DuckDB-reproducible values) so all three gain full
-  // rows+schema+hash oracles; the xxhash64 family stays the operator
-  // default, pinned by ScalaTest recall/parity coverage.
+  // ----------------------------------------------- hash-native queries
+  // The engine hashes each string's UTF-8 BYTES, the DuckDB twins hash
+  // its CODEPOINTS: identical on ASCII, silently divergent otherwise. The
+  // two text-hashing queries therefore read `text` through
+  // PortableHash.assertAscii, so a non-ASCII corpus fails the query
+  // instead of producing a plausible-looking oracle mismatch.
+
+  private def asciiDocs(spark: SparkSession, dir: String): DataFrame =
+    docs(spark, dir).withColumn("text", PortableHash.assertAscii(col("text")))
 
   def qMinhashPairs(spark: SparkSession, dir: String): DataFrame =
-    Dedup.minhashLshPairs(docs(spark, dir), k = 3, numHashes = 128,
-      bands = 16, threshold = 0.5, portable = true)
+    Dedup.minhashLshPairs(asciiDocs(spark, dir), k = 3, numHashes = 128,
+      bands = 16, threshold = 0.5)
       .select(col("ia"), col("ib"), round(col("jaccard"), 6).as("jaccard"))
 
-  /** Independent DuckDB twin of the FULL portable pipeline: shingles →
+  /** Independent DuckDB twin of the FULL pipeline: shingles →
     * per-shingle char-polynomial hash → 128 multiply-shift slots
     * (min-accumulated) → 16 polynomial band hashes → banded candidate
     * join → exact Jaccard ≥ 0.5 verification. */
@@ -354,9 +354,9 @@ object DocQueries {
     * the candidate join selective (h=8 on this corpus admits ~4% of ALL
     * pairs — not a near-dup predicate). */
   def qSimhashPairs(spark: SparkSession, dir: String): DataFrame =
-    Dedup.simhashPairs(docs(spark, dir), maxHamming = 3, portable = true)
+    Dedup.simhashPairs(asciiDocs(spark, dir), maxHamming = 3)
 
-  /** DuckDB twin of the portable simhash: per token FOUR char-polynomial
+  /** DuckDB twin of the simhash: per token FOUR char-polynomial
     * hashes (131/137/139/149); signature bit (16c + b) = sign of the vote
     * sum over bit b of hash c — so the four 16-bit Hamming-band chunks
     * are computed directly (integer div/mod), never a signed 64-bit pack;
@@ -437,11 +437,11 @@ object DocQueries {
   def qLshTopK(spark: SparkSession, dir: String): DataFrame = {
     val e = embs(spark, dir)
     Similarity.lshTopK(e, e.filter(col("vec_id") < 10), k = 3, bits = 4,
-      tables = 8, portable = true)
+      tables = 8)
       .select(col("qid"), col("nid"), round(col("cos"), 5).as("cos"))
   }
 
-  /** DuckDB twin of the portable LSH ANN: ±1 planes from the shared
+  /** DuckDB twin of the LSH ANN: ±1 planes from the shared
     * integer-arithmetic sign formula (PortableHash.planeSign), sign-bit
     * buckets, bucket-equi-join candidates, exact cosine re-rank top-3.
     * Embedding dim is fixed at 64 by the driver testdata generator. */

@@ -1,13 +1,11 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Query contract — see SURVEY.md §7.
   *
   * Each `queries` entry is one implemented operator (SURVEY.md §2) run over
   * the driver's parquet testdata; `oracleSql` holds an INDEPENDENT DuckDB
-  * re-implementation for the driver's correctness gate. Hash-based
-  * operators without a DuckDB twin (xxhash64) ship without oracle →
-  * rows-only check + ScalaTest coverage. */
+  * re-implementation for the correctness gate (`graft.Verify`). */
 object SparkEntry {
 
   /** Flagship: PageRank over the order graph derived from sf0.001. */
@@ -44,8 +42,7 @@ object SparkEntry {
     "q_text_analysis" -> (DocQueries.qLangId _),
     "q_tfidf" -> (DocQueries.qTfidf _),
     "q_event_windows" -> (DocQueries.qEventWindows _),
-    // hash-native queries in PORTABLE oracle mode since r4 (arithmetic
-    // hash family with a DuckDB twin; xxhash64 stays the API default)
+    // hash-native queries: the arithmetic hash family has a DuckDB twin
     "q_minhash_pairs" -> (DocQueries.qMinhashPairs _),
     "q_simhash_pairs" -> (DocQueries.qSimhashPairs _),
     "q_lsh_topk" -> (DocQueries.qLshTopK _)
@@ -82,10 +79,9 @@ object SparkEntry {
     "q_text_analysis" -> DocQueries.qTextAnalysisSql,
     "q_tfidf" -> DocQueries.qTfidfSql,
     "q_event_windows" -> DocQueries.qEventWindowsSql,
-    // full oracles since r4: the last three hash-native queries run the
-    // PORTABLE arithmetic hash family (graft.textops.PortableHash) —
-    // DuckDB reproduces signatures, banding and candidates exactly;
-    // xxhash64 stays the operator default outside the driver queries
+    // the hash-native queries run the arithmetic hash family
+    // (graft.textops.PortableHash) — DuckDB reproduces signatures,
+    // banding and candidates exactly
     "q_minhash_pairs" -> DocQueries.qMinhashPairsSql,
     "q_simhash_pairs" -> DocQueries.qSimhashPairsSql,
     "q_lsh_topk" -> DocQueries.qLshTopKSql

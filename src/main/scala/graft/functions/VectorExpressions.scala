@@ -171,23 +171,22 @@ case class NormalizeL2(child: Expression)
 }
 
 /** MinHash signature of a string-array column in ONE pass over the
-  * shingles: each shingle is xxhash64'd ONCE (seed 42, Spark's own
-  * XXH64 — the same primitive the builtin xxhash64 uses), then the
-  * `numHashes` signature slots are derived by a multiply-shift universal
-  * family `h_j = h·a_j + b_j` (odd a_j, natural 2^64 wraparound) with
-  * min-accumulation into a primitive long[].
+  * shingles, in the arithmetic hash family of
+  * `graft.textops.PortableHash`: each shingle is hashed ONCE as a
+  * polynomial over its UTF-8 bytes mod the 31-bit prime P (multiplier
+  * 131), then the `numHashes` signature slots are derived as
+  * `((2j+1)·h + j·7919) mod P` with min-accumulation into a primitive
+  * long[]. Every product stays below 2⁵², so DuckDB BIGINT arithmetic
+  * (hashing codepoints — the same values on ASCII) reproduces the
+  * signature bit-for-bit.
   *
   * The builtin-expression formulation — `transform(seq(0,n-1), i =>
-  * array_min(transform(sh, s => xxhash64(i, s))))` — re-hashes every
-  * shingle STRING once per hash function (n × |sh| string hashes through
-  * an interpreted HOF chain, plus n intermediate arrays); this expression
-  * does |sh| string hashes + n·|sh| long multiply-adds in a tight loop.
-  * Signature VALUES differ from the builtin formulation (different but
-  * equally uniform family — MinHash guarantees are family-agnostic);
-  * recall tests pin the operator's behavior.
+  * array_min(transform(sh, s => hash_i(s))))` — re-hashes every shingle
+  * STRING once per hash function (n × |sh| string hashes through an
+  * interpreted HOF chain, plus n intermediate arrays); this expression
+  * does |sh| string hashes + n·|sh| multiply-adds in a tight loop.
   */
-case class MinHashSignature(child: Expression, numHashes: Int,
-    portable: Boolean = false)
+case class MinHashSignature(child: Expression, numHashes: Int)
     extends UnaryExpression with ImplicitCastInputTypes with Serializable {
 
   require(numHashes >= 1, s"numHashes must be >= 1, got $numHashes")
@@ -202,26 +201,7 @@ case class MinHashSignature(child: Expression, numHashes: Int,
 
   override def prettyName: String = "graft_minhash"
 
-  // deterministic splitmix64-scrambled multiply-shift parameters
-  @transient private lazy val (as, bs): (Array[Long], Array[Long]) = {
-    def mix(z0: Long): Long = {
-      var z = z0 + 0x9e3779b97f4a7c15L
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
-    val a = Array.tabulate(numHashes)(j => mix(2L * j) | 1L) // odd
-    val b = Array.tabulate(numHashes)(j => mix(2L * j + 1))
-    (a, b)
-  }
-
-  /** Shared by eval and the codegen'd call. Portable mode (ORACLE
-    * contract — graft.textops.PortableHash): inner hash = character
-    * polynomial mod the 31-bit prime P (ASCII bytes — matching DuckDB's
-    * `unicode` per char), slots = `((2j+1)·h + j·7919) mod P` — every
-    * product < 2⁵², so DuckDB BIGINT arithmetic reproduces the signature
-    * bit-for-bit. Default mode keeps the XXH64 multiply-shift family
-    * (the scale path). */
+  /** Shared by eval and the codegen'd call. */
   def computeSig(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     val sig = Array.fill(numHashes)(Long.MaxValue)
@@ -229,30 +209,18 @@ case class MinHashSignature(child: Expression, numHashes: Int,
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        val s = arr.getUTF8String(i)
-        if (portable) {
-          var h = 0L
-          val bytes = s.getBytes
-          var b = 0
-          while (b < bytes.length) {
-            h = (h * 131L + (bytes(b) & 0xffL)) % P
-            b += 1
-          }
-          var j = 0
-          while (j < numHashes) {
-            val v = ((2L * j + 1L) * h + j.toLong * 7919L) % P
-            if (v < sig(j)) sig(j) = v
-            j += 1
-          }
-        } else {
-          val h = org.apache.spark.sql.catalyst.expressions.XXH64
-            .hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes(), 42L)
-          var j = 0
-          while (j < numHashes) {
-            val v = h * as(j) + bs(j)
-            if (v < sig(j)) sig(j) = v
-            j += 1
-          }
+        var h = 0L
+        val bytes = arr.getUTF8String(i).getBytes
+        var b = 0
+        while (b < bytes.length) {
+          h = (h * 131L + (bytes(b) & 0xffL)) % P
+          b += 1
+        }
+        var j = 0
+        while (j < numHashes) {
+          val v = ((2L * j + 1L) * h + j.toLong * 7919L) % P
+          if (v < sig(j)) sig(j) = v
+          j += 1
         }
       }
       i += 1
@@ -279,16 +247,13 @@ case class MinHashSignature(child: Expression, numHashes: Int,
   * measured q_simhash_pairs hot spot, ~64 boxed lambda evaluations per
   * token).
   *
-  * Default mode: one XXH64 (seed 42 — bit-identical to the builtin
-  * `xxhash64(string)`) per token, bit j of the hash votes ±1 on signature
-  * bit j. Portable mode (ORACLE contract — graft.textops.PortableHash):
-  * four character-polynomial hashes per token (multipliers
-  * 131/137/139/149 mod the 31-bit prime), signature bit (16c + b) votes
-  * with bit b of hash c — exactly the DuckDB-reproducible family the
-  * portable HOF formulation defined; both modes produce bit-identical
-  * values to their HOF twins (pinned by test). Ties (vote sum 0) leave
-  * the bit clear. */
-case class SimHashSignature(child: Expression, portable: Boolean = false)
+  * Hash family of `graft.textops.PortableHash`: four polynomial hashes
+  * per token over its UTF-8 bytes (multipliers 131/137/139/149 mod the
+  * 31-bit prime), signature bit (16c + b) votes ±1 with bit b of hash c
+  * — the values the HOF formulation in TextOpsSpec computes (pinned by
+  * test) and the DuckDB twin of q_simhash_pairs reproduces. Ties (vote
+  * sum 0) leave the bit clear. */
+case class SimHashSignature(child: Expression)
     extends UnaryExpression with ImplicitCastInputTypes with Serializable {
 
   override def inputTypes: Seq[AbstractDataType] =
@@ -310,30 +275,19 @@ case class SimHashSignature(child: Expression, portable: Boolean = false)
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        val s = arr.getUTF8String(i)
-        if (portable) {
-          val bytes = s.getBytes
-          var c = 0
-          while (c < 4) {
-            val m = Mults(c)
-            var h = 0L
-            var b = 0
-            while (b < bytes.length) { h = (h * m + (bytes(b) & 0xffL)) % P; b += 1 }
-            var bit = 0
-            while (bit < 16) {
-              votes(16 * c + bit) += (((h >>> bit) & 1L).toInt * 2) - 1
-              bit += 1
-            }
-            c += 1
+        val bytes = arr.getUTF8String(i).getBytes
+        var c = 0
+        while (c < 4) {
+          val m = Mults(c)
+          var h = 0L
+          var b = 0
+          while (b < bytes.length) { h = (h * m + (bytes(b) & 0xffL)) % P; b += 1 }
+          var bit = 0
+          while (bit < 16) {
+            votes(16 * c + bit) += (((h >>> bit) & 1L).toInt * 2) - 1
+            bit += 1
           }
-        } else {
-          val h = org.apache.spark.sql.catalyst.expressions.XXH64
-            .hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes(), 42L)
-          var j = 0
-          while (j < 64) {
-            votes(j) += (((h >>> j) & 1L).toInt * 2) - 1
-            j += 1
-          }
+          c += 1
         }
       }
       i += 1
@@ -608,14 +562,12 @@ object VectorExpressions {
       VectorSum(ExpressionUtils.expression(a)).toAggregateExpression())
 
   /** Native one-pass MinHash signature (array<long>) of a string array. */
-  def minhash(a: Column, numHashes: Int, portable: Boolean = false): Column =
-    ExpressionUtils.column(MinHashSignature(ExpressionUtils.expression(a),
-      numHashes, portable))
+  def minhash(a: Column, numHashes: Int): Column =
+    ExpressionUtils.column(MinHashSignature(ExpressionUtils.expression(a), numHashes))
 
   /** One-pass 64-bit SimHash of a token-array column. */
-  def simhash(tokens: Column, portable: Boolean = false): Column =
-    ExpressionUtils.column(SimHashSignature(ExpressionUtils.expression(tokens),
-      portable))
+  def simhash(tokens: Column): Column =
+    ExpressionUtils.column(SimHashSignature(ExpressionUtils.expression(tokens)))
 
   /** One-pass polynomial document fingerprint of a token-array column. */
   def fingerprint(tokens: Column): Column =

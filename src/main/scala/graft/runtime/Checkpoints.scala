@@ -30,15 +30,6 @@ object Checkpoints {
   def logPath(cfg: CheckpointConfig, algo: String): String =
     s"${cfg.dir}/${cfg.runId}/$algo/_superstep_log"
 
-  /** Persist a state snapshot for `superstep` and return the re-read frame
-    * (lineage truncated to a table scan). */
-  def save(state: DataFrame, cfg: CheckpointConfig, algo: String, superstep: Int): DataFrame = {
-    val spark = state.sparkSession
-    val io = TableIO.forSession(spark)
-    io.write(state, stateDir(cfg, algo, superstep))
-    io.read(spark, stateDir(cfg, algo, superstep))
-  }
-
   /** Latest COMMITTED snapshot (max superstep child the TableIO impl
     * lists as complete): parquet dirs with a _SUCCESS marker on any
     * Hadoop-FS scheme, or atomic catalog tables on a lakehouse. */

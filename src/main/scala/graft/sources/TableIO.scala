@@ -20,11 +20,8 @@ trait TableIO {
 
   def read(spark: SparkSession, ref: String): DataFrame
 
-  /** Write (overwrite by default); `clusterBy` requests the at-rest
-    * clustering the impl supports (parquet: partitionBy dirs; iceberg:
-    * partitioned table columns). */
-  def write(df: DataFrame, ref: String, mode: SaveMode = SaveMode.Overwrite,
-      clusterBy: Seq[String] = Nil): Unit
+  /** Write (overwrite by default). */
+  def write(df: DataFrame, ref: String, mode: SaveMode = SaveMode.Overwrite): Unit
 
   def append(df: DataFrame, ref: String): Unit =
     write(df, ref, SaveMode.Append)
@@ -77,11 +74,8 @@ object ParquetTableIO extends TableIO {
   override def read(spark: SparkSession, ref: String): DataFrame =
     spark.read.parquet(ref)
 
-  override def write(df: DataFrame, ref: String, mode: SaveMode,
-      clusterBy: Seq[String]): Unit = {
-    val w = df.write.mode(mode)
-    (if (clusterBy.nonEmpty) w.partitionBy(clusterBy: _*) else w).parquet(ref)
-  }
+  override def write(df: DataFrame, ref: String, mode: SaveMode): Unit =
+    df.write.mode(mode).parquet(ref)
 
   override def exists(spark: SparkSession, ref: String): Boolean = {
     val (fs, p, _) = fsOf(spark, ref)
@@ -166,12 +160,8 @@ final class IcebergTableIO(catalog: String, namespace: String = "graft",
   override def read(spark: SparkSession, ref: String): DataFrame =
     spark.table(fq(ref))
 
-  override def write(df: DataFrame, ref: String, mode: SaveMode,
-      clusterBy: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.col
-    val w0 = df.writeTo(fq(ref)).using(provider)
-    val w = if (clusterBy.nonEmpty) w0.partitionedBy(col(clusterBy.head),
-      clusterBy.tail.map(col): _*) else w0
+  override def write(df: DataFrame, ref: String, mode: SaveMode): Unit = {
+    val w = df.writeTo(fq(ref)).using(provider)
     mode match {
       case SaveMode.Append =>
         if (!exists(df.sparkSession, ref)) w.create()

@@ -97,34 +97,17 @@ object Dedup {
 
   // --------------------------------------------------------------- minhash
 
-  /** MinHash signature over a PRE-COMPUTED shingle-array column — the
-    * native one-pass expression (graft.functions.MinHashSignature): each
-    * shingle string hashed ONCE, the numHashes slots derived by a
-    * multiply-shift family in a tight loop. Takes the column (not the
-    * text) deliberately — inlining the regexp-heavy shingle expression
-    * here would re-evaluate it per reference (measured 25× slowdown).
-    * (The r2 builtin formulation re-hashed every shingle string once per
-    * hash function through an interpreted HOF chain.)
-    * `portable = true` switches to the DuckDB-reproducible arithmetic
-    * family ([[PortableHash]]) — same native one-pass loop, oracle-mode
-    * values. */
-  def minhashSignatureOfShingles(sh: Column, numHashes: Int,
-      portable: Boolean = false): Column =
-    org.apache.spark.sql.graftvec.VectorExpressions.minhash(sh, numHashes, portable)
-
   /** MinHash LSH near-dup pairs: signatures banded (bands × rowsPerBand =
     * numHashes); docs colliding on any band's hash become candidates;
     * candidates verified with exact shingle Jaccard ≥ threshold.
     * Collision probability at Jaccard j is 1-(1-j^r)^b — with the default
     * 16×8 a j=0.8 pair is caught w.p. ~0.986, j=0.5 w.p. ~0.06.
-    * `portable = true`: signature AND band hashes come from the
-    * arithmetic family, so the whole query has an independent DuckDB
-    * twin (candidate generation included); xxhash64 stays the default
-    * scale path. */
+    * Signature (graft.functions.MinHashSignature, one native pass over
+    * the materialized shingle column) and band hashes both come from the
+    * [[PortableHash]] family. */
   def minhashLshPairs(docs: DataFrame, k: Int = 3, numHashes: Int = 128,
       bands: Int = 16, threshold: Double = 0.8,
-      idCol: String = "doc_id", textCol: String = "text",
-      portable: Boolean = false): DataFrame = Storage.scope { s =>
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = Storage.scope { s =>
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
     // Materialize the shingle and band frames: the banded self-join plus
@@ -134,23 +117,18 @@ object Dedup {
     // as a 50×+ blowup. localCheckpoint = eager, plan+lineage truncated;
     // the scope releases both after the result is materialized, or when
     // a materialization fails.
-    // portable mode is ASCII-gated: a non-ASCII doc raises instead of
-    // silently diverging from the DuckDB oracle family (ADVICE r4)
-    val textIn = if (portable) PortableHash.assertAscii(col(textCol)) else col(textCol)
     // spread a few-split corpus before the shingle + numHashes-signature
     // stage (the query's CPU hot spot — measured 4.8 s on one core from a
     // single-file scan vs ~0.3 s spread)
     val sh = s.local(graft.runtime.AdaptivePartitions.spread(docs)
-      .select(col(idCol).as("id"), shingles(textIn, k).as("sh")))
-    val bandHash: (Column, Column) => Column =
-      if (portable) (b, sl) => PortableHash.polyCombine(sl, b)
-      else (b, sl) => xxhash64(b, sl)
+      .select(col(idCol).as("id"), shingles(col(textCol), k).as("sh")))
     val banded = s.local(sh
       .select(col("id"),
-        minhashSignatureOfShingles(col("sh"), numHashes, portable).as("sig"))
+        org.apache.spark.sql.graftvec.VectorExpressions
+          .minhash(col("sh"), numHashes).as("sig"))
       .select(col("id"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => bandHash(b, slice(col("sig"), b * r + 1, lit(r))))))
+          b => PortableHash.polyCombine(slice(col("sig"), b * r + 1, lit(r)), b))))
       .select(col("id"), col("pos").as("band"), col("col").as("bh")))
     val cand = banded.alias("x").join(banded.alias("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
@@ -205,28 +183,17 @@ object Dedup {
   /** 64-bit SimHash over whitespace tokens: per bit position, sign of the
     * ±1 vote sum of token hashes. Returns a LONG.
     *
-    * Native one-pass expression (graft.functions.SimHashSignature): each
-    * token XXH64'd once (bit-identical to builtin `xxhash64(string)`),
-    * all 64 vote counters updated in a tight int[] loop. Replaces the r3
-    * builtin-HOF formulation (one `zip_with` over a 64-slot boxed array
-    * per token through interpreted lambdas — the measured q_simhash_pairs
-    * hot spot); the HOF formula survives as the bit-identity pin in
-    * TextOpsSpec. */
+    * Native one-pass expression (graft.functions.SimHashSignature) in the
+    * [[PortableHash]] family: four polynomial hashes per token
+    * (multipliers 131/137/139/149 mod P), bit (16c + b) of the signature
+    * votes with bit b of hash c — so the four 16-bit chunks the Hamming
+    * banding uses are DIRECTLY the low-16-bit views DuckDB computes with
+    * integer div/mod, no 64-bit wraparound anywhere on the oracle side.
+    * The builtin-HOF formulation it replaced survives as the bit-identity
+    * pin in TextOpsSpec. */
   def simhash(text: Column): Column =
     org.apache.spark.sql.graftvec.VectorExpressions
       .simhash(TextStats.tokensWs(text))
-
-  /** Portable 64-bit SimHash (ORACLE MODE — [[PortableHash]]): four
-    * character-polynomial hashes per token (multipliers 131/137/139/149
-    * mod P), bit (16c + b) of the signature votes with bit b of hash c —
-    * so the four 16-bit chunks the Hamming banding uses are DIRECTLY the
-    * low-16-bit views DuckDB computes with integer div/mod, no 64-bit
-    * wraparound anywhere on the oracle side. Same native one-pass
-    * expression as [[simhash]], portable family. ASCII-gated
-    * ([[PortableHash.assertAscii]] — ADVICE r4). */
-  def simhashPortable(text: Column): Column =
-    org.apache.spark.sql.graftvec.VectorExpressions
-      .simhash(TextStats.tokensWs(PortableHash.assertAscii(text)), portable = true)
 
   /** SimHash near-dup pairs with Hamming distance ≤ maxHamming, candidates
     * by the pigeonhole band trick, verified with bit_count(xor).
@@ -249,17 +216,15 @@ object Dedup {
     * avoid. Distances that loose on a 64-bit signature separate nothing
     * anyway (Manku et al. operate at 3). */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text",
-      portable: Boolean = false): DataFrame = Storage.scope { s =>
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = Storage.scope { s =>
     require(maxHamming >= 0 && maxHamming <= 7,
       s"maxHamming=$maxHamming out of range: must be in [0, 7] — larger " +
         "radii make the pair-bucket keys non-selective (quadratic candidate " +
         "volume at corpus scale) and are meaningless on a 64-bit simhash")
     // hash once, reused by both self-join sides and released after the
     // (small) result is materialized
-    val sig = if (portable) simhashPortable(col(textCol)) else simhash(col(textCol))
     val withSh = s.local(graft.runtime.AdaptivePartitions.spread(docs)
-      .select(col(idCol).as("id"), sig.as("sh")))
+      .select(col(idCol).as("id"), simhash(col(textCol)).as("sh")))
     // NOTE w = 64 (maxHamming = 0): 1L << 64 wraps to 1 in Java/Scala
     // (shifts are mod 64), so (1L << w) - 1 would be 0 — an all-zero
     // "mask" that put every doc in ONE bucket (all-pairs cross join).

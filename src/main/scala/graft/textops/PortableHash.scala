@@ -3,22 +3,20 @@ package graft.textops
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Engine-portable hashing for ORACLE MODE (VERDICT r3 next #2).
+/** The one hash family of MinHash, SimHash and LSH.
   *
-  * The scale paths hash with xxhash64 / XXH64 — fast, but with no DuckDB
-  * twin, so the three hash-native driver queries (q_minhash_pairs,
-  * q_simhash_pairs, q_lsh_topk) shipped `no_oracle`. This module defines
-  * a pure-ARITHMETIC hash family — character polynomials mod a 31-bit
-  * prime, multiply-shift slot derivation, polynomial band combination —
-  * where every intermediate stays below 2⁵² so Spark BIGINT, DuckDB
-  * BIGINT and IEEE doubles all compute the identical value. Same design
-  * as the r3 fingerprint oracle (`TextStats.fingerprint`,
+  * A pure-ARITHMETIC family — character polynomials mod a 31-bit prime,
+  * multiply-shift slot derivation, polynomial band combination — where
+  * every intermediate stays below 2⁵² so Spark BIGINT, DuckDB BIGINT and
+  * IEEE doubles all compute the identical value. The three hash-native
+  * queries (q_minhash_pairs, q_simhash_pairs, q_lsh_topk) are
+  * therefore checked bit-for-bit against DuckDB twins. Same design as the
+  * fingerprint oracle (`TextStats.fingerprint`,
   * `DocQueries.qTextAnalysisSql`), generalized.
   *
-  * Contract: ASCII token corpora (Spark `ascii` = DuckDB `unicode` for
-  * ASCII; the synthetic corpus is verified ASCII-only). The xxhash64
-  * family remains the default everywhere — portable mode is an opt-in
-  * flag on each operator.
+  * The native expressions hash UTF-8 bytes; the DuckDB twins hash
+  * codepoints. The two agree on ASCII text, which is what
+  * [[assertAscii]] guards in the oracle queries.
   */
 object PortableHash {
 
@@ -27,21 +25,21 @@ object PortableHash {
     * BIGINT-exact). */
   val P: Long = 2147483629L
 
-  /** ASCII gate for portable mode (ADVICE r4): the NATIVE portable
-    * expressions (MinHashSignature / SimHashSignature, portable family)
-    * hash each string's UTF-8 BYTES in a tight loop, while [[charPoly]]
-    * and the DuckDB twins hash per-character CODEPOINTS — identical on
-    * ASCII, silently divergent on anything else. Rather than let a
-    * non-ASCII corpus produce wrong-but-plausible signatures in oracle
-    * mode, fail loudly: passes the text through when
-    * `octet_length = char_length` (pure-ASCII ⇔ every char is one byte),
-    * raises otherwise. Cost: two codegen'd length calls per row. */
+  /** ASCII gate for the oracle-checked queries (ADVICE r4): the NATIVE
+    * expressions (MinHashSignature / SimHashSignature) hash each string's
+    * UTF-8 BYTES in a tight loop, while [[charPoly]] and the DuckDB twins
+    * hash per-character CODEPOINTS — identical on ASCII, silently
+    * divergent on anything else. Rather than let a non-ASCII corpus
+    * produce a wrong-but-plausible oracle comparison, fail loudly: passes
+    * the text through when `octet_length = char_length` (pure-ASCII ⇔
+    * every char is one byte), raises otherwise. Cost: two codegen'd
+    * length calls per row. */
   def assertAscii(t: Column): Column =
     when(t.isNull || octet_length(t) === length(t), t)
       .otherwise(raise_error(concat(
-        lit("portable hash mode is ASCII-only (native loops hash UTF-8 " +
-          "bytes; the DuckDB oracle family hashes codepoints — values " +
-          "would silently diverge). Non-ASCII text: "),
+        lit("the hash oracle queries are ASCII-only (native loops hash " +
+          "UTF-8 bytes; the DuckDB twins hash codepoints — values would " +
+          "silently diverge). Non-ASCII text: "),
         substring(t, 1, 48))))
 
   /** Rolling polynomial over a string's character codes mod [[P]].
@@ -63,8 +61,7 @@ object PortableHash {
     aggregate(arr, init.cast("long"),
       (acc, v) => pmod(acc * 1000003L + v, lit(P)))
 
-  /** Deterministic ±1 hyperplane sign for (table, plane, dim) — the
-    * portable replacement for the xxhash64-parity formula. Max argument
+  /** Deterministic ±1 hyperplane sign for (table, plane, dim). Max argument
     * ≈ 70k · 2654435761 < 2⁴⁸: exact everywhere. Evaluated driver-side
     * (plain Scala) when building plane literals; the DuckDB twin is the
     * same arithmetic inline. */

@@ -12,7 +12,7 @@ object TextStats {
 
   /** Whitespace tokens. Java `\s` = `[ \t\n\x0B\f\r]` — one character
     * WIDER than RE2/DuckDB's `\s` (no `\x0B`), and vertical tab is ASCII
-    * so the portable-mode ASCII gate can't catch the difference; the
+    * so the hash oracle queries' ASCII gate can't catch it; the
     * DuckDB oracle twins therefore spell the Java class out explicitly
     * (`DocQueries`) instead of using `\s`. */
   def tokensWs(text: Column): Column =

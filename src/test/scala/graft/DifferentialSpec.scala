@@ -23,21 +23,28 @@ class DifferentialSpec extends SparkTestBase {
   test("differential static PageRank on 5 random graphs") {
     for (seed <- 1 to 5) {
       val pairs = randomEdges(seed, n = 60, m = 200)
-      val ours = PageRank.run(edgesDF(pairs), PageRank.Config(numIter = 15))
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       val theirs = graphxOf(pairs).staticPageRank(15)
         .vertices.collect().toMap
-      compareRanks(pairs, ours, theirs, s"pr seed=$seed")
+      // saltBuckets > 1: the salted two-level message aggregate
+      for (salt <- Seq(1, 3)) {
+        val ours = PageRank.run(edgesDF(pairs),
+          PageRank.Config(numIter = 15, saltBuckets = salt))
+          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        compareRanks(pairs, ours, theirs, s"pr seed=$seed salt=$salt")
+      }
     }
   }
 
   test("differential convergence PageRank on 3 random graphs") {
     for (seed <- 10 to 12) {
       val pairs = randomEdges(seed, n = 50, m = 150)
-      val ours = PageRank.run(edgesDF(pairs), PageRank.Config(tol = Some(1e-6)))
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       val theirs = graphxOf(pairs).pageRank(1e-6).vertices.collect().toMap
-      compareRanks(pairs, ours, theirs, s"prTol seed=$seed")
+      for (salt <- Seq(1, 3)) {
+        val ours = PageRank.run(edgesDF(pairs),
+          PageRank.Config(tol = Some(1e-6), saltBuckets = salt))
+          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        compareRanks(pairs, ours, theirs, s"prTol seed=$seed salt=$salt")
+      }
     }
   }
 

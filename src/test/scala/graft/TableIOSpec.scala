@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import graft.sources.{IcebergTableIO, ParquetTableIO, TableIO}
 
@@ -60,24 +59,15 @@ class TableIOSpec extends SparkTestBase {
       hc.setBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", true)
   }
 
-  test("parquet impl: clusterBy writes partitioned layout") {
-    import spark.implicits._
-    val base = tempDir("tio2").toString
-    val df = Seq((0, 1L), (0, 2L), (1, 3L)).toDF("bucket", "src")
-    ParquetTableIO.write(df, s"$base/adj", SaveMode.Overwrite, Seq("bucket"))
-    assert(new java.io.File(s"$base/adj/bucket=0").isDirectory)
-    assert(new java.io.File(s"$base/adj/bucket=1").isDirectory)
-    val back = ParquetTableIO.read(spark, s"$base/adj")
-    assert(back.count() == 3 && back.columns.toSet == Set("bucket", "src"))
-  }
-
   test("checkpoint store goes through the seam (save + latest round-trip)") {
     import spark.implicits._
     val dir = tempDir("tio3").toString
     val cfg = graft.runtime.CheckpointConfig(dir, "r1")
     val st = Seq((1L, 0.5), (2L, 0.7)).toDF("id", "rank")
-    graft.runtime.Checkpoints.save(st, cfg, "pr", 4)
-    graft.runtime.Checkpoints.save(st.withColumn("rank", col("rank") * 2), cfg, "pr", 8)
+    val io = TableIO.forSession(spark)
+    io.write(st, graft.runtime.Checkpoints.stateDir(cfg, "pr", 4))
+    io.write(st.withColumn("rank", col("rank") * 2),
+      graft.runtime.Checkpoints.stateDir(cfg, "pr", 8))
     val Some((step, frame)) = graft.runtime.Checkpoints.latest(spark, cfg, "pr")
     assert(step == 8)
     assert(frame.agg(sum("rank")).first().getDouble(0) == 2.4)

@@ -30,39 +30,6 @@ class TextOpsSpec extends SparkTestBase {
       s"recall ${mh.size}/${exact.size}")
   }
 
-  test("PORTABLE oracle mode keeps operator behavior: minhash recall ≥ " +
-      "0.95, simhash collisions, LSH recall (VERDICT r3 next #2)") {
-    def pairsD(df: org.apache.spark.sql.DataFrame) =
-      df.select("ia", "ib").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // minhash: portable family is a different uniform family — same
-    // verified-subset + recall contract as the xxhash64 default
-    val exact = pairsD(Dedup.ngramJaccardPairs(docs, k = 3, threshold = 0.5))
-    val mhP = pairsD(Dedup.minhashLshPairs(docs, k = 3, numHashes = 128,
-      bands = 16, threshold = 0.5, portable = true))
-    assert(mhP.subsetOf(exact), "portable minhash returned a pair below threshold")
-    assert(exact.isEmpty || mhP.size.toDouble / exact.size >= 0.95,
-      s"portable recall ${mhP.size}/${exact.size}")
-    // simhash: identical docs collide at distance 0, disjoint content doesn't
-    import spark.implicits._
-    val d = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog again and again"),
-      (2L, "the quick brown fox jumps over the lazy dog again and again"),
-      (3L, "completely different content about spark catalyst optimizer plans"))
-      .toDF("doc_id", "text")
-    val shP = Dedup.simhashPairs(d, maxHamming = 3, portable = true)
-      .select("ia", "ib").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(shP.contains((1L, 2L)) && !shP.contains((1L, 3L)))
-    // LSH ANN: portable planes keep the recall contract
-    def pairsQ(df: org.apache.spark.sql.DataFrame) =
-      df.select("qid", "nid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val q = embs.filter(col("vec_id") < 20)
-    val ex = pairsQ(Similarity.bruteForceTopK(embs, q, 3))
-    val ap = pairsQ(Similarity.lshTopK(embs, q, 3, bits = 4, tables = 8,
-      portable = true))
-    val recall = (ex & ap).size.toDouble / ex.size
-    assert(recall >= 0.5, s"portable LSH recall $recall")
-  }
-
   test("dupClusters: transitive closure of near-dup pairs via the " +
       "engine's ConnectedComponents; min-id keeper per cluster") {
     import spark.implicits._
@@ -77,17 +44,7 @@ class TextOpsSpec extends SparkTestBase {
   test("native SimHashSignature is bit-identical to the builtin-HOF " +
       "formulation in BOTH hash families") {
     import org.apache.spark.sql.Column
-    // the r3 HOF formulations, kept here as the independent reference
-    def hofDefault(text: Column): Column = {
-      val hashes = transform(TextStats.tokensWs(text), t => xxhash64(t))
-      val votes = aggregate(hashes, array_repeat(lit(0L), 64),
-        (acc, h) => zip_with(acc, sequence(lit(0), lit(63)), (a, j) =>
-          a + call_function("shiftright", h, j.cast("int")).bitwiseAND(1L) * 2L - 1L))
-      aggregate(
-        zip_with(votes, sequence(lit(0), lit(63)), (v, j) =>
-          when(v > 0, call_function("shiftleft", lit(1L), j.cast("int"))).otherwise(0L)),
-        lit(0L), (acc, b) => acc.bitwiseOR(b))
-    }
+    // the r3 HOF formulation, kept here as the independent reference
     def hofPortable(text: Column): Column = {
       val mults = Seq(131L, 137L, 139L, 149L)
       val hquad = transform(TextStats.tokensWs(text),
@@ -102,13 +59,8 @@ class TextOpsSpec extends SparkTestBase {
         lit(0L), (acc, b) => acc.bitwiseOR(b))
     }
     val t = col("text")
-    val mism = docs.select(
-        (Dedup.simhash(t) =!= hofDefault(t)).as("d"),
-        (Dedup.simhashPortable(t) =!= hofPortable(t)).as("p"))
-      .agg(sum(when(col("d"), 1).otherwise(0)).as("dm"),
-        sum(when(col("p"), 1).otherwise(0)).as("pm")).first
-    assert(mism.getLong(0) == 0L, s"${mism.getLong(0)} default-family mismatches")
-    assert(mism.getLong(1) == 0L, s"${mism.getLong(1)} portable-family mismatches")
+    val mism = docs.filter(Dedup.simhash(t) =!= hofPortable(t)).count()
+    assert(mism == 0L, s"$mism mismatches")
   }
 
   test("simhash: identical docs distance 0; near-dup pairs found") {
@@ -203,17 +155,21 @@ class TextOpsSpec extends SparkTestBase {
       "diverging from the DuckDB oracle family (ADVICE r4)") {
     import spark.implicits._
     val bad = Seq((1L, "café au lait"), (2L, "plain ascii")).toDF("doc_id", "text")
+    // the gate the oracle queries (q_minhash_pairs, q_simhash_pairs) apply
     val e = intercept[Exception] {
-      Dedup.simhashPairs(bad, maxHamming = 3, portable = true).count()
+      bad.select(graft.textops.PortableHash.assertAscii(col("text"))).collect()
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
     assert(messages(e).exists(_.contains("ASCII")), s"unexpected error: $e")
-    // the same corpus is fine in the default (xxhash64) family
+    // ASCII text passes the gate unchanged
+    assert(Seq("plain ascii").toDF("text")
+      .select(graft.textops.PortableHash.assertAscii(col("text"))).as[String]
+      .collect().toSeq == Seq("plain ascii"))
+    // the operators themselves hash any text (UTF-8 bytes)
     assert(Dedup.simhashPairs(bad, maxHamming = 3).count() == 0)
-    // and ASCII-only corpora pass the portable gate unchanged
-    assert(Dedup.simhashPairs(docs.limit(20), maxHamming = 3, portable = true)
-      .count() >= 0)
+    assert(Dedup.minhashLshPairs(bad, k = 3, numHashes = 128, bands = 16,
+      threshold = 0.5).count() == 0)
   }
 
   test("token counting and ratios are consistent") {
@@ -282,31 +238,6 @@ class TextOpsSpec extends SparkTestBase {
     assert(recall >= 0.5, s"LSH recall $recall")
   }
 
-  test("embedding near-dup pairs: LSH path recalls ≥ 0.9 of exact on " +
-      "planted near-duplicates, with zero false positives") {
-    import spark.implicits._
-    // 40 random base vectors + a perturbed near-copy of each → 40 planted
-    // near-dup pairs with cos ≈ 0.995, everything else far apart
-    val rnd = new scala.util.Random(5)
-    val dim = 16
-    val rows = (0 until 40).flatMap { i =>
-      val base = Array.fill(dim)(rnd.nextGaussian().toFloat)
-      val near = base.map(x => x + 0.05f * rnd.nextGaussian().toFloat)
-      Seq((i.toLong, base.toSeq), (1000L + i, near.toSeq))
-    }
-    val vecs = rows.toDF("vec_id", "embedding")
-    def pairSet(df: org.apache.spark.sql.DataFrame) =
-      df.select("ia", "ib").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairSet(Similarity.cosineDupesExact(vecs, minCos = 0.9))
-    assert(exact.size == 40, s"expected 40 planted pairs, got ${exact.size}")
-    val approx = pairSet(Similarity.cosineDupes(vecs, minCos = 0.9,
-      bits = 8, tables = 8))
-    val recall = (exact & approx).size.toDouble / exact.size
-    assert(recall >= 0.9, s"near-dup LSH recall $recall")
-    // exact verification step ⇒ no false positives by construction
-    assert((approx -- exact).isEmpty)
-  }
-
   test("IVF: spherical k-means recovers planted clusters; probed top-k " +
       "recalls ≥ 0.9 of exact; nProbe = k is exact") {
     import spark.implicits._
@@ -339,24 +270,6 @@ class TextOpsSpec extends SparkTestBase {
     val ivfAll = pairs(graft.vec.IVF.topK(vecs, q, cents, 5, nProbe = 6))
     assert(ivfAll == exact, "nProbe = k must equal exact top-k")
     vecs.unpersist()
-  }
-
-  test("precomputed-plane LSH buckets are bit-identical to the per-row " +
-      "hash formula (the codegen'd path changes cost, not output)") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(3)
-    val rows = (0 until 50).map(i =>
-      (i.toLong, Array.fill(12)(rnd.nextGaussian().toFloat).toSeq))
-    val vecs = rows.toDF("vec_id", "embedding")
-    val tables = 4; val bits = 6
-    val planes = Similarity.planeMatrices(spark, tables, bits, 12)
-    (0 until tables).foreach { t =>
-      val both = vecs.select(
-        Similarity.lshBucket(col("embedding"), bits, t).as("slow"),
-        Similarity.lshBucketExpr(col("embedding"), planes(t)).as("fast"))
-      assert(both.filter(col("slow") =!= col("fast")).count() == 0,
-        s"table $t buckets diverge")
-    }
   }
 
   test("IVF trainer issues O(initRounds) Spark jobs, independent of k " +
