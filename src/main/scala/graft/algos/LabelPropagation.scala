@@ -2,6 +2,7 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftplan.LoopSession
 
 import graft.graph.PreparedGraph
 import graft.runtime.{CheckpointConfig, Checkpoints, Storage}
@@ -71,7 +72,7 @@ object LabelPropagation {
     val adj = g.adjacency
     val P = g.numPartitions
 
-    val rotator = s.rotator(cfg.checkpoint, "lpa")
+    val rotator = s.rotator(cfg.checkpoint, "lpa", P)
     // input-identity drift guard: a resume against the same dir/runId with
     // different edges must fail loudly, not adopt stale labels. LPA ignores
     // edge direction, so its input identity is the symmetrized graph it
@@ -104,12 +105,12 @@ object LabelPropagation {
           // coalesce for subgraph-restricted universes)
           labels.join(argmax.hint("SHUFFLE_HASH"), labels("id") === argmax("vid"), "left")
             .select(labels("id"), coalesce(col("new_label"), col("label")).as("label"))
-            .coalesce(P)
         }._1
       }
       labels
     }
-    val out = s.result(labels.select(col("id"), col("label")))
+    // handed back in the caller's session (see PageRank.runPrepared)
+    val out = LoopSession.rehome(g.spark, s.result(labels.select(col("id"), col("label"))))
     rotator.close() // materialized before the scope releases iteration state
     out
   }

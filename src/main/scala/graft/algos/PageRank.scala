@@ -2,6 +2,7 @@ package graft.algos
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftplan.LoopSession
 
 import graft.graph.PreparedGraph
 import graft.runtime.{CheckpointConfig, Checkpoints, StateRotator, Storage}
@@ -23,18 +24,25 @@ import graft.runtime.{CheckpointConfig, Checkpoints, StateRotator, Storage}
   * redistributes sink mass uniformly each step (off in compat mode —
   * SURVEY.md §7.4).
   *
-  * Execution shape per superstep (the scale story):
-  *   1. ranks ⋈ adjacency on src — a |V|-row ⋈ |V|-row join (broadcast
-  *      when ranks fit, shuffled-hash otherwise; adjacency never moves —
-  *      it is cached hash(src)-partitioned), NOT a join against |E| edge
-  *      rows;
+  * Execution shape per superstep (the scale story), ONE job, planned in
+  * the loop session (`graftplan.LoopSession`: AQE off, shuffle
+  * partitions = the graph's p):
+  *   1. ranks ⋈ adjacency on src — a |V|-row ⋈ |V|-row shuffled-hash
+  *      join, NOT a join against |E| edge rows. Neither side moves: the
+  *      adjacency is cached hash(src, p)-partitioned, and the rotated
+  *      rank state lands hash(id, p) (step 3), which its checkpoint leaf
+  *      records;
   *   2. explode(dsts) streams |E| contribution rows through one
   *      codegen'd stage into a partial hash aggregate (map-side combine
-  *      bounds shuffle volume by |V|·partitions, not |E|);
-  *   3. final aggregate lands hash(dst) — the exact partitioning the
-  *      vertices-side left join needs, so the exchange is reused.
-  * Hub in-degree skew: AQE skew handling plus optional two-level salted
-  * aggregation (`saltBuckets > 1`) that bounds any reducer's input.
+  *      bounds shuffle volume by |V|·partitions, not |E|) — the
+  *      superstep's one exchange;
+  *   3. final aggregate lands hash(dst, p) — the exact partitioning the
+  *      vertices-side left join needs, so the exchange is reused, and
+  *      the new state comes out hash(id, p) with no trailing coalesce.
+  * Hub in-degree skew: degree-capped adjacency blocks plus optional
+  * two-level salted aggregation (`saltBuckets > 1`) that bounds any
+  * reducer's input; the loop plans without AQE, so AQE's skew split
+  * takes no part.
   */
 object PageRank {
 
@@ -90,7 +98,10 @@ object PageRank {
           ranks.select(col("id"), (col("rank") * lit(scale)).as("rank"))
         }
       }
-    val result = s.result(out) // materialized before releasing iteration state
+    // materialized (one job) in the loop session before the iteration
+    // state is released, then handed back in the caller's session: no
+    // frame the caller receives plans with AQE off
+    val result = LoopSession.rehome(g.spark, s.result(out))
     rotator.close()
     result
   }
@@ -131,8 +142,7 @@ object PageRank {
       case Some(src) => verts.select(col("id"),
         when(col("id") === src, 1.0).otherwise(0.0).as("rank"))
     }
-    val rotator = s.rotator(cfg.checkpoint, "pagerank")
-    val pState = g.numPartitions // |E|-proportional (PreparedGraph)
+    val rotator = s.rotator(cfg.checkpoint, "pagerank", g.numPartitions)
     val ranks = rotator.loop(g.spark, fingerprint(g, cfg), cfg.resume) { resumed =>
       var (startIter, ranks) = resumed.getOrElse((0, init))
       for (i <- (startIter + 1) to cfg.numIter) {
@@ -165,7 +175,6 @@ object PageRank {
             .select(verts("id"),
               (resetTerm + lit(1.0 - cfg.resetProb) *
                 (coalesce(col("msg"), lit(0.0)) + lit(sinkShare))).as("rank"))
-            .coalesce(pState)
         }._1
         s.release(msgs)
       }
@@ -201,7 +210,7 @@ object PageRank {
     // resume mid-iteration: the checkpointed state carries the full
     // (rank, delta, received) superstep state, so continuing from the
     // latest snapshot is bit-identical to never having stopped
-    val rotator = s.rotator(cfg.checkpoint, "pagerank_tol")
+    val rotator = s.rotator(cfg.checkpoint, "pagerank_tol", g.numPartitions)
     val sending = col("received") && col("delta") > tol
     val state = rotator.loop(g.spark, fingerprint(g, cfg), cfg.resume) { resumed =>
       var (i, state) = resumed.getOrElse((0, init))
@@ -222,7 +231,6 @@ object PageRank {
               when(col("msg").isNotNull, lit(1.0 - cfg.resetProb) * col("msg"))
                 .otherwise(col("delta")).as("delta"),
               col("msg").isNotNull.as("received"))
-            .coalesce(g.numPartitions)
         }
         state = next
         active = row.getLong(0)

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftplan.LoopSession
 
 import graft.runtime.{CheckpointConfig, Checkpoints, Storage}
 
@@ -287,7 +288,11 @@ object Pregel {
     *              bare `col("x")` there is captured by lateral-column-
     *              alias resolution and rebinds to the new sibling alias.
     * @return the final state frame (materialized; its storage lives until
-    *         the session drops it, as with every engine algorithm)
+    *         the session drops it, as with every engine algorithm), a
+    *         frame of `g.spark`. The supersteps themselves plan in its
+    *         loop session (`graftplan.LoopSession`: AQE off, shuffle
+    *         partitions = the loop's p), one job each; `vprog` receives
+    *         that session's frames
     */
   def iterate(g: PreparedGraph, init: DataFrame,
       toDst: Option[Column], toSrc: Option[Column], merge: Seq[Column],
@@ -299,8 +304,8 @@ object Pregel {
     val halt = cfg.haltPred.orElse(cfg.sendersPred)
     require(halt.isDefined || cfg.maxIter != Int.MaxValue,
       "unbounded Pregel loop: set sendersPred/haltPred or a finite maxIter")
-    val rotator = s.rotator(cfg.checkpoint, cfg.algo)
     val p = if (cfg.numPartitions > 0) cfg.numPartitions else g.numPartitions
+    val rotator = s.rotator(cfg.checkpoint, cfg.algo, p)
     def active(row: org.apache.spark.sql.Row): Long = if (halt.isDefined) row.getLong(0) else 1L
     // input-identity drift guard: the user's vprog/merge closures cannot
     // be fingerprinted, but the input GRAPH can — a resume against the
@@ -319,7 +324,13 @@ object Pregel {
           val senders = cfg.sendersPred.map(state.filter)
           val raw = AggregateMessages.rawMessages(g, state, senders, toDst, toSrc, cfg.fields)
           val msgs = raw.groupBy("id").agg(merge.head, merge.tail: _*)
-          vprog(state, msgs).coalesce(p)
+          // the state is a frame of the loop session (adopted or rotated):
+          // plan the vprog there, and coalesce only an output that does
+          // not already land at p partitions (a user vprog may union,
+          // broadcast against an init-shaped state, …)
+          val out = LoopSession.rehome(state.sparkSession, vprog(state, msgs))
+          if (out.queryExecution.executedPlan.outputPartitioning.numPartitions == p) out
+          else out.coalesce(p)
         }
         state = next
         n = active(row)
@@ -328,6 +339,6 @@ object Pregel {
       state
     }
     rotator.close()
-    state
+    LoopSession.rehome(g.spark, state) // handed back in the caller's session
   }
 }

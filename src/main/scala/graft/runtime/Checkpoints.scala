@@ -2,6 +2,7 @@ package graft.runtime
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftplan.LoopSession
 
 /** Superstep checkpointing + lineage/metrics log — the engine's replacement
   * for the reference's `util.PeriodicGraphCheckpointer` (called from
@@ -161,7 +162,7 @@ object Checkpoints {
   * of the same materialized state AND give resume points.
   */
 final class StateRotator private[runtime] (scope: Storage.Scope,
-    cfg: Option[CheckpointConfig], algo: String) {
+    cfg: Option[CheckpointConfig], algo: String, partitions: Int) {
 
   // the current state; its blocks are a local of `scope`
   private var owned: Option[DataFrame] = None
@@ -169,15 +170,23 @@ final class StateRotator private[runtime] (scope: Storage.Scope,
   // superstep-log rows not yet appended; see writeLog
   private var pending = Vector.empty[Row]
 
+  // the loop session every materialized frame is re-homed into: set by
+  // loop when the rotator has a partition count; None leaves each frame
+  // in its own session (the loops that keep AQE and their coalesce)
+  private var home: Option[SparkSession] = None
+
+  private def homed(df: DataFrame): DataFrame = home.fold(df)(LoopSession.rehome(_, df))
+
   private def own(df: DataFrame): DataFrame = {
     // eager localCheckpoint truncates plan + lineage; the stats clamp
     // stops the truncated plan's COMPUTED sizeInBytes (a product over
     // every state reference in the superstep) from compounding
     // exponentially across rotations — see graftplan.PlanStats
     val cp = org.apache.spark.sql.graftplan.PlanStats
-      .clampCheckpointStats(scope.local(df))
+      .clampCheckpointStats(scope.local(homed(df)))
     owned.foreach(scope.release)
     owned = Some(cp)
+    StateRotator.onRotate(algo, cp)
     cp
   }
 
@@ -191,9 +200,17 @@ final class StateRotator private[runtime] (scope: Storage.Scope,
     * are written. An exception propagates and the unwritten rows die with
     * the rotator (the scope releases the state's blocks) — they belong to
     * supersteps after the last snapshot, which a resume re-executes and
-    * re-logs. */
+    * re-logs.
+    *
+    * A rotator made with a partition count runs the loop in
+    * `graftplan.LoopSession(spark, partitions)`: every frame it
+    * materializes ([[step]], [[rotateObserved]], [[rotate]], [[adopt]])
+    * is re-homed there, so each superstep is one job and its state lands
+    * `hashpartitioning(id, partitions)`. The loop hands its result back
+    * in `spark` (`LoopSession.rehome`). */
   def loop[T](spark: SparkSession, fingerprint: => String, resume: Boolean)(
       body: Option[(Int, DataFrame)] => T): T = {
+    if (partitions > 0) home = Some(LoopSession(spark, partitions))
     val out = body(cfg.flatMap { c =>
       Checkpoints.guard(spark, c, algo, fingerprint, resume)
       if (resume) Checkpoints.latest(spark, c, algo).map { case (s, df) => (s, adopt(df)) }
@@ -260,7 +277,9 @@ final class StateRotator private[runtime] (scope: Storage.Scope,
     if (metrics.isEmpty) (rotate(next, n), Row.empty)
     else {
       val obs = Observation(s"${algo}_obs_$n")
-      val state = rotate(next.observe(obs, metrics.head, metrics.tail: _*), n)
+      // re-homed BEFORE observe: the observation listens on the session
+      // that runs the rotation
+      val state = rotate(homed(next).observe(obs, metrics.head, metrics.tail: _*), n)
       val row = StateRotator.awaitObservedRow(obs).getOrElse {
         Trace.log(s"$algo step=$n: observation did not surface, aggregating the state")
         StateRotator.measure(state, metrics)
@@ -280,7 +299,12 @@ final class StateRotator private[runtime] (scope: Storage.Scope,
     * superstep plans, which can flip exchange/aggregation layout and
     * perturb floating-point accumulation order — measured as a 1-ulp
     * drift between a checkpointed and a plain run of the SAME iteration,
-    * breaking the resume-is-bit-identical contract. */
+    * breaking the resume-is-bit-identical contract.
+    *
+    * In a loop session the checkpoint's leaf records the executed plan's
+    * partitioning — `hashpartitioning(id, partitions)` for a superstep
+    * whose final exchange lands there — and the next superstep's
+    * state ⋈ adjacency join reads the state where it lies. */
   def rotate(next: DataFrame, superstep: Int): DataFrame = {
     val cp = own(next)
     cfg.foreach { c =>
@@ -301,7 +325,11 @@ final class StateRotator private[runtime] (scope: Storage.Scope,
     * only as stable as the scan layout — ResumeSpec pins bit-identity at
     * the tested scales; a deployment wanting the same guarantee at
     * cluster scale must keep split sizing (maxPartitionBytes) stable
-    * across the original and resumed runs. */
+    * across the original and resumed runs. The adopted leaf is
+    * `UnknownPartitioning` (a rotated state's is `hashpartitioning(id,
+    * partitions)` in a loop session), so the first resumed superstep
+    * shuffles the senders where an uninterrupted run reads them in
+    * place; from its rotation on, the state lies as in that run. */
   def adopt(df: DataFrame): DataFrame = own(df)
 
   /** Hand the FINAL state to the caller: its blocks escape the scope and
@@ -314,6 +342,11 @@ final class StateRotator private[runtime] (scope: Storage.Scope,
 }
 
 object StateRotator {
+
+  /** Called with (algo, state) after every rotation, in the rotating
+    * thread: a test hook that sees each rotated state's leaf. A no-op
+    * unless a spec sets it. */
+  @volatile private[graft] var onRotate: (String, DataFrame) => Unit = (_, _) => ()
 
   /** `metrics` (aggregate columns) evaluated as one aggregate over `df` —
     * the fallback for an observation that did not surface, and how a

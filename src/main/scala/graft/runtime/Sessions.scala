@@ -9,7 +9,13 @@ import org.apache.spark.sql.SparkSession
   * codegen cache sized to graft's plan working set, pinned
   * ROOT locale so every f-interpolated JSON uses dot decimals). Six
   * hand-copied builder blocks drifted one setting at a time before this
-  * existed; change session policy HERE. */
+  * existed; change session policy HERE.
+  *
+  * The iterative loops (PageRank static and tol, LPA, `Pregel.iterate`)
+  * do not plan in this session: they run in its `graftplan.LoopSession`,
+  * a clone with AQE off and shuffle partitions at the loop's partition
+  * count, so a superstep is one job. The clone copies this session's
+  * conf at each loop; this session's conf is never written. */
 private[graft] object Sessions {
 
   /** Entries in Spark's cache of compiled generated code

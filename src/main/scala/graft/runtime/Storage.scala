@@ -180,9 +180,11 @@ object Storage {
     /** A [[StateRotator]] whose states this scope owns: every rotated state
       * is a [[local]] of this scope, released when the next one replaces
       * it, and the final one at scope exit unless `close()` handed it
-      * out. */
-    def rotator(cfg: Option[CheckpointConfig], algo: String): StateRotator =
-      new StateRotator(this, cfg, algo)
+      * out. With `partitions > 0` its loop runs in the loop session at
+      * that partition count (see [[StateRotator.loop]]). */
+    def rotator(cfg: Option[CheckpointConfig], algo: String,
+        partitions: Int = 0): StateRotator =
+      new StateRotator(this, cfg, algo, partitions)
 
     private[Storage] def exit(failed: Boolean): Unit = {
       val go = entries.filter(e => failed || !e.escaped)

@@ -11,3 +11,10 @@ object CacheEntries {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager.numCachedEntries
 }
+
+/** The listener bus is private to Spark: this lets a spec wait until every
+  * queued event has reached its listener before it reads a count. */
+object ListenerBus {
+  def drain(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(60000L)
+}
